@@ -10,11 +10,16 @@ These tests pin the three properties the overlap relies on:
   work never becomes visible);
 - run_publish_ordered itself orders completions and re-raises the
   first failure in publish order.
+
+The order and abort tests run under both commit protocols: the locked
+one commits through ``versioned.publish``, the optimistic one gates
+after staging and commits through ``versioned.try_publish``.
 """
 
 from __future__ import annotations
 
 import time
+from contextlib import contextmanager
 from unittest import mock
 
 import pytest
@@ -76,71 +81,99 @@ def test_run_publish_ordered_upstream_failure_aborts_downstream():
     assert reached == []
 
 
-def test_index_merge_publishes_bands_before_hashes(spark, tmp_path):
+@contextmanager
+def _committed_stores(protocol):
+    """Names of the stores whose commits land, in order: the lock
+    protocol commits through ``versioned.publish``, the optimistic one
+    through the ``versioned.try_publish`` rename arbiter (a lost race
+    returns False and is not a commit)."""
+    name = "try_publish" if protocol == "optimistic" else "publish"
+    real = getattr(versioned, name)
+    stores = []
+
+    def spy(path, *a, **k):
+        out = real(path, *a, **k)
+        if out is not False:
+            stores.append(path.rsplit("/", 1)[-1])
+        return out
+
+    with mock.patch.object(versioned, name, spy):
+        yield stores
+
+
+def test_index_merge_publishes_bands_before_hashes(
+    spark, tmp_path, protocol=None
+):
     from wcdimportbot_spark.operators import text_dedup as td
 
     base = str(tmp_path / "idx")
-    publishes = []
-    real_publish = versioned.publish
-
-    def spy(path, version):
-        publishes.append(path)
-        return real_publish(path, version)
-
-    with mock.patch.object(versioned, "publish", spy):
-        td.dedup_index_merge(_docs(spark), base)
-    stores = [p.rsplit("/", 1)[-1] for p in publishes]
+    with _committed_stores(protocol) as stores:
+        td.dedup_index_merge(_docs(spark), base, protocol=protocol)
     assert "bands" in stores and "hashes" in stores
     assert stores.index("bands") < stores.index("hashes")
 
     # second batch: the steady (non-bootstrap) merge path too
-    publishes.clear()
-    with mock.patch.object(versioned, "publish", spy):
-        td.dedup_index_merge(_docs(spark, offset=100), base)
-    stores = [p.rsplit("/", 1)[-1] for p in publishes]
+    with _committed_stores(protocol) as stores:
+        td.dedup_index_merge(
+            _docs(spark, offset=100), base, protocol=protocol
+        )
     assert stores.index("bands") < stores.index("hashes")
 
 
-def test_index_delete_publishes_hashes_before_bands(spark, tmp_path):
+def test_index_merge_publishes_bands_before_hashes_optimistic(
+    spark, tmp_path
+):
+    test_index_merge_publishes_bands_before_hashes(
+        spark, tmp_path, "optimistic"
+    )
+
+
+def test_index_delete_publishes_hashes_before_bands(
+    spark, tmp_path, protocol=None
+):
     from wcdimportbot_spark.operators import text_dedup as td
 
     base = str(tmp_path / "idx")
-    td.dedup_index_merge(_docs(spark), base)
+    td.dedup_index_merge(_docs(spark), base, protocol=protocol)
     doomed = _docs(spark, n=10).select(F.md5(F.col("text")).alias("text_hash"))
 
-    publishes = []
-    real_publish = versioned.publish
-
-    def spy(path, version):
-        publishes.append(path)
-        return real_publish(path, version)
-
-    with mock.patch.object(versioned, "publish", spy):
-        res = td.dedup_index_delete(doomed, base)
+    with _committed_stores(protocol) as stores:
+        res = td.dedup_index_delete(doomed, base, protocol=protocol)
     assert res["hashes_deleted"] == 10
-    stores = [p.rsplit("/", 1)[-1] for p in publishes]
     assert stores.index("hashes") < stores.index("bands")
 
 
-def test_increment_publishes_corpus_before_index(spark, tmp_path):
+def test_index_delete_publishes_hashes_before_bands_optimistic(
+    spark, tmp_path
+):
+    test_index_delete_publishes_hashes_before_bands(
+        spark, tmp_path, "optimistic"
+    )
+
+
+def test_increment_publishes_corpus_before_index(
+    spark, tmp_path, protocol=None
+):
     from wcdimportbot_spark.plans import curation_nightly as cn
 
     base = str(tmp_path / "cur")
-    publishes = []
-    real_publish = versioned.publish
-
-    def spy(path, version):
-        publishes.append(path)
-        return real_publish(path, version)
-
-    with mock.patch.object(versioned, "publish", spy):
-        cn.curate_increment(_docs(spark), base)
-    stores = [p.rsplit("/", 1)[-1] for p in publishes]
+    with _committed_stores(protocol) as stores:
+        cn.curate_increment(_docs(spark), base, protocol=protocol)
     assert stores.index("corpus") < stores.index("bands")
     assert stores.index("bands") < stores.index("hashes")
 
 
-def test_increment_index_never_publishes_when_corpus_fails(spark, tmp_path):
+def test_increment_publishes_corpus_before_index_optimistic(
+    spark, tmp_path
+):
+    test_increment_publishes_corpus_before_index(
+        spark, tmp_path, "optimistic"
+    )
+
+
+def test_increment_index_never_publishes_when_corpus_fails(
+    spark, tmp_path, protocol=None
+):
     """A corpus-arm failure must abort BOTH index publishes: the index
     remembering a hash whose content the corpus never accepted is the
     can-never-re-enter state the outputs-first order exists to prevent."""
@@ -154,10 +187,18 @@ def test_increment_index_never_publishes_when_corpus_fails(spark, tmp_path):
 
     with mock.patch.object(cn, "merge_curated_corpus", exploding_merge):
         with pytest.raises(RuntimeError, match="corpus publish failed"):
-            cn.curate_increment(_docs(spark), base)
+            cn.curate_increment(_docs(spark), base, protocol=protocol)
     # neither index store became visible
     assert not sinks.has_parquet_data(str(tmp_path / "cur" / "dedup_index" / "hashes"))
     assert not sinks.has_parquet_data(str(tmp_path / "cur" / "dedup_index" / "bands"))
     # and the batch is fully ingestable afterwards (no half-state)
-    ann = cn.curate_increment(_docs(spark), base)
+    ann = cn.curate_increment(_docs(spark), base, protocol=protocol)
     assert ann.filter(F.col("kept")).count() == 40
+
+
+def test_increment_index_never_publishes_when_corpus_fails_optimistic(
+    spark, tmp_path
+):
+    test_increment_index_never_publishes_when_corpus_fails(
+        spark, tmp_path, "optimistic"
+    )

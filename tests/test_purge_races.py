@@ -913,6 +913,47 @@ def test_epoch_bump_concurrent_writers_never_raise(tmp_path):
     assert len(seen) > 10
 
 
+def test_increment_backoff_sleeps_outside_its_window(
+    spark, tmp_path, monkeypatch
+):
+    """On a forced re-attempt the increment's race backoff sleeps BEFORE
+    the purge-fingerprint read that opens its next window, never
+    between its merges and the closing read (a sleep there widens the
+    very window a purge must stay out of)."""
+    from wcdimportbot_spark.operators import versioned
+    from wcdimportbot_spark.plans import curation_nightly as cn
+
+    base = str(tmp_path / "cur")
+    calls = []
+    # the marker changes inside attempt 0 (a purge landed), then stays
+    fps = iter(["fp0", "fp1", "fp1", "fp1"])
+
+    def settle(_base, timeout=None):
+        calls.append("settle")
+        return next(fps)
+
+    real_bump = versioned.epoch_bump
+
+    def bump(b, fname):
+        if fname == cn.INCREMENT_EPOCH_FILE:
+            calls.append("bump")
+        real_bump(b, fname)
+
+    def backoff(attempt, scale=1.0):
+        if attempt > 0:
+            calls.append("sleep")
+
+    monkeypatch.setattr(cn, "_settle_purges", settle)
+    monkeypatch.setattr(versioned, "epoch_bump", bump)
+    monkeypatch.setattr(versioned, "race_backoff", backoff)
+    batch = spark.createDataFrame([(1, T_A), (2, T_B)], ["doc_id", "text"])
+    assert cn.curate_increment(batch, base).filter("kept").count() == 2
+    assert calls == [
+        "settle", "bump", "bump", "settle",
+        "sleep", "settle", "bump", "bump", "settle",
+    ]
+
+
 @pytest.mark.slow
 def test_increment_inside_slow_purge_arm_is_detected(
     spark, tmp_path, monkeypatch
@@ -1209,6 +1250,30 @@ def test_ann_delete_caller_pairs_stale_token_reresolves(spark, tmp_path):
     assert codes.filter(F.col("vec_id") == 0).count() == 0
     assert codes.count() == 19
     assert n == 2  # caller's stale pair + the re-resolved moved row
+
+
+def test_ann_delete_caller_pairs_with_duplicates_counts_exactly(
+    spark, tmp_path
+):
+    """Caller-supplied (vec_id, cluster) pairs are not deduplicated by
+    anything upstream: a repeated row must not inflate the deleted
+    count (the engine's broadcast-side distinct stays on)."""
+    from wcdimportbot_spark.operators import ann_store as ann
+
+    base = str(tmp_path / "ann")
+    ann.ann_index_build(
+        _ann_two_sided(spark), base, num_clusters=2, m=2, n_codes=4
+    )
+    m0 = ann.ann_merge_epoch(base)
+    pairs = (
+        ann.read_ann_codes(spark, base)
+        .filter(F.col("vec_id").isin(0, 1, 100))
+        .select("vec_id", "cluster")
+    )
+    dup_pairs = pairs.unionAll(pairs).localCheckpoint(eager=True)
+    assert dup_pairs.count() == 6
+    assert ann.ann_index_delete(dup_pairs, base, merge_epoch0=m0) == 3
+    assert ann.read_ann_codes(spark, base).count() == 17
 
 
 def test_ann_add_batch_straddled_by_delete_converges_serial(

@@ -4,7 +4,9 @@ before a write keeps seeing its snapshot; a reader resolved after sees the
 whole new state; the pointer flip is the only mutation readers observe."""
 
 import os
+import re
 import time
+import types
 
 from pyspark.sql import functions as F
 
@@ -1823,3 +1825,140 @@ def test_expire_history_spares_live_optimistic_staging(spark, tmp_path):
     assert os.path.basename(stale) in removed
     assert os.path.isdir(live)
     assert versioned.expire_history(path).count(os.path.basename(live)) == 0
+
+
+# --- epoch_bracket: the one cross-writer race-repair primitive ---------
+# Spark-free: a stub ``fn`` and a temporary directory. The recorders
+# patch the module globals the primitive looks up, as the forced-schedule
+# tests and the benchmark tracer do.
+
+
+def _record_bracket_calls(monkeypatch):
+    calls = []
+    real_read, real_bump = versioned.epoch_read, versioned.epoch_bump
+    real_backoff = versioned.race_backoff
+
+    def read(base, fname):
+        calls.append(("read", fname))
+        return real_read(base, fname)
+
+    def bump(base, fname):
+        calls.append(("bump", fname))
+        real_bump(base, fname)
+
+    def backoff(attempt, scale=1.0):
+        calls.append(("backoff", attempt))
+        real_backoff(attempt, scale)
+
+    monkeypatch.setattr(versioned, "epoch_read", read)
+    monkeypatch.setattr(versioned, "epoch_bump", bump)
+    monkeypatch.setattr(versioned, "race_backoff", backoff)
+    # race_backoff's sleep, stubbed on this module only
+    monkeypatch.setattr(
+        versioned,
+        "time",
+        types.SimpleNamespace(sleep=lambda s: calls.append(("sleep",))),
+    )
+    return calls
+
+
+def _bracket(root, fn, own="_OWN.json"):
+    return versioned.epoch_bracket(
+        root,
+        own,
+        lambda: versioned.epoch_read(root, "_OTHER.json"),
+        1.0,
+        fn,
+        "the other writer",
+    )
+
+
+def test_epoch_bracket_no_race_path_is_one_window(tmp_path, monkeypatch):
+    calls = _record_bracket_calls(monkeypatch)
+    root = str(tmp_path)
+
+    def fn():
+        calls.append(("fn",))
+        return "r0"
+
+    assert _bracket(root, fn) == ["r0"]
+    assert calls == [
+        ("backoff", 0),
+        ("read", "_OTHER.json"),
+        ("bump", "_OWN.json"),
+        ("fn",),
+        ("bump", "_OWN.json"),
+        ("read", "_OTHER.json"),
+    ]
+
+
+def test_epoch_bracket_reruns_when_other_side_lands(tmp_path, monkeypatch):
+    calls = _record_bracket_calls(monkeypatch)
+    root = str(tmp_path)
+    n = {"fn": 0}
+
+    def fn():
+        n["fn"] += 1
+        if n["fn"] <= 2:
+            # the opposing writer bumps its sidecar inside this window
+            os.makedirs(root, exist_ok=True)
+            with open(os.path.join(root, "_OTHER.json"), "w") as f:
+                f.write(str(n["fn"]))
+        return n["fn"]
+
+    assert _bracket(root, fn) == [1, 2, 3]
+    assert [c[1] for c in calls if c[0] == "backoff"] == [0, 1, 2]
+    # race_backoff sleeps only on RE-attempts, each time before the read
+    # that opens the window
+    assert calls.count(("sleep",)) == 2
+    for i, c in enumerate(calls):
+        if c == ("sleep",):
+            assert calls[i + 1] == ("read", "_OTHER.json")
+
+
+def test_epoch_bracket_exhaustion_names_root(tmp_path, monkeypatch):
+    calls = _record_bracket_calls(monkeypatch)
+    root = str(tmp_path / "store")
+    n = {"fn": 0}
+
+    def fn():
+        n["fn"] += 1
+        os.makedirs(root, exist_ok=True)
+        with open(os.path.join(root, "_OTHER.json"), "w") as f:
+            f.write(str(n["fn"]))
+
+    with pytest.raises(RuntimeError, match=re.escape(root)) as ei:
+        _bracket(root, fn)
+    assert "the other writer" in str(ei.value)
+    assert n["fn"] == versioned.REPAIR_ATTEMPTS
+    assert calls.count(("sleep",)) == versioned.REPAIR_ATTEMPTS - 1
+
+
+def test_epoch_bracket_fn_error_propagates_without_retry(
+    tmp_path, monkeypatch
+):
+    calls = _record_bracket_calls(monkeypatch)
+    n = {"fn": 0}
+
+    def fn():
+        n["fn"] += 1
+        raise ValueError("publish failed")
+
+    with pytest.raises(ValueError, match="publish failed"):
+        _bracket(str(tmp_path), fn)
+    assert n["fn"] == 1 and ("sleep",) not in calls
+    assert calls[-1] == ("bump", "_OWN.json")  # only the opening bump
+
+
+def test_epoch_bracket_without_own_sidecar_writes_nothing(
+    tmp_path, monkeypatch
+):
+    calls = _record_bracket_calls(monkeypatch)
+    root = str(tmp_path / "store")
+    fps = iter(["a", "b", "b", "b"])
+    out = versioned.epoch_bracket(
+        root, None, lambda: next(fps), 1.0, lambda: 7, "the other writer"
+    )
+    assert out == [7, 7]  # "a" → "b" changed inside attempt 0
+    assert not any(c[0] == "bump" for c in calls)
+    assert not os.path.exists(root)

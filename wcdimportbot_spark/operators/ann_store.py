@@ -109,22 +109,17 @@ MODEL_STAMP = "_MODEL_VERSION.json"
 #:     added is absent, which matches neither serial order when the
 #:     delete's pair set simultaneously missed the merge's new rows.
 #:
-#: Each writer brackets its window with bumps of its OWN sidecar and
-#: compares the OTHER side's bytes across the window, re-asserting its
-#: idempotent work when they changed: the delete RE-RESOLVES from the
-#: live store and re-deletes (converging on merge→delete: the doomed
-#: vector is gone no matter which cluster the racer put it in), and
-#: the merge re-runs its insert-if-absent publish (converging on
-#: delete→merge: rows the delete swept mid-probe are re-inserted).
-#: Both directions are needed for the same containment reason as the
-#: dedup index: one side's whole window can sit strictly inside the
-#: other's, where only the OUTER writer's check sees a bump.
-#: ``ann_index_build`` (full-rewrite retrain) only BUMPS the merge
-#: side — its codes publish replaces the whole store from the corpus
-#: input, so either serial order yields exactly its output and a
-#: racing delete just needs to notice and re-resolve against the new
-#: snapshot. No-race cost per writer: two file reads + two tiny
-#: writes. Files live at the store root, next to model/ and codes/.
+#: Both windows run under :func:`versioned.epoch_bracket`: a delete
+#: re-run RE-RESOLVES from the live store and re-deletes (converging on
+#: merge→delete: the doomed vector is gone no matter which cluster the
+#: racer put it in), a merge re-run repeats its insert-if-absent
+#: publish (converging on delete→merge: rows the delete swept mid-probe
+#: are re-inserted). ``ann_index_build`` (full-rewrite retrain) only
+#: BUMPS the merge side — its codes publish replaces the whole store
+#: from the corpus input, so either serial order yields exactly its
+#: output and a racing delete just needs to notice and re-resolve
+#: against the new snapshot. Files live at the store root, next to
+#: model/ and codes/.
 ANN_DELETE_EPOCH_FILE = "_ANN_DELETE_EPOCH.json"
 ANN_MERGE_EPOCH_FILE = "_ANN_MERGE_EPOCH.json"
 
@@ -663,26 +658,16 @@ def ann_index_add_batch(
             f"add-batch into {base_path} lost 4 consecutive retrain races"
         )
 
-    # merge-vs-delete race repair (r15, see ANN_DELETE_EPOCH_FILE):
-    # bracket our own window with merge-epoch bumps (the delete side
-    # reads them) and re-assert the idempotent merge whenever a delete
-    # bump landed inside it — the re-run's anti-join probes the
-    # post-delete snapshot, so rows the racer swept mid-probe are
-    # re-inserted (delete→merge serial order). No-race cost: two file
-    # reads + two tiny writes.
-    for _repair in range(5):
-        versioned.race_backoff(_repair, 1.0)
-        d0 = versioned.epoch_read(base_path, ANN_DELETE_EPOCH_FILE)
-        versioned.epoch_bump(base_path, ANN_MERGE_EPOCH_FILE)
-        res = _do()
-        versioned.epoch_bump(base_path, ANN_MERGE_EPOCH_FILE)
-        if versioned.epoch_read(base_path, ANN_DELETE_EPOCH_FILE) == d0:
-            return res
-    raise RuntimeError(
-        f"ann_index_delete kept landing inside one add-batch's window "
-        f"on {base_path} (5 repair attempts) — quiesce the delete loop "
-        f"and re-send the batch"
-    )
+    # merge-vs-delete race (see ANN_DELETE_EPOCH_FILE): a re-run's
+    # anti-join probes the post-delete snapshot
+    return versioned.epoch_bracket(
+        base_path,
+        ANN_MERGE_EPOCH_FILE,
+        lambda: versioned.epoch_read(base_path, ANN_DELETE_EPOCH_FILE),
+        1.0,
+        _do,
+        "ann_index_delete",
+    )[-1]
 
 
 def ann_index_upsert(
@@ -793,24 +778,19 @@ def ann_index_delete(
     ``merge_epoch0`` fingerprint it read (:func:`ann_merge_epoch`)
     BEFORE its own scan, skipping the lookup on the no-race path.
 
-    **Delete-vs-add race bracket (r15, the last store pair without
-    one).** The resolve-then-publish shape is exactly the dedup index's
-    two-step window: a concurrent :func:`ann_index_add_batch` /
-    :func:`ann_index_upsert` landing between the scan and the pruned
-    publish can insert (or move) a doomed ``vec_id`` into a cluster
-    the pair set never named — the vector stays served after this call
-    returns "complete", the privacy-purge hole class r13/r14 closed on
-    every other store. The bracket (see ``ANN_DELETE_EPOCH_FILE``):
-    each attempt re-reads the merge side's epoch, bumps its own around
-    resolve+publish, and RE-RESOLVES FROM THE LIVE STORE + re-deletes
-    whenever the merge side's bytes changed across the window —
-    converging on the merge→delete serial order (the vector is gone,
-    whichever cluster the racer put it in). Caller-supplied pairs are
-    honored only on the first attempt and only when the caller's
-    ``merge_epoch0`` proves its scan sits inside this window; pairs
-    without the token are treated as a hint and re-resolved. Returned
-    count accumulates across repair attempts (re-deletes of rows a
-    racing merge re-inserted are real deletions).
+    **Delete-vs-add race bracket (r15).** A concurrent
+    :func:`ann_index_add_batch` / :func:`ann_index_upsert` landing
+    between the scan and the pruned publish can insert (or move) a
+    doomed ``vec_id`` into a cluster the pair set never named — the
+    vector stays served after this call returns "complete". Resolve and
+    publish therefore run under :func:`versioned.epoch_bracket` (see
+    ``ANN_DELETE_EPOCH_FILE``), every re-run RE-RESOLVING FROM THE LIVE
+    STORE. Caller-supplied pairs are honored only on the first attempt
+    and only when the caller's ``merge_epoch0`` proves its scan sits
+    inside this window; pairs without the token are treated as a hint
+    and re-resolved. Returned count accumulates across repair attempts
+    (re-deletes of rows a racing merge re-inserted are real
+    deletions).
 
     The model store is untouched: deletes never invalidate centroids or
     codebooks, but they DO count toward staleness — shrinking the store
@@ -852,7 +832,7 @@ def ann_index_delete(
             F.broadcast(_ids()), "vec_id", "left_semi"
         ).localCheckpoint(eager=False)
 
-    def _publish(pairs: DataFrame | None) -> int:
+    def _publish(pairs: DataFrame | None, keys_unique: bool) -> int:
         if pairs is None or not sinks.has_parquet_data(
             _codes_path(base_path)
         ):
@@ -867,35 +847,44 @@ def ann_index_delete(
             prune_col="cluster",
             sort_key="vec_id",
             protocol=protocol,
-            # the codes store is key-unique on vec_id (engine
-            # invariant), so its semi-join against distinct ids is too
-            keys_unique=True,
+            keys_unique=keys_unique,
         )
 
-    total = 0
-    for attempt in range(5):
-        versioned.race_backoff(attempt, 1.6)
-        if attempt == 0 and caller_pairs is not None and merge_epoch0 is not None:
-            # the caller read merge_epoch0 BEFORE its own resolve scan,
-            # so the check below covers that scan too — skip re-reading
-            m0 = merge_epoch0
-            versioned.epoch_bump(base_path, ANN_DELETE_EPOCH_FILE)
-            pairs = caller_pairs
-        else:
-            m0 = versioned.epoch_read(base_path, ANN_MERGE_EPOCH_FILE)
-            versioned.epoch_bump(base_path, ANN_DELETE_EPOCH_FILE)
-            # resolve INSIDE the bracketed window — a pair set computed
-            # before the m0 read could go stale undetectably
-            pairs = _resolve()
-        total += _publish(pairs)
-        versioned.epoch_bump(base_path, ANN_DELETE_EPOCH_FILE)
-        if versioned.epoch_read(base_path, ANN_MERGE_EPOCH_FILE) == m0:
-            return int(total)
-    raise RuntimeError(
-        f"ann_index_add_batch/upsert kept landing inside one delete's "
-        f"window on {base_path} (5 repair attempts) — quiesce the "
-        f"ingest loop and replay the delete"
+    # the caller read merge_epoch0 BEFORE its own resolve scan, so the
+    # first attempt's check covers that scan and may publish the
+    # caller's pairs; every other attempt resolves INSIDE its window (a
+    # pair set computed before the epoch read could go stale
+    # undetectably)
+    token = caller_pairs is not None and merge_epoch0 is not None
+    epoch0 = [merge_epoch0] if token else []
+    hint = [caller_pairs] if token else []
+
+    def _merge_epoch() -> str:
+        if epoch0:
+            return epoch0.pop()
+        return versioned.epoch_read(base_path, ANN_MERGE_EPOCH_FILE)
+
+    def _attempt() -> int:
+        if hint:
+            # caller pairs may repeat a vec_id: leave them to the
+            # engine's distinct
+            return _publish(hint.pop(), keys_unique=False)
+        # the codes store is key-unique on vec_id (engine invariant),
+        # so its semi-join against distinct ids is too
+        return _publish(_resolve(), keys_unique=True)
+
+    # delete-vs-add race (see ANN_DELETE_EPOCH_FILE): re-deletes of
+    # rows a racing merge re-inserted are real deletions, so the
+    # counts sum over attempts
+    attempts = versioned.epoch_bracket(
+        base_path,
+        ANN_DELETE_EPOCH_FILE,
+        _merge_epoch,
+        1.6,
+        _attempt,
+        "ann_index_add_batch/upsert",
     )
+    return int(sum(attempts))
 
 
 def ann_index_probe(

@@ -1005,10 +1005,12 @@ def _delete_plan(
     pass), doubling store reads per delete."""
     snap = _read_tree(spark, base_dir)
     pruned = snap.filter(F.col(prune_col).isin(touched_prunes))
-    # the distinct is CORRECTNESS here, not a size guard: a duplicated
-    # key on the broadcast side would duplicate matched store rows
-    # through the left join below. ``keys_unique=True`` callers passed
-    # a provably-deduped relation and skip the exchange (r16).
+    # a duplicated key on the broadcast side duplicates its matched
+    # store rows through the left join below; every copy is marked
+    # _doomed, so the kept rewrite content is unaffected, but the
+    # doomed counts and per-partition stats inflate. ``keys_unique=True``
+    # callers passed a provably-deduped relation and skip the exchange
+    # (r16).
     keys_only = keys_b.select(key)
     if not keys_unique:
         keys_only = keys_only.distinct()

@@ -907,38 +907,18 @@ def _record_index_params(
     os.replace(tmp, p)
 
 
-#: symmetric epoch sidecars (r13, the index-level twin of the curation
-#: purge marker's heartbeat). Each writer BRACKETS its two-publish
-#: window with bumps of its OWN epoch and re-checks the OTHER side's
-#: epoch across that window, re-asserting both of its publishes when
-#: it changed — so every merge-vs-delete interleaving converges on a
-#: serial order without any cross-writer lock. Why both sides: the
-#: merge-side check alone misses the interleaving where the delete's
-#: SECOND sub-delete lands after the merge's re-check (bump1 → e0-read
-#: → M_bands → D_hashes → M_hashes → check-clean → D_bands → bump2 —
-#: final: hash present / bands absent, the permanent near-dup blind
-#: spot, since re-sends drop as exact dups before reaching the band
-#: merge). There the MERGE publishes land inside the DELETE's window,
-#: so the delete-side check catches it and re-runs both deletes
-#: (merge→delete serial). The opposite mixed state (hash absent /
-#: bands present) is impossible by order algebra: it would need
-#: M_h < D_h < D_b < M_b while the merge runs bands first (M_b < M_h).
-#: Re-runs are cheap: insert-if-absent / swallowed-delete no-ops
-#: unless the two writers actually contested the same keys.
+#: the merge's and the delete's own sidecars for
+#: :func:`versioned.epoch_bracket`. Why the pair races: the merge
+#: publishes bands then hashes, the delete hashes then bands, and an
+#: interleaving such as M_bands → D_hashes → M_hashes → D_bands leaves
+#: hash present / bands absent — the permanent near-dup blind spot,
+#: since re-sends drop as exact dups before reaching the band merge.
+#: The merge's check alone misses that one (the delete's second
+#: publish lands after it), hence a bracket on both sides. The opposite
+#: mixed state (hash absent / bands present) is impossible by order
+#: algebra: it would need M_h < D_h < D_b < M_b while M_b < M_h.
 DELETE_EPOCH_FILE = "_DELETE_EPOCH.json"
 MERGE_EPOCH_FILE = "_MERGE_EPOCH.json"
-
-
-def _epoch(base_path: str, fname: str) -> str:
-    from wcdimportbot_spark.operators.versioned import epoch_read
-
-    return epoch_read(base_path, fname)
-
-
-def _bump_epoch(base_path: str, fname: str) -> None:
-    from wcdimportbot_spark.operators.versioned import epoch_bump
-
-    epoch_bump(base_path, fname)
 
 
 def dedup_index_ingest(
@@ -1096,15 +1076,9 @@ def dedup_index_merge(
     Concurrency (r13): a concurrent :func:`dedup_index_delete` landing
     BETWEEN the two publishes can produce exactly that blind-spot state
     from the outside (M_bands → D_hashes → D_bands → M_hashes). Both
-    writers bracket their two-publish windows with epoch bumps
-    (``_DELETE_EPOCH.json`` / ``_MERGE_EPOCH.json``) and re-assert both
-    of their publishes when the OTHER side's epoch changed across the
-    window — the last overlap-free pass wins both stores, so every
-    interleaving converges on a serial order (see the
-    ``DELETE_EPOCH_FILE`` note for why one-sided detection is not
-    enough). The opposite mixed state — hash absent / bands present —
-    is impossible by order algebra (it would need the merge's hash
-    publish before its own bands publish)."""
+    writers run their two publishes under
+    :func:`versioned.epoch_bracket`, so every interleaving converges on
+    a serial order (see the ``DELETE_EPOCH_FILE`` note)."""
     import os
 
     from wcdimportbot_spark.operators import sinks
@@ -1207,25 +1181,15 @@ def dedup_index_merge(
 
         versioned.run_publish_ordered([_bands_arm, _hashes_arm])
 
-    # MERGE-vs-DELETE race repair (r13, the index-level twin of the
-    # curation purge repair — see the DELETE_EPOCH_FILE note for the
-    # full interleaving algebra): bracket our own window with
-    # merge-epoch bumps (the delete-side check reads them) and
-    # re-assert both merges whenever a delete bump landed inside it,
-    # converging on the delete→merge serial order. Cost on the no-race
-    # path: two small file reads + two writes.
-    for _attempt in range(5):
-        versioned.race_backoff(_attempt, 1.0)
-        e0 = _epoch(base_path, DELETE_EPOCH_FILE)
-        _bump_epoch(base_path, MERGE_EPOCH_FILE)
-        _do()
-        _bump_epoch(base_path, MERGE_EPOCH_FILE)
-        if _epoch(base_path, DELETE_EPOCH_FILE) == e0:
-            return
-    raise RuntimeError(
-        f"dedup_index_delete kept landing inside one merge's window on "
-        f"{base_path} (5 repair attempts) — quiesce the delete loop "
-        f"and re-send the batch"
+    # merge-vs-delete race (see DELETE_EPOCH_FILE): a re-run converges
+    # on the delete→merge serial order
+    versioned.epoch_bracket(
+        base_path,
+        MERGE_EPOCH_FILE,
+        lambda: versioned.epoch_read(base_path, DELETE_EPOCH_FILE),
+        1.0,
+        _do,
+        "dedup_index_delete",
     )
 
 
@@ -1351,34 +1315,22 @@ def dedup_index_delete(
         n_h, n_b = versioned.run_publish_ordered([_hashes_arm, _bands_arm])
         return n_h, n_b
 
-    # MERGE-vs-DELETE race repair, delete side (see DELETE_EPOCH_FILE):
-    # bracket our window with delete-epoch bumps (the merge side reads
-    # them) and re-run both deletes whenever a merge's publishes landed
-    # inside it — that covers the interleaving where OUR second
-    # sub-delete lands after the merge's re-check, which the merge side
-    # alone cannot see. Re-runs on already-deleted keys are swallowed
-    # no-ops; actual re-deletes of rows a racing merge re-inserted are
-    # real deletions and accumulate into the returned counts
-    # (merge→delete serial order: the content ends up gone from both).
-    n_hashes = n_bands = 0
-    for _attempt in range(5):
-        versioned.race_backoff(_attempt, 1.6)
-        m0 = _epoch(base_path, MERGE_EPOCH_FILE)
-        _bump_epoch(base_path, DELETE_EPOCH_FILE)
-        n_h, n_b = _do()
-        _bump_epoch(base_path, DELETE_EPOCH_FILE)
-        n_hashes += n_h
-        n_bands += n_b
-        if _epoch(base_path, MERGE_EPOCH_FILE) == m0:
-            return {
-                "hashes_deleted": int(n_hashes),
-                "bands_deleted": int(n_bands),
-            }
-    raise RuntimeError(
-        f"dedup_index_merge kept landing inside one delete's window on "
-        f"{base_path} (5 repair attempts) — quiesce the ingest loop "
-        f"and replay the delete"
+    # merge-vs-delete race, delete side (see DELETE_EPOCH_FILE): a
+    # re-run converges on the merge→delete serial order, and its
+    # re-deletes of rows a racing merge re-inserted are real deletions,
+    # so the counts sum over attempts
+    attempts = versioned.epoch_bracket(
+        base_path,
+        DELETE_EPOCH_FILE,
+        lambda: versioned.epoch_read(base_path, MERGE_EPOCH_FILE),
+        1.6,
+        _do,
+        "dedup_index_merge",
     )
+    return {
+        "hashes_deleted": int(sum(n_h for n_h, _ in attempts)),
+        "bands_deleted": int(sum(n_b for _, n_b in attempts)),
+    }
 
 
 def dedup_index_tables_write(

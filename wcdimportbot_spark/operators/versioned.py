@@ -75,14 +75,8 @@ RETAIN_SECS = float(os.environ.get("WCD_STORE_RETAIN_SECS", "600"))
 
 def epoch_read(base_path: str, fname: str) -> str:
     """Raw bytes of an epoch/marker sidecar ('' when absent) — the
-    cross-writer race-detection primitive (r13): a writer whose
-    multi-store window must be detectable BRACKETS it with
-    :func:`epoch_bump` of its own sidecar, and the opposing writer
-    compares :func:`epoch_read` fingerprints across its own window,
-    re-asserting its idempotent publishes when the bytes changed. Used
-    by the dedup index (merge vs delete), the curation increment
-    (vs the purge marker), and the graph import (vs the purge's graph
-    arm)."""
+    fingerprint :func:`epoch_bracket` compares across a writer's
+    window."""
     try:
         with open(os.path.join(base_path, fname), encoding="ascii") as f:
             return f.read()
@@ -92,9 +86,8 @@ def epoch_read(base_path: str, fname: str) -> str:
 
 def race_backoff(attempt: int, scale: float = 1.0) -> None:
     """Desynchronizing pause before a race-repair RE-attempt (never the
-    first attempt — the no-race path costs nothing). The bracket loops
-    (dedup merge-vs-delete, ANN add-vs-delete, purge-vs-increment,
-    import-vs-purge) retry back-to-back, so two live writers whose
+    first attempt — the no-race path costs nothing). Without it,
+    :func:`epoch_bracket` retries back-to-back, so two live writers whose
     windows keep overlapping re-run in LOCKSTEP: each side's epoch
     bumps always land inside the other's next window and both exhaust
     their 5 attempts — a livelock the loud failure was designed for
@@ -222,6 +215,62 @@ def epoch_bump(base_path: str, fname: str) -> None:
         f.flush()
         os.fsync(f.fileno())
     os.replace(tmp, p)
+
+
+#: attempts of one :func:`epoch_bracket` before it fails loudly
+#: (adversarial scheduling only — the no-race path runs one attempt)
+REPAIR_ATTEMPTS = 5
+
+
+def epoch_bracket(
+    root: str, own: str | None, read_other, scale: float, fn, name: str
+) -> list:
+    """Run ``fn`` — one writer's multi-store window — under the
+    cross-writer race bracket, re-running it until no opposing writer
+    landed inside it. Returns every attempt's ``fn()`` result in order
+    (delete sides sum them, merge sides take the last).
+
+    Each attempt: :func:`race_backoff`; ``before = read_other()``;
+    :func:`epoch_bump` of the writer's OWN sidecar ``own`` under
+    ``root``; ``fn()``; bump ``own`` again; done when ``read_other()``
+    still equals ``before``. The two sides of a racing pair each bracket
+    their window this way with their own sidecar and read the other's.
+    Each side's READ window contains its own SIGNAL-WRITE window, so an
+    overlap goes undetected only if both bump pairs fall strictly
+    outside the other side's reads — which forces the windows disjoint
+    (a serial order). One side's window sitting strictly inside the
+    other's is caught by the OUTER side, hence a bracket on both sides
+    of every pair. ``fn`` must be idempotent (insert-if-absent merges,
+    swallowed deletes): a re-run is a no-op unless the two writers
+    really contested the same keys, in which case it converges the
+    stores onto a serial order of the pair. ``own=None`` is a writer
+    whose signal writes happen inside ``fn`` (the purge marker's
+    heartbeats); ``read_other`` is usually an :func:`epoch_read` of the
+    other side's sidecar but may be any fingerprint. An exception from
+    ``fn`` propagates at once. After :data:`REPAIR_ATTEMPTS` attempts
+    it raises a ``RuntimeError`` naming ``name`` (the opposing writer)
+    and ``root``. No-race cost: two fingerprint reads and two tiny
+    sidecar writes.
+
+    :func:`race_backoff`, :func:`epoch_read` and :func:`epoch_bump` are
+    looked up as module globals at call time, so forced-schedule tests
+    and tracers may replace them on this module."""
+    results = []
+    for attempt in range(REPAIR_ATTEMPTS):
+        race_backoff(attempt, scale)
+        before = read_other()
+        if own is not None:
+            epoch_bump(root, own)
+        results.append(fn())
+        if own is not None:
+            epoch_bump(root, own)
+        if read_other() == before:
+            return results
+    raise RuntimeError(
+        f"{name} kept landing inside one bracketed window on {root} "
+        f"({REPAIR_ATTEMPTS} repair attempts) — quiesce {name} and "
+        f"replay"
+    )
 
 
 def is_transient_read_race(e: Exception) -> bool:

@@ -92,25 +92,16 @@ MARKER_HASHES_CAP = 100_000
 #: a correctness one.
 PURGE_WAIT_SECS = 120.0
 
-#: bounded repair attempts when purges keep landing inside one
-#: increment's write window (adversarial scheduling only — each repair
-#: is two idempotent O(batch) merges)
-RACE_REPAIR_ATTEMPTS = 5
-
-#: the increment's OWN signal to the purge (r14, closing the r13 ADVICE
-#: liveness hole): bumped inside EVERY ``_mutate`` attempt, before and
-#: after the corpus+index merges. The marker-fingerprint check alone is
-#: one-sided — the purge rewrites its marker only BETWEEN arms, so an
-#: increment whose whole write window fell inside one slow arm (>120 s
-#: bulk deletes are exactly what the spill path enables) saw identical
-#: marker bytes at both reads while the purge never checked for
-#: increments at all: the purge's later index arm then deleted hashes
-#: the increment had just merged, leaving corpus-present/
-#: index-forgotten undetected. Now the purge brackets its corpus+index
-#: arms with reads of this sidecar (its own signal-writes — the per-arm
-#: marker heartbeats — land inside that window) and re-runs both
-#: deletes when the bytes changed; the same disjoint-or-detected order
-#: algebra as store_import.IMPORT_EPOCH_FILE applies.
+#: the increment's OWN sidecar (r14, closing the r13 ADVICE liveness
+#: hole). The marker-fingerprint check alone is one-sided — the purge
+#: rewrites its marker only BETWEEN arms, so an increment whose whole
+#: write window fell inside one slow arm (>120 s bulk deletes are
+#: exactly what the spill path enables) saw identical marker bytes at
+#: both reads while the purge never checked for increments at all: the
+#: purge's later index arm then deleted hashes the increment had just
+#: merged, leaving corpus-present/index-forgotten undetected. Now the
+#: purge brackets its corpus+index arms with reads of this sidecar (its
+#: own signal writes are the per-arm marker heartbeats).
 INCREMENT_EPOCH_FILE = "_INCREMENT_EPOCH.json"
 
 
@@ -196,7 +187,7 @@ def _settle_purges(base_path: str, timeout: float | None = None) -> str:
     and tests can retune it); an older pending marker is a CRASHED
     purge — its remaining arms will never run on their own, so it does
     not block (and its eventual replay, like any purge, changes the
-    marker and triggers the caller's repair loop)."""
+    marker and triggers the caller's race bracket)."""
     if timeout is None:
         timeout = PURGE_WAIT_SECS
     deadline = time.time() + timeout
@@ -318,7 +309,7 @@ def curate_increment(
     )
     # ATTRIBUTED band rows (text_hash, band, bucket): the store keys
     # them by contributing hash so the index can forget. Built once —
-    # the repair loop below may re-run both merges from these plans
+    # the race bracket below may re-run both merges from these plans
     # (all ancestors are checkpointed/materialized batch relations)
     novel_hashes = novel.select("text_hash").distinct()
     novel_bands = (
@@ -368,14 +359,6 @@ def curate_increment(
     )
 
     def _mutate() -> None:
-        # signal-write INSIDE the read window (see INCREMENT_EPOCH_FILE):
-        # bracket both merges with bumps of the increment's own epoch so
-        # a purge whose corpus+index arms overlap this attempt always
-        # observes changed bytes across its own bracket reads — even
-        # when this whole window falls inside ONE slow purge arm, where
-        # the marker fingerprint below stays quiet
-        versioned.epoch_bump(base_path, INCREMENT_EPOCH_FILE)
-
         # OUTPUTS FIRST is a PUBLISH order, not a compute order: the
         # corpus append and the index merges overlap their batch-side
         # evaluation, while the gate chain pins corpus → bands → hashes
@@ -406,7 +389,6 @@ def curate_increment(
             )
 
         versioned.run_publish_ordered([_corpus_arm, _index_arm])
-        versioned.epoch_bump(base_path, INCREMENT_EPOCH_FILE)
 
     # PURGE-RACE CONTRACT (r12 verdict Next #1). The increment's two
     # store mutations can straddle a concurrent purge's arms (corpus
@@ -416,30 +398,20 @@ def curate_increment(
     # remembering content the purge removed from the corpus, so every
     # future re-send of it drops as dup_of_history forever. Per-store
     # publishes are already serialized (lock or optimistic CAS); the
-    # seam is CROSS-store. Pin: settle in-flight purges before writing,
-    # fingerprint the marker across the write window, and if any purge
-    # landed inside it, re-assert BOTH merges (idempotent
-    # insert-if-absent) after it commits — converging the final state
-    # onto the purge→ingest serial order (content back in corpus AND
-    # index together; the reference's conflict-as-success,
-    # crud/create.py:39-45). An ingest→purge outcome needs no repair:
-    # the marker then did not change inside our window. Cost on the
-    # no-race path: two small file reads.
-    start_fp = _settle_purges(base_path)
-    _mutate()
-    for _attempt in range(RACE_REPAIR_ATTEMPTS):
-        versioned.race_backoff(_attempt, 1.0)
-        end_fp = _settle_purges(base_path)
-        if end_fp == start_fp:
-            break
-        start_fp = end_fp
-        _mutate()
-    else:
-        raise RuntimeError(
-            f"purges kept landing inside one increment's write window "
-            f"on {base_path} ({RACE_REPAIR_ATTEMPTS} repair attempts) — "
-            f"quiesce the purge loop and re-send the batch"
-        )
+    # seam is CROSS-store. Pin: the other side's fingerprint is the
+    # purge marker read after settling in-flight purges, so a re-run
+    # re-asserts BOTH merges (idempotent insert-if-absent) after the
+    # purge commits — converging onto the purge→ingest serial order
+    # (content back in corpus AND index together; the reference's
+    # conflict-as-success, crud/create.py:39-45).
+    versioned.epoch_bracket(
+        base_path,
+        INCREMENT_EPOCH_FILE,
+        lambda: _settle_purges(base_path),
+        1.0,
+        _mutate,
+        "purge_documents",
+    )
     return out
 
 
@@ -1113,17 +1085,11 @@ def purge_documents(
         pending["heartbeat_ts"] = time.time()
         _write_purge_marker(base_path, pending)
 
-    # INCREMENT-race bracket (r14, see INCREMENT_EPOCH_FILE): the
-    # corpus+index arms re-run whenever an increment's merges landed
-    # inside their window. The purge's own signal-writes — the per-arm
-    # marker heartbeats — land inside this same bracket, so every
-    # overlap is detected by at least one side (disjoint-or-detected);
-    # re-runs are swallowed-delete no-ops unless the increment actually
+    # INCREMENT-race bracket (r14, see INCREMENT_EPOCH_FILE): re-runs
+    # are swallowed-delete no-ops unless the increment actually
     # re-merged contested hashes, in which case they converge the final
     # state onto the ingest→purge serial order (content gone from BOTH
     # stores — never corpus-present/index-forgotten).
-    n_corpus = 0
-    idx = {"hashes_deleted": 0, "bands_deleted": 0}
     corpus_path = _corpus_path(base_path)
     # the corpus and index arms run CONCURRENTLY (guide §2.6 — submit
     # independent jobs from a thread pool so the second arm's tasks
@@ -1134,46 +1100,43 @@ def purge_documents(
     # exactly the property the serial order relied on too. The
     # hashes-BEFORE-bands order INSIDE dedup_index_delete stays serial —
     # that one is a real crash-ordering contract (bands-gone/
-    # hash-present = can-never-re-enter). Both arms stay inside the
-    # increment-race bracket; arm heartbeats land after each arm
-    # completes (arms_done still records exactly which arms committed).
+    # hash-present = can-never-re-enter). Arm heartbeats land after
+    # each arm completes (arms_done still records exactly which arms
+    # committed).
     from concurrent.futures import ThreadPoolExecutor
 
-    for _attempt in range(RACE_REPAIR_ATTEMPTS):
-        versioned.race_backoff(_attempt, 1.6)
-        inc0 = versioned.epoch_read(base_path, INCREMENT_EPOCH_FILE)
+    def _corpus_arm() -> int:
+        if n_doomed and sinks.has_parquet_data(corpus_path):
+            return sinks.delete_from_store(
+                spark,
+                hashes,
+                corpus_path,
+                key="text_hash",
+                bucket_key="text_hash",
+                partitions=[sinks.BUCKET_COL],
+                protocol=protocol,
+                keys_unique=True,  # hashes is distinct (both forms)
+            )
+        return 0
 
-        def _corpus_arm() -> int:
-            if n_doomed and sinks.has_parquet_data(corpus_path):
-                return sinks.delete_from_store(
-                    spark,
-                    hashes,
-                    corpus_path,
-                    key="text_hash",
-                    bucket_key="text_hash",
-                    partitions=[sinks.BUCKET_COL],
-                    protocol=protocol,
-                    keys_unique=True,  # hashes is distinct (both forms)
-                )
-            return 0
+    def _index_arm() -> dict:
+        if n_doomed:
+            return dedup_index_delete(
+                hashes,
+                _index_path(base_path),
+                bands=bands,
+                protocol=protocol,
+                keys_unique=True,  # hashes is distinct (both forms)
+            )
+        return {"hashes_deleted": 0, "bands_deleted": 0}
 
-        def _index_arm() -> dict:
-            if n_doomed:
-                return dedup_index_delete(
-                    hashes,
-                    _index_path(base_path),
-                    bands=bands,
-                    protocol=protocol,
-                    keys_unique=True,  # hashes is distinct (both forms)
-                )
-            return {"hashes_deleted": 0, "bands_deleted": 0}
-
+    def _arms() -> tuple:
         with ThreadPoolExecutor(max_workers=2) as pool:
             f_corpus = pool.submit(_corpus_arm)
             f_index = pool.submit(_index_arm)
             err = None
             try:
-                n_corpus += f_corpus.result()
+                n_c = f_corpus.result()
             except BaseException as exc:  # noqa: BLE001 - joined below
                 err = exc
             else:
@@ -1183,24 +1146,29 @@ def purge_documents(
             except BaseException as exc:  # noqa: BLE001
                 err = err or exc
             else:
-                idx["hashes_deleted"] += d["hashes_deleted"]
-                idx["bands_deleted"] += d["bands_deleted"]
                 _arm_done("index")
         if err is not None:
             raise err
-        if not n_doomed:
-            # nothing contested: this purge wrote nothing an increment
-            # could straddle — don't spin on unrelated increment traffic
-            break
-        if versioned.epoch_read(base_path, INCREMENT_EPOCH_FILE) == inc0:
-            break
-    else:
-        raise RuntimeError(
-            f"increments kept landing inside one purge's corpus+index "
-            f"window on {base_path} ({RACE_REPAIR_ATTEMPTS} repair "
-            f"attempts) — quiesce the increment loop and replay the "
-            f"purge"
+        return n_c, d
+
+    if n_doomed:
+        attempts = versioned.epoch_bracket(
+            base_path,
+            None,
+            lambda: versioned.epoch_read(base_path, INCREMENT_EPOCH_FILE),
+            1.6,
+            _arms,
+            "curate_increment",
         )
+    else:
+        # nothing contested: this purge writes nothing an increment
+        # could straddle — don't spin on unrelated increment traffic
+        attempts = [_arms()]
+    n_corpus = sum(n_c for n_c, _ in attempts)
+    idx = {
+        k: sum(d[k] for _, d in attempts)
+        for k in ("hashes_deleted", "bands_deleted")
+    }
     n_ann = 0
     if ann_path is not None and ann_vec_ids is not None:
         from wcdimportbot_spark.operators.ann_store import ann_index_delete
@@ -1279,15 +1247,10 @@ def purge_documents(
                 pending["graph_hash_digest"] = g_digest
                 pending["graph_subject_qids"] = q_list
                 _write_purge_marker(base_path, pending)
-        # IMPORT-race repair (r13/r14, the graph twin of the index
-        # epochs): run the three deletes under the shared bracket —
-        # purge-epoch bumps on both sides (the import reads them) and a
-        # re-run whenever an import's merges (visible as
-        # IMPORT_EPOCH_FILE byte changes, bumped INSIDE every import
-        # merge attempt — the once-written manifest missed the r13
-        # ADVICE straddle) landed inside this window. A straddle would
-        # otherwise leave cache-present/items-absent — the P12 probe
-        # then skips every re-import of the page forever.
+        # IMPORT-race repair (r13/r14): run the three deletes under the
+        # shared import-race bracket — a straddle would otherwise leave
+        # cache-present/items-absent, and the P12 probe then skips
+        # every re-import of the page forever.
         from wcdimportbot_spark.plans.store_import import (
             run_deletes_with_import_repair,
         )

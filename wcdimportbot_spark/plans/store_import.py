@@ -49,31 +49,20 @@ MANIFEST_FILE = "_IMPORT_MANIFEST.json"
 #: deletes (r13): an import whose three merges straddle a purge's three
 #: deletes could otherwise leave cache-present/items-absent — the P12
 #: already-uploaded probe then SKIPS every re-import of that page
-#: forever (the cache remembers a qid whose item is gone). The import
-#: fingerprints this epoch across its own window and re-asserts all
-#: three merges when it changed; the purge symmetrically fingerprints
-#: IMPORT_EPOCH_FILE below and re-runs its deletes. Last overlap-free
-#: pass wins all three stores ⇒ every interleaving is one of the two
-#: serial orders (purge→import: the page fully back; import→purge:
-#: fully gone — the reference's delete→re-import contract either way).
+#: forever (the cache remembers a qid whose item is gone). Both sides run
+#: under :func:`versioned.epoch_bracket`, so every interleaving is one
+#: of the two serial orders (purge→import: the page fully back;
+#: import→purge: fully gone — the reference's delete→re-import contract
+#: either way).
 PURGE_EPOCH_FILE = "_PURGE_EPOCH.json"
 
-#: the import's OWN signal to the purge (r14, closing the r13 detection
-#: hole): bumped immediately inside EVERY repair-loop attempt, before
-#: and after the three merges. The manifest's begin/commit writes are
-#: NOT a sound signal — they land once, OUTSIDE the retry loop, so the
-#: schedule begin → purge-reads-m0 → purge-bump1 → import-reads-p0 →
-#: merges/deletes interleave → import-reads-p1(==p0) → purge-bump2 →
+#: the import's OWN sidecar (r14, closing the r13 detection hole). The
+#: manifest's begin/commit writes are NOT a sound signal — they land
+#: once, OUTSIDE the bracket, so the schedule begin →
+#: purge-reads-m0 → purge-bump1 → import-reads-p0 → merges/deletes
+#: interleave → import-reads-p1(==p0) → purge-bump2 →
 #: purge-reads-m1(==m0) → commit left both checks clean while the
-#: stores diverged (the sound design requires each side's READ window
-#: to contain its own SIGNAL-WRITE window — the text_dedup symmetric
-#: epochs argue the order algebra). With per-attempt bumps: if the
-#: import's merge window overlaps the purge's delete window at all,
-#: either the purge's two bumps land inside the import's [p0, p1]
-#: reads (import re-asserts), or the import's two bumps land inside
-#: the purge's [i0, i1] reads (purge re-deletes) — an undetected
-#: overlap would need both bump pairs strictly outside the other's
-#: read window, which forces the windows disjoint (a serial order).
+#: stores diverged.
 IMPORT_EPOCH_FILE = "_IMPORT_EPOCH.json"
 
 _MANIFEST_STORES = ("items", "claims", "cache")
@@ -168,10 +157,9 @@ def verify_import_consistency(store_root: str) -> dict:
 
 def run_deletes_with_import_repair(store_root: str, deletes_fn):
     """Run one cross-store delete set (items/claims/cache in any
-    combination) under the import-race bracket: bump PURGE_EPOCH_FILE
-    on both sides of the deletes (the import's repair loop reads it)
-    and re-run the whole set whenever an import's merges — visible as
-    IMPORT_EPOCH_FILE byte changes — landed inside this window. EVERY
+    combination) under the import-race bracket
+    (:func:`versioned.epoch_bracket` with PURGE_EPOCH_FILE as its own
+    sidecar, IMPORT_EPOCH_FILE as the other side's). EVERY
     cross-store delete path must ride this bracket, not only
     purge_documents' graph arm: a CLI ``--delete-page`` whose three
     deletes straddle a concurrent import's three merges leaves the
@@ -182,25 +170,15 @@ def run_deletes_with_import_repair(store_root: str, deletes_fn):
     Returns the summed tuple ``deletes_fn`` yields."""
     from wcdimportbot_spark.operators import versioned
 
-    totals = None
-    for _attempt in range(5):
-        versioned.race_backoff(_attempt, 1.6)
-        i0 = versioned.epoch_read(store_root, IMPORT_EPOCH_FILE)
-        versioned.epoch_bump(store_root, PURGE_EPOCH_FILE)
-        out = tuple(deletes_fn())
-        versioned.epoch_bump(store_root, PURGE_EPOCH_FILE)
-        totals = (
-            out
-            if totals is None
-            else tuple(a + b for a, b in zip(totals, out))
-        )
-        if versioned.epoch_read(store_root, IMPORT_EPOCH_FILE) == i0:
-            return totals
-    raise RuntimeError(
-        f"imports kept landing inside one delete window on "
-        f"{store_root} (5 repair attempts) — quiesce the import loop "
-        f"and replay the delete"
+    attempts = versioned.epoch_bracket(
+        store_root,
+        PURGE_EPOCH_FILE,
+        lambda: versioned.epoch_read(store_root, IMPORT_EPOCH_FILE),
+        1.6,
+        deletes_fn,
+        "import_pages_to_store",
     )
+    return tuple(map(sum, zip(*attempts)))
 
 
 def import_pages_to_store(
@@ -261,38 +239,26 @@ def import_pages_to_store(
     # docstring) — crash anywhere below leaves it for --verify-store
     store_root = os.path.dirname(paths["items"])
     begin_import_manifest(store_root, paths)
-    # PURGE-race repair (see PURGE_EPOCH_FILE): re-assert all three
-    # idempotent merges whenever a purge's graph arm landed inside this
-    # import's window — re-runs insert nothing unless the purge
-    # actually removed this batch's rows. Two file reads when quiet.
+    # purge race (see PURGE_EPOCH_FILE): re-runs insert nothing unless
+    # the purge actually removed this batch's rows
     from wcdimportbot_spark.operators import versioned
 
-    for _attempt in range(5):
-        versioned.race_backoff(_attempt, 1.0)
-        p0 = versioned.epoch_read(store_root, PURGE_EPOCH_FILE)
-        # signal-write INSIDE the read window (see IMPORT_EPOCH_FILE):
-        # bracket the three merges with bumps of the import's own epoch
-        # so a concurrent purge whose delete window overlaps this
-        # attempt always observes changed bytes across its own reads —
-        # the manifest alone (written once, outside this loop) misses
-        # the straddle where both sides' reads land inside the other's
-        # quiet stretch
-        versioned.epoch_bump(store_root, IMPORT_EPOCH_FILE)
+    def _merges() -> None:
         sinks.merge_write_items(spark, new_items, paths["items"])
         sinks.merge_write_claims(spark, new_claims, paths["claims"])
         cache_ops.merge_write_cache(
             spark, new_items.select("hash", "qid"), paths["cache"]
         )
-        versioned.epoch_bump(store_root, IMPORT_EPOCH_FILE)
-        if versioned.epoch_read(store_root, PURGE_EPOCH_FILE) == p0:
-            break
-    else:
-        raise RuntimeError(
-            f"purges kept landing inside one import's window on "
-            f"{store_root} (5 repair attempts) — quiesce the purge "
-            f"loop and re-send the batch"
-        )
-    # rejects stays OUTSIDE the repair loop: it is the append-only
+
+    versioned.epoch_bracket(
+        store_root,
+        IMPORT_EPOCH_FILE,
+        lambda: versioned.epoch_read(store_root, PURGE_EPOCH_FILE),
+        1.0,
+        _merges,
+        "purge_documents",
+    )
+    # rejects stays OUTSIDE the bracket: it is the append-only
     # diagnostic side-output (purge boundary b2) — a repair re-run must
     # not append its rows twice
     sinks.write_rejects(result.rejects, paths["rejects"])
