@@ -237,8 +237,6 @@ def test_merge_empty_batch_short_circuits_without_lock_work(spark, tmp_path):
         anti_key="hash",
         partitions=["instance_of", sinks.BUCKET_COL],
         dedup_key="hash",
-        read_fn=sinks.read_items,
-        write_fn=sinks._write_items_unlocked,
     )
     assert n == 0
     assert sinks.read_items(spark, store).count() == 10

@@ -798,20 +798,19 @@ def test_dedup_index_delete_forgets_and_refcounts(spark, tmp_path):
 
     # legacy (unattributed) bands store fails loudly
     legacy = str(tmp_path / "legacy_index")
-    from wcdimportbot_spark.operators.text_dedup import (
-        _write_band_store_unlocked,
-        _write_hash_store_unlocked,
-    )
-
-    _write_hash_store_unlocked(
+    sinks._write_snapshot(
         spark.createDataFrame([(hash_a,)], "text_hash string"),
         os.path.join(legacy, "hashes"),
+        "text_hash",
+        [sinks.BUCKET_COL],
     )
-    _write_band_store_unlocked(
+    sinks._write_snapshot(
         spark.createDataFrame(
             [(0, "bx", "0#bx")], "band int, bucket string, bk string"
         ),
         os.path.join(legacy, "bands"),
+        "bk",
+        [sinks.BUCKET_COL],
     )
     import pytest as _pytest
 

@@ -604,6 +604,65 @@ def test_compaction_is_idempotent_and_lookup_sorted(spark, tmp_path):
     assert checked > 0
 
 
+@pytest.mark.parametrize("protocol", ["lock", "optimistic"])
+@pytest.mark.parametrize("store", ["items", "claims", "cache"])
+def test_fresh_store_files_sorted_on_lookup_key(
+    spark, tmp_path, monkeypatch, store, protocol
+):
+    """A store's first files — a full rewrite (write_items, write_cache)
+    or a merge's first commit (merge_write_claims) — are sorted on the
+    lookup key within every file, whichever protocol commits them, so
+    row-group min/max stats prune point lookups from the first write.
+    The batch plan has no shuffle: a bare sort on the key before the
+    partitioned write is dropped by Spark's planned write."""
+    import pyarrow.parquet as pq
+
+    monkeypatch.setenv("WCD_STORE_PROTOCOL", protocol)
+    ids = spark.range(0, 2000, numPartitions=4)
+    h = F.md5(F.col("id").cast("string"))
+    qid = F.concat(F.lit("Q"), F.col("id").cast("string"))
+    path = str(tmp_path / store)
+    if store == "items":
+        key = "hash"
+        sinks.write_items(
+            ids.select(
+                qid.alias("qid"),
+                F.when(F.col("id") % 3 == 0, "WEBSITE_ITEM")
+                .otherwise("WIKIPEDIA_PAGE")
+                .alias("instance_of"),
+                F.lit("l").alias("label"),
+                F.lit("d").alias("description"),
+                h.alias("hash"),
+            ),
+            path,
+        )
+    elif store == "claims":
+        key = "subject_qid"
+        sinks.merge_write_claims(
+            spark,
+            ids.select(
+                h.alias("subject_qid"),
+                F.when(F.col("id") % 2 == 0, "P31").otherwise("P50")
+                .alias("property"),
+                qid.alias("value"),
+            ),
+            path,
+        )
+    else:
+        key = "hash"
+        cache_ops.write_cache(ids.select(h.alias("hash"), qid.alias("qid")), path)
+    files = multi_row = 0
+    for root, _dirs, names in os.walk(versioned.data_dir(path)):
+        for f in names:
+            if f.endswith(".parquet"):
+                vals = pq.read_table(os.path.join(root, f), columns=[key])
+                vals = vals.column(key).to_pylist()
+                assert vals == sorted(vals), f"{f} unsorted on {key}"
+                files += 1
+                multi_row += len(vals) > 1
+    assert files and multi_row
+
+
 def test_compaction_races_merge_without_losing_rows(spark, tmp_path):
     """A compactor process loops compact_items while this process keeps
     merging new batches into the same store. The shared writer lock
@@ -1381,7 +1440,9 @@ def test_schema_evolution_optimistic_and_time_travel(spark, tmp_path):
 # ---------------------------------------------------------------------------
 
 
-def test_split_bucket_rewrites_one_bucket_and_composes(spark, tmp_path):
+def test_split_bucket_rewrites_one_bucket_and_composes(
+    spark, tmp_path, protocol=None
+):
     """Splitting a hot bucket rewrites ONLY that bucket's dirs (every
     other file hardlinks through), redistributes its rows exactly by the
     child modulus, and subsequent merges/deletes derive batch buckets
@@ -1394,7 +1455,8 @@ def test_split_bucket_rewrites_one_bucket_and_composes(spark, tmp_path):
     before = _parquet_inodes(versioned.data_dir(path))
 
     info = sinks.split_bucket(
-        spark, path, 5, key="hash", partitions=["instance_of", sinks.BUCKET_COL]
+        spark, path, 5, key="hash",
+        partitions=["instance_of", sinks.BUCKET_COL], protocol=protocol,
     )
     assert info["children"] == [5, 21] and info["depth"] == 1
     after = _parquet_inodes(versioned.data_dir(path))
@@ -1416,7 +1478,9 @@ def test_split_bucket_rewrites_one_bucket_and_composes(spark, tmp_path):
         spark,
         [(f"R{i}", "WIKIPEDIA_PAGE", f"r{i}", "d", f"fhash{i}") for i in range(64)],
     )
-    sinks.merge_write_items(spark, _items(spark, rows).unionByName(fresh), path)
+    sinks.merge_write_items(
+        spark, _items(spark, rows).unionByName(fresh), path, protocol=protocol
+    )
     snap2 = sinks.read_items(spark, path)
     assert snap2.count() == 320
     assert snap2.select("hash").distinct().count() == 320
@@ -1429,14 +1493,18 @@ def test_split_bucket_rewrites_one_bucket_and_composes(spark, tmp_path):
     # pruned delete under the split map
     assert (
         sinks.merge_delete_items(
-            spark, spark.createDataFrame([("fhash0",), ("hash0",)], "hash string"), path
+            spark,
+            spark.createDataFrame([("fhash0",), ("hash0",)], "hash string"),
+            path,
+            protocol=protocol,
         )
         == 2
     )
     assert sinks.read_items(spark, path).count() == 318
     # the child splits again, independently (depth 2)
     info2 = sinks.split_bucket(
-        spark, path, 21, key="hash", partitions=["instance_of", sinks.BUCKET_COL]
+        spark, path, 21, key="hash",
+        partitions=["instance_of", sinks.BUCKET_COL], protocol=protocol,
     )
     assert info2["children"] == [21, 53] and info2["depth"] == 2
     assert sinks.read_items(spark, path).count() == 318
@@ -1446,8 +1514,18 @@ def test_split_bucket_rewrites_one_bucket_and_composes(spark, tmp_path):
     with pytest.raises(ValueError, match="not a leaf"):
         sinks.split_bucket(
             spark, path, 999, key="hash",
-            partitions=["instance_of", sinks.BUCKET_COL],
+            partitions=["instance_of", sinks.BUCKET_COL], protocol=protocol,
         )
+
+
+def test_split_bucket_rewrites_one_bucket_and_composes_optimistic(
+    spark, tmp_path, monkeypatch
+):
+    # the bootstrap write_items takes the protocol from the environment
+    monkeypatch.setenv("WCD_STORE_PROTOCOL", "optimistic")
+    test_split_bucket_rewrites_one_bucket_and_composes(
+        spark, tmp_path, "optimistic"
+    )
 
 
 def test_split_bucket_under_concurrent_merges_loses_nothing(spark, tmp_path):

@@ -172,37 +172,6 @@ def _codes_path(base_path: str) -> str:
     return os.path.join(base_path, CODES_DIR)
 
 
-def _codes_shaped(df: DataFrame) -> DataFrame:
-    """One writer task per cluster (the compaction layout discipline):
-    without the repartition every input partition writes its own file
-    into every cluster dir it holds — tasks × clusters tiny files whose
-    footers every probe then opens. One sorted file per cluster dir is
-    both the fastest write and the fastest scan at this artifact's
-    shape. At 100 TB with clusters too large for one task, repartition
-    on (cluster, salt) instead — the probe's partition filter is
-    unchanged."""
-    return df.repartition(F.col("cluster")).sortWithinPartitions(
-        "cluster", "vec_id"
-    )
-
-
-def _write_codes_unlocked(
-    df: DataFrame, path: str, model_version: str | None = None
-) -> None:
-    """Stage + publish a codes snapshot partitioned by ``cluster``;
-    caller holds the writer lock. Sorted (cluster, vec_id): the prefix
-    satisfies the partitioned writer (no inserted sort), the suffix
-    keeps vec_id row-group stats tight for point probes. The snapshot is
-    stamped with the model version its codes were encoded under."""
-    version, vdir = versioned.stage_new(path)
-    _codes_shaped(df).write.mode("overwrite").partitionBy("cluster").parquet(
-        vdir
-    )
-    if model_version:
-        _write_model_stamp(vdir, model_version)
-    versioned.publish(path, version)
-
-
 def _populate_model(vdir: str, centroids, books, meta: dict) -> None:
     """Write one model snapshot (centroids + codebooks + meta) into a
     staging dir. The model is driver-sized (a few hundred KB): written
@@ -318,7 +287,6 @@ def ann_index_build(
 
     mpath = _model_path(base_path)
     cpath = _codes_path(base_path)
-    optimistic = sinks._merge_protocol(protocol) == "optimistic"
     # bump the merge-side epoch around the codes publish so a racing
     # ann_index_delete notices the store changed under its resolved
     # pair set and re-resolves against the NEW snapshot (whose cluster
@@ -327,29 +295,28 @@ def ann_index_build(
     # whole store from the corpus input, so either serial order yields
     # exactly this output (see ANN_DELETE_EPOCH_FILE).
     versioned.epoch_bump(base_path, ANN_MERGE_EPOCH_FILE)
-    if optimistic:
-        version = versioned.publish_full_optimistic(
-            mpath, lambda vdir: _populate_model(vdir, centroids, books, meta)
+    version = versioned.commit_full(
+        mpath,
+        protocol,
+        lambda vdir: _populate_model(vdir, centroids, books, meta),
+    )
+
+    def _populate_codes(vdir: str) -> None:
+        # one writer task (hence one sorted file) per cluster dir: a
+        # probe then opens one footer per cluster instead of tasks ×
+        # clusters tiny files. At 100 TB with clusters too large for one
+        # task, repartition on (cluster, salt) instead — the probe's
+        # partition filter is unchanged.
+        sinks._write_sorted(
+            codes_out, vdir, ["cluster"], "vec_id", per_dir=True
         )
+        # pair stamp: whichever codes commit wins, its stamp names the
+        # exact (retained) model it was encoded under — two racing
+        # rebuilds can no longer settle on A's model + B's codes (r10
+        # ADVICE)
+        _write_model_stamp(vdir, version)
 
-        def _populate_codes(vdir: str) -> None:
-            _codes_shaped(codes_out).write.mode("overwrite").partitionBy(
-                "cluster"
-            ).parquet(vdir)
-            # pair stamp: whichever codes commit wins the rename race,
-            # its stamp names the exact (retained) model it was encoded
-            # under — two racing rebuilds can no longer settle on A's
-            # model + B's codes (r10 ADVICE)
-            _write_model_stamp(vdir, version)
-
-        versioned.publish_full_optimistic(cpath, _populate_codes)
-    else:
-        with versioned.writer_lock(mpath):
-            version, vdir = versioned.stage_new(mpath)
-            _populate_model(vdir, centroids, books, meta)
-            versioned.publish(mpath, version)
-        with versioned.writer_lock(cpath):
-            _write_codes_unlocked(codes_out, cpath, model_version=version)
+    versioned.commit_full(cpath, protocol, _populate_codes)
     versioned.epoch_bump(base_path, ANN_MERGE_EPOCH_FILE)
     return {"n_built": int(n_built), "model_version": version, **meta}
 
@@ -620,37 +587,17 @@ def ann_index_add_batch(
             )
             n_batch = enc.count()
             try:
-                if sinks._merge_protocol(protocol) == "optimistic":
-                    n_fresh = sinks._merge_write_optimistic(
-                        spark, enc, cpath, base_guard=guard, **merge_kwargs
-                    )
-                    # the optimistic FIRST-commit path writes the store
-                    # body itself (no write_fn hook), so a codes store
-                    # born from an optimistic add-batch would carry no
-                    # _MODEL_VERSION and load_ann_pair would silently
-                    # degrade to the unverified current-of-each pairing
-                    # (r11 ADVICE). Stamp post-commit when absent:
-                    # purely additive metadata the guard treats as
-                    # unverified until it lands, racing add-batches
-                    # under the same model converge on the same stamp,
-                    # and link_tree carries it into every later
-                    # snapshot.
-                    if versioned.current_version(cpath) is not None:
-                        cur = versioned.data_dir(cpath)
-                        if _read_model_stamp(cur) is None:
-                            _write_model_stamp(cur, mv)
-                else:
-                    n_fresh = sinks._merge_write(
-                        spark,
-                        enc,
-                        cpath,
-                        read_fn=sinks.read_snapshot,
-                        write_fn=lambda df, p, _mv=mv: _write_codes_unlocked(
-                            df, p, model_version=_mv
-                        ),
-                        base_guard=guard,
-                        **merge_kwargs,
-                    )
+                n_fresh = sinks._merge_write(
+                    spark,
+                    enc,
+                    cpath,
+                    base_guard=guard,
+                    # a codes store born from this merge records the
+                    # model its codes were encoded under
+                    stamp=lambda vdir, _mv=mv: _write_model_stamp(vdir, _mv),
+                    protocol=protocol,
+                    **merge_kwargs,
+                )
             except StaleModelError:
                 continue
             return {"added": int(n_fresh), "skipped": int(n_batch - n_fresh)}

@@ -54,13 +54,6 @@ def read_cache(spark: SparkSession, path: str) -> DataFrame:
     return empty_cache(spark)
 
 
-def _read_cache_raw(spark: SparkSession, path: str) -> DataFrame:
-    """Storage-layout read (includes the ``hb`` partition column)."""
-    from wcdimportbot_spark.operators import sinks
-
-    return sinks.read_snapshot(spark, path)
-
-
 def lookup(cache: DataFrame, hash_value: str) -> DataFrame:
     """S6 point lookup — ``cache.filter(hash == h)``; on a sorted/bucketed
     cache table this prunes to one file via min/max statistics."""
@@ -126,28 +119,16 @@ def write_cache(
     cache: DataFrame, path: str, protocol: str | None = None
 ) -> None:
     """S7 full-rewrite sink (bootstrap / flush paths) as a fresh published
-    snapshot; hash-bucketed like the graph stores. The incremental import
-    path is :func:`merge_write_cache`. Under the optimistic protocol the
-    same snapshot commits lock-free through the rename arbiter
-    (last-writer-wins, a lost race costs only a re-target)."""
-    from wcdimportbot_spark.operators import sinks, versioned
+    snapshot; hash-bucketed like the graph stores and sorted on hash, so
+    parquet min/max stats prune point lookups (S6). The incremental
+    import path is :func:`merge_write_cache`. Under the optimistic
+    protocol the same snapshot commits lock-free through the rename
+    arbiter (last-writer-wins, a lost race costs only a re-target)."""
+    from wcdimportbot_spark.operators import sinks
 
     # materialize before writing: the plan may read the current snapshot
     staged = sinks.with_bucket(cache, "hash").localCheckpoint(eager=True)
-
-    def _populate(vdir: str) -> None:
-        # sorted-on-hash output: parquet min/max stats prune point lookups (S6)
-        staged.sortWithinPartitions("hash").write.mode("overwrite").partitionBy(
-            sinks.BUCKET_COL
-        ).parquet(vdir)
-
-    if sinks._merge_protocol(protocol) == "optimistic":
-        versioned.publish_full_optimistic(path, _populate)
-        return
-    with versioned.writer_lock(path):
-        version, vdir = versioned.stage_new(path)
-        _populate(vdir)
-        versioned.publish(path, version)
+    sinks._write_snapshot(staged, path, "hash", [sinks.BUCKET_COL], protocol)
 
 
 def merge_write_cache(
@@ -160,27 +141,7 @@ def merge_write_cache(
     wins — conflict-as-success) via the shared bucket-MERGE engine in
     operators/sinks.py. Delta form: MERGE INTO cache USING new ON hash
     WHEN NOT MATCHED INSERT."""
-    from wcdimportbot_spark.operators import sinks, versioned
-
-    if sinks._merge_protocol(protocol) == "optimistic":
-        sinks._merge_write_optimistic(
-            spark,
-            new_mappings.select("hash", "qid"),
-            path,
-            bucket_key="hash",
-            anti_key="hash",
-            partitions=[sinks.BUCKET_COL],
-            dedup_key="hash",
-        )
-        return
-
-    def write_fn(df: DataFrame, p: str) -> None:
-        # _merge_write already holds the writer lock for the whole merge
-        version, vdir = versioned.stage_new(p)
-        df.sortWithinPartitions("hash").write.mode("overwrite").partitionBy(
-            sinks.BUCKET_COL
-        ).parquet(vdir)
-        versioned.publish(p, version)
+    from wcdimportbot_spark.operators import sinks
 
     sinks._merge_write(
         spark,
@@ -190,8 +151,7 @@ def merge_write_cache(
         anti_key="hash",
         partitions=[sinks.BUCKET_COL],
         dedup_key="hash",
-        read_fn=_read_cache_raw,
-        write_fn=write_fn,
+        protocol=protocol,
     )
 
 

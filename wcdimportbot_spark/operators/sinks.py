@@ -28,8 +28,9 @@ contract on plain parquet:
   pruning keeps working between compactions. A batch that adds nothing
   writes nothing. Conflict = success: the existing row wins, mirroring
   ``crud/create.py:39-45``.
-- files are written sorted on the lookup key so parquet row-group min/max
-  statistics prune point lookups (S6/J2) to one row group.
+- files are written sorted on (partition cols, lookup key) by ONE writer,
+  :func:`_write_sorted`, so parquet row-group min/max statistics prune
+  point lookups (S6/J2) to one row group.
 
 Deletes (``--delete-page``, ``--rinse``) use the full-overwrite writers: a
 dynamic overwrite cannot clear a partition that ends up empty, so deletion
@@ -39,7 +40,11 @@ user-initiated; imports are the hot path.
 Every write — merge or full — publishes an immutable **snapshot version**
 flipped atomically via a ``_CURRENT`` pointer (operators/versioned.py), so
 a concurrent reader sees the pre-write or post-write store, never partial
-state.
+state. Each engine (merge, delete, upsert, split, compaction) is ONE
+``stage(base_dir, staged_dir)`` body committed through
+``versioned.commit``, the one place the write protocol (writer lock or
+lock-free rename arbiter) is resolved; full rewrites commit through
+``versioned.commit_full``.
 
 At 100 TB: raise ``N_BUCKETS`` so a bucket fits an executor (the layout is
 ``O(types × buckets)`` directories, independent of data volume), or swap
@@ -74,26 +79,7 @@ def has_parquet_data(path: str) -> bool:
     partitioned write leaves a directory with only ``_SUCCESS``, and
     schema inference on it would poison every later read
     (UNABLE_TO_INFER_SCHEMA)."""
-    return _tree_has_parquet(versioned.data_dir(path))
-
-
-def _tree_has_parquet(base: str) -> bool:
-    """`has_parquet_data` body over an ALREADY-RESOLVED snapshot
-    directory (the optimistic path resolves via the version log, not the
-    ``_CURRENT`` pointer, so it must not re-resolve here)."""
-    for root, dirs, files in os.walk(base):
-        if root == base:
-            # legacy-root resolution must not count data of an
-            # unpublished (crashed or in-flight) staged version
-            dirs[:] = [
-                d
-                for d in dirs
-                if not versioned.is_version_name(d)
-                and not d.endswith(".staging")
-            ]
-        if any(f.endswith(".parquet") for f in files):
-            return True
-    return False
+    return versioned.tree_has_data(versioned.data_dir(path))
 
 
 #: per-snapshot bucket-map sidecar (r10 verdict Next #5). ``N_BUCKETS``
@@ -185,44 +171,65 @@ def _rebucket_for_base(
     )
 
 
-def _sorted_on(df: DataFrame, key: str) -> DataFrame:
-    """Sort within output tasks on the lookup key: parquet row-group
-    min/max statistics then prune point lookups (S6/J2) to one row group
-    instead of scanning the bucket."""
-    return df.sortWithinPartitions(key)
+def _write_sorted(
+    df: DataFrame,
+    vdir: str,
+    partitions: list[str],
+    sort_key: str,
+    *,
+    per_dir: bool = False,
+    overwrite: bool = False,
+) -> None:
+    """The one store-file writer: ``df`` written partitioned into the
+    staged snapshot ``vdir``, sorted on (partition cols, lookup key).
+    The prefix satisfies the partitioned writer's required ordering, so
+    it inserts no sort of its own (which would drop the lookup-key
+    order); the suffix keeps each file's row-group min/max statistics
+    tight, so point lookups (S6/J2) prune to one row group.
+    ``per_dir=True`` first repartitions on the partition columns: one
+    task, hence exactly one file, per partition dir. Files are added;
+    ``overwrite=True`` instead replaces the partition dirs written (a
+    dynamic overwrite — compaction over a hardlinked tree)."""
+    if per_dir:
+        df = df.repartition(*[F.col(c) for c in partitions])
+    writer = df.sortWithinPartitions(*partitions, sort_key).write
+    if overwrite:
+        writer = writer.mode("overwrite").option(
+            "partitionOverwriteMode", "dynamic"
+        )
+    else:
+        writer = writer.mode("append")
+    writer.partitionBy(*partitions).parquet(vdir)
 
 
-def _write_items_unlocked(items: DataFrame, path: str) -> None:
-    """Snapshot rewrite body; caller must hold the writer lock."""
-    version, vdir = versioned.stage_new(path)
-    _sorted_on(with_bucket(items, "hash"), "hash").write.mode(
-        "overwrite"
-    ).partitionBy("instance_of", BUCKET_COL).parquet(vdir)
-    versioned.publish(path, version)
+def _write_snapshot(
+    df: DataFrame,
+    path: str,
+    key: str,
+    partitions: list[str],
+    protocol: str | None = None,
+) -> None:
+    """Full rewrite of the store ``path`` as one new snapshot: ``df``
+    hash-bucketed on ``key`` and written sorted on it."""
+    staged = with_bucket(df, key)
+    versioned.commit_full(
+        path,
+        protocol,
+        lambda vdir: _write_sorted(staged, vdir, partitions, key),
+    )
 
 
 def write_items(items: DataFrame, path: str) -> None:
     """Full (static) rewrite as a fresh snapshot — bootstrap and delete
     paths. The new version is built beside the current one and published
     with an atomic pointer flip."""
-    with versioned.writer_lock(path):
-        _write_items_unlocked(items, path)
-
-
-def _write_claims_unlocked(claims: DataFrame, path: str) -> None:
-    """Snapshot rewrite body; caller must hold the writer lock."""
-    version, vdir = versioned.stage_new(path)
-    _sorted_on(with_bucket(claims, "subject_qid"), "subject_qid").write.mode(
-        "overwrite"
-    ).partitionBy("property", BUCKET_COL).parquet(vdir)
-    versioned.publish(path, version)
+    _write_snapshot(items, path, "hash", ["instance_of", BUCKET_COL])
 
 
 def write_claims(claims: DataFrame, path: str) -> None:
     """Full (static) rewrite as a fresh snapshot — bootstrap and delete
     paths."""
-    with versioned.writer_lock(path):
-        _write_claims_unlocked(claims, path)
+    _write_snapshot(claims, path, "subject_qid", ["property", BUCKET_COL])
 
 
 def read_snapshot(
@@ -495,27 +502,22 @@ def _append_fresh(
     n_fresh: int,
 ) -> None:
     """Land the anti-joined fresh rows as NEW part files inside their
-    partition dirs of the hardlinked staged tree — ``mode("append")``
-    only ever ADDS uniquely-named files, so the base version's
-    hardlinked files are untouched and bytes written are O(batch).
-    Shaped so each touched partition dir gains EXACTLY ONE new file per
-    merge instead of one per (input partition × dir) — the small-file
-    growth rate compaction has to absorb stays linear in merges, not in
-    cluster width: small batches coalesce to one task (no shuffle),
-    large ones repartition on the partition columns (an O(batch)
-    shuffle — the batch, never the store). Sorted (partition cols, sort
-    key): the prefix satisfies the partitioned writer (it inserts no
-    sort of its own), the suffix keeps each appended file's row-group
-    min/max stats tight for point lookups."""
-    if n_fresh <= SMALL_BATCH_ROWS:
-        shaped = fresh.coalesce(1)
-    else:
-        shaped = fresh.repartition(*[F.col(c) for c in partitions])
-    (
-        shaped.sortWithinPartitions(*partitions, sort_key)
-        .write.mode("append")
-        .partitionBy(*partitions)
-        .parquet(vdir)
+    partition dirs of the hardlinked staged tree — appends only ever
+    ADD uniquely-named files, so the base version's hardlinked files
+    are untouched and bytes written are O(batch). Shaped so each
+    touched partition dir gains EXACTLY ONE new file per merge instead
+    of one per (input partition × dir) — the small-file growth rate
+    compaction has to absorb stays linear in merges, not in cluster
+    width: small batches coalesce to one task (no shuffle), large ones
+    repartition on the partition columns (an O(batch) shuffle — the
+    batch, never the store)."""
+    small = n_fresh <= SMALL_BATCH_ROWS
+    _write_sorted(
+        fresh.coalesce(1) if small else fresh,
+        vdir,
+        partitions,
+        sort_key,
+        per_dir=not small,
     )
 
 
@@ -566,108 +568,96 @@ def _merge_write(
     anti_key: str,
     partitions: list[str],
     dedup_key: str | None,
-    read_fn,
-    write_fn,
     prune_col: str = BUCKET_COL,
     sort_key: str | None = None,
     base_guard=None,
+    stamp=None,
     allow_additive: bool = False,
     batch_distinct: bool | None = None,
     publish_gate=None,
+    protocol: str | None = None,
 ) -> int:
     """Shared bucket-level MERGE engine (insert-if-absent, existing rows
-    win). ``anti_key`` must determine ``prune_col`` (it does for every
-    store: hash / subject_qid / bk / vec_id→cluster) so probing only
-    touched partitions for the anti-join is exact. The write side is
-    APPEND-ONLY: fresh rows land as new sorted part files inside the
-    hardlinked snapshot (see module docstring) — existing rows are never
-    rewritten, so write cost is O(batch) regardless of store size. A
-    batch with nothing fresh writes NOTHING. Returns the number of fresh
-    rows inserted.
+    win) — the single merge entry of every store, under either write
+    protocol (``versioned.commit``). ``anti_key`` must determine
+    ``prune_col`` (it does for every store: hash / subject_qid / bk /
+    vec_id→cluster) so probing only touched partitions for the
+    anti-join is exact. The write side is APPEND-ONLY: fresh rows land
+    as new sorted part files inside the hardlinked snapshot (see module
+    docstring) — existing rows are never rewritten, so write cost is
+    O(batch) regardless of store size. A batch with nothing fresh writes
+    NOTHING. Returns the number of fresh rows inserted. An empty store's
+    first commit writes the whole batch as a new versioned snapshot.
 
     ``bucket_key=None`` skips the hash-bucket attach for stores whose
     partition layout is domain-derived (the ANN codes store's
     ``cluster``) — ``new_df`` must then already carry ``prune_col``.
 
     ``base_guard(base_dir)`` — optional precondition on the RESOLVED
-    base snapshot, evaluated under the writer lock so it holds for the
-    exact tree being merged against (the ANN add-batch verifies the
-    codes store's recorded model version matches the model the batch
-    was encoded under — r10 ADVICE). Raise to abort the merge."""
+    base snapshot, checked against the exact tree being merged against
+    (under the writer lock, or on every optimistic rebase — the ANN
+    add-batch verifies the codes store's recorded model version matches
+    the model the batch was encoded under, r10 ADVICE). Raise to abort
+    the merge. ``stamp(staged_dir)`` — optional metadata writer run on
+    a first commit's staged tree before it publishes (the ANN add-batch
+    records the model version a codes store is born under); later
+    commits carry it forward through the hardlinks."""
     sort_key = sort_key or anti_key
     if dedup_key is not None:
         new_df = new_df.dropDuplicates([dedup_key])
     if batch_distinct is None:
         batch_distinct = dedup_key == anti_key
     new_b = with_bucket(new_df, bucket_key) if bucket_key else new_df
-    # one evaluation of the batch side, OUTSIDE the lock (shrinks the
-    # lock window too) — see _maybe_materialize_batch
+    # one evaluation of the batch side for every attempt, before any
+    # lock or commit race — see _maybe_materialize_batch
     new_b = _maybe_materialize_batch(new_b)
-    # default-map touched set, collected OUTSIDE the lock: materializes
-    # the lazy checkpoint above in the same job and doubles as the
-    # empty-batch guard. Valid whenever the base is unsplit (the common
-    # case — _rebucket_for_base is then a no-op); a split base
-    # recomputes under the lock, exactly like the optimistic path.
+    # default-map touched set: materializes the lazy checkpoint above in
+    # the same job and doubles as the empty-batch guard. Valid whenever
+    # the base is unsplit (the common case — _rebucket_for_base is then
+    # a no-op); a split base recomputes it against its own map.
     default_touched = [
         r[prune_col] for r in new_b.select(prune_col).distinct().collect()
     ]
     if not default_touched:
         return 0
-    # ``publish_gate`` (see versioned.run_publish_ordered) runs BEFORE
-    # the lock: everything above is read-only batch evaluation that may
-    # overlap other arms; everything below (lock, resolve, stage,
-    # publish) starts only after the upstream arm fully committed — and
-    # no lock is ever held while waiting, so opposite-order writer
-    # chains cannot deadlock.
-    if publish_gate is not None:
-        publish_gate()
-    # The writer lock covers the WHOLE read → anti-join → stage → publish
-    # sequence, not just the staging write: a merge computed against a
-    # snapshot resolved outside the lock would race a concurrent writer's
-    # publish and re-stage from the stale tree, silently dropping the
-    # winner's rows (classic lost update). Serialized here, concurrent
-    # merge_write_* calls compose: each merges against the snapshot the
-    # previous writer published. Readers still take no lock — publish is
-    # an atomic pointer flip (see operators/versioned.py docstring;
-    # pinned by tests/test_versioned.py multi-process stress).
-    with versioned.writer_lock(path):
-        # a concurrent writer may have created the store between our
-        # caller's check and lock acquisition — re-check under the lock
-        if not has_parquet_data(path):
-            staged = new_b  # already materialized above when wide; a
-            # narrow batch stages straight from its (cheap) source plan
-            n = staged.count()
+
+    def stage(base_dir: str, vdir: str):
+        if not versioned.tree_has_data(base_dir):
+            # first commit: wide batches were materialized above, a
+            # narrow one stages straight from its (cheap) source plan
+            n = new_b.count()
             if n:
-                write_fn(staged, path)
-            return int(n)
-        spark.catalog.refreshByPath(path)
-        current_dir = versioned.data_dir(path)
+                _write_sorted(new_b, vdir, partitions, sort_key)
+                if stamp is not None:
+                    stamp(vdir)
+            return int(n), n > 0
         if base_guard is not None:
-            base_guard(current_dir)
+            base_guard(base_dir)
         # a SPLIT store's layout is defined by its snapshot's bucket map:
         # re-bucket the batch under it so the touched-partition probe and
         # the appended dirs match the base exactly (no-op when unsplit)
-        new_b, leaves = _rebucket_for_base(new_b, bucket_key, current_dir)
+        batch_b, leaves = _rebucket_for_base(new_b, bucket_key, base_dir)
+        touched = default_touched
         if leaves is not None:
             touched = [
                 r[prune_col]
-                for r in new_b.select(prune_col).distinct().collect()
+                for r in batch_b.select(prune_col).distinct().collect()
             ]
-            if not touched:
-                return 0
-        else:
-            touched = default_touched
-        existing = read_fn(spark, path).filter(F.col(prune_col).isin(touched))
-        new_cols = _check_merge_schema(
-            new_b.columns, existing.columns, allow_additive=allow_additive
+        existing = _read_tree(spark, base_dir).filter(
+            F.col(prune_col).isin(touched)
         )
-        # materialize before staging: the plan reads the current snapshot
-        # (the count below runs the lazy checkpoint — one job, not two)
-        fresh = new_b.join(
+        new_cols = _check_merge_schema(
+            batch_b.columns, existing.columns, allow_additive=allow_additive
+        )
+        # materialize BEFORE staging: after the count below (which runs
+        # the lazy checkpoint — one job, not two) the data lives in the
+        # block manager, decoupled from base files a competitor's prune
+        # might remove
+        fresh = batch_b.join(
             F.broadcast(
                 _matched_keys(
                     existing,
-                    new_b,
+                    batch_b,
                     anti_key,
                     batch_distinct=batch_distinct,
                     store_unique=batch_distinct,
@@ -677,197 +667,23 @@ def _merge_write(
             "left_anti",
         ).localCheckpoint(eager=False)
         n_fresh = fresh.count()
-        if not n_fresh:
-            return 0
-        # next snapshot = hardlinks of every current file (metadata-only)
-        # plus the fresh rows APPENDED as new files; publish is an atomic
-        # pointer flip, so concurrent readers see old or new, never
-        # partial.
-        version, vdir = versioned.stage_new(path)
-        versioned.link_tree(current_dir, vdir)
-        _append_fresh(fresh, vdir, partitions, sort_key, n_fresh)
-        if new_cols:
-            # the evolved logical schema: existing fields + the new
-            # columns (nullable — absent in every pre-evolution file)
-            _write_schema_sidecar(
-                vdir, _evolved_schema(existing.schema, new_b.schema, new_cols)
-            )
-        versioned.publish(path, version)
-        return int(n_fresh)
-
-
-#: commit-race rebase budget: each retry re-merges against the winner's
-#: tree, so this bounds pathological contention, not normal operation
-#: (N writers racing resolve in at most N rounds — every round commits
-#: someone).
-MAX_OPTIMISTIC_ATTEMPTS = 12
-
-
-def _merge_protocol(protocol: str | None) -> str:
-    """Per-call override > ``WCD_STORE_PROTOCOL`` env > ``lock``. One
-    table must be written under ONE protocol (see versioned.py §optimistic
-    docstring) — the switch exists per deployment, not per call site."""
-    p = protocol or os.environ.get("WCD_STORE_PROTOCOL", "lock")
-    if p not in ("lock", "optimistic"):
-        raise ValueError(f"unknown store write protocol {p!r}")
-    return p
-
-
-def _merge_write_optimistic(
-    spark: SparkSession,
-    new_df: DataFrame,
-    path: str,
-    *,
-    bucket_key: str | None,
-    anti_key: str,
-    partitions: list[str],
-    dedup_key: str | None,
-    prune_col: str = BUCKET_COL,
-    sort_key: str | None = None,
-    base_guard=None,
-    allow_additive: bool = False,
-    batch_distinct: bool | None = None,
-    publish_gate=None,
-) -> int:
-    """Lock-free MERGE under the optimistic commit protocol
-    (versioned.py §optimistic): resolve the base from the version LOG,
-    merge against it, stage under a writer-unique name, and let the
-    rename arbiter decide. Losing a commit race costs a rebase — the
-    merge recomputes against the winner's tree (exactly Delta's conflict
-    retry: recompute, re-commit) — and can never lose rows: the target
-    number is bound to the base, so a commit this writer didn't read
-    holds the very number it is about to claim. The write side is the
-    same APPEND-ONLY fresh-files-into-hardlinked-snapshot as the locked
-    engine: O(batch) bytes per commit. Returns fresh rows inserted.
-
-    A read racing a competitor's prune (our resolved base aged out while
-    we merged — takes KEEP_VERSIONS commits landing mid-merge, all older
-    than the RETAIN_SECS floor) surfaces as a read error; ONLY that
-    failure class is caught and rebased (``is_transient_read_race``) —
-    genuine defects (schema mismatch, analysis errors) surface
-    immediately instead of burning every retry (r9 ADVICE)."""
-    sort_key = sort_key or anti_key
-    if dedup_key is not None:
-        new_df = new_df.dropDuplicates([dedup_key])
-    if batch_distinct is None:
-        batch_distinct = dedup_key == anti_key
-    new_b = with_bucket(new_df, bucket_key) if bucket_key else new_df
-    # one evaluation of the batch side for every attempt/rebase — see
-    # _maybe_materialize_batch
-    new_b = _maybe_materialize_batch(new_b)
-    # doubles as the empty-batch guard: no touched partitions == no rows
-    # (saves the separate isEmpty job per commit)
-    touched = [
-        r[prune_col] for r in new_b.select(prune_col).distinct().collect()
-    ]
-    if not touched:
-        return 0
-    # the default-map touched list, kept so a rebase landing on a base
-    # WITHOUT a bucket manifest (e.g. a restore republished a pre-split
-    # tree after an earlier attempt computed a split-map list) resets to
-    # the list matching new_b's default buckets instead of filtering the
-    # wrong partitions with a stale split-map list (r11 ADVICE)
-    default_touched = touched
-    last_err: Exception | None = None
-    for attempt in range(MAX_OPTIMISTIC_ATTEMPTS):
-        if attempt:
-            time.sleep(0.05 * attempt)
-        base, base_dir, target = versioned.resolve_latest(path)
-        if base is None and _tree_has_parquet(path):
-            # a legacy (pre-versioning) root mixes its data files with
-            # in-flight stagings in ONE directory, so a lock-free read of
-            # it could list a competitor's half-written files. Migration
-            # to the versioned layout is a one-time locked write.
-            raise ValueError(
-                f"optimistic writes need a versioned store; migrate the "
-                f"legacy root {path} with one locked merge_write first"
-            )
-        try:
-            spark.catalog.refreshByPath(base_dir)
-            if not _tree_has_parquet(base_dir):
-                # first commit: never write a legacy root — the store is
-                # born versioned, and two racing first-writers are
-                # arbitrated on v00000001 like any other number
-                staged = new_b  # wide batches were materialized above
-                n = staged.count()
-                vdir = versioned.stage_optimistic(path, target)
-                (
-                    staged.sortWithinPartitions(*partitions, sort_key)
-                    .write.mode("overwrite")
-                    .partitionBy(*partitions)
-                    .parquet(vdir)
-                )
-                if publish_gate is not None:
-                    publish_gate()  # lock-free: gate only the commit
-                if versioned.try_publish(path, target, vdir):
-                    return int(n)
-                continue
-            if base_guard is not None:
-                # re-checked on EVERY rebase: the race the guard exists
-                # for (a retrain publishing between encode and commit)
-                # can equally land between two attempts (r10 ADVICE)
-                base_guard(base_dir)
-            # a split store's bucket map binds to THIS base — re-bucket
-            # and recompute the touched set per attempt (a rebase may
-            # land on a tree a concurrent split just published)
-            batch_b, leaves = _rebucket_for_base(new_b, bucket_key, base_dir)
-            if leaves is not None:
-                touched = [
-                    r[prune_col]
-                    for r in batch_b.select(prune_col).distinct().collect()
-                ]
-            else:
-                touched = default_touched
-            existing = _read_tree(spark, base_dir).filter(
-                F.col(prune_col).isin(touched)
-            )
-            new_cols = _check_merge_schema(
-                batch_b.columns, existing.columns, allow_additive=allow_additive
-            )
-            # materialize BEFORE staging: after the count below (which
-            # runs the lazy checkpoint — one job, not two) the data
-            # lives in the block manager, decoupled from base files a
-            # competitor's prune might remove
-            fresh = batch_b.join(
-                F.broadcast(
-                    _matched_keys(
-                        existing,
-                        batch_b,
-                        anti_key,
-                        batch_distinct=batch_distinct,
-                        store_unique=batch_distinct,
-                    )
-                ),
-                anti_key,
-                "left_anti",
-            ).localCheckpoint(eager=False)
-            n_fresh = fresh.count()
-            if not n_fresh:
-                # every row already present in base — and merges never
-                # delete, so present in every later version too: nothing
-                # to publish regardless of who else commits
-                return 0
-            vdir = versioned.stage_optimistic(path, target)
+        if n_fresh:
+            # next snapshot = hardlinks of every base file (metadata-
+            # only) plus the fresh rows APPENDED as new files
             versioned.link_tree(base_dir, vdir)
             _append_fresh(fresh, vdir, partitions, sort_key, n_fresh)
             if new_cols:
+                # the evolved logical schema: existing fields + the new
+                # columns (nullable — absent in every pre-evolution file)
                 _write_schema_sidecar(
                     vdir,
                     _evolved_schema(existing.schema, batch_b.schema, new_cols),
                 )
-            if publish_gate is not None:
-                publish_gate()  # lock-free: gate only the commit
-            if versioned.try_publish(path, target, vdir):
-                return int(n_fresh)
-        except Exception as e:
-            if not versioned.is_transient_read_race(e):
-                raise  # genuine defect — not the pruned-base race
-            last_err = e
-            continue
-    raise TimeoutError(
-        f"optimistic merge into {path} lost {MAX_OPTIMISTIC_ATTEMPTS} "
-        f"commit races"
-    ) from last_err
+        # an all-present batch publishes nothing: merges never delete,
+        # so its rows stay present in every later version too
+        return int(n_fresh), n_fresh > 0
+
+    return versioned.commit(path, protocol, stage, publish_gate)
 
 
 def merge_write_items(
@@ -883,18 +699,6 @@ def merge_write_items(
     ``allow_additive=True`` opts into additive schema evolution (new batch
     columns land in fresh files only, old rows read as null — Delta's
     mergeSchema); the default keeps drift LOUD."""
-    if _merge_protocol(protocol) == "optimistic":
-        _merge_write_optimistic(
-            spark,
-            new_items,
-            path,
-            bucket_key="hash",
-            anti_key="hash",
-            partitions=["instance_of", BUCKET_COL],
-            dedup_key="hash",
-            allow_additive=allow_additive,
-        )
-        return
     _merge_write(
         spark,
         new_items,
@@ -903,9 +707,8 @@ def merge_write_items(
         anti_key="hash",
         partitions=["instance_of", BUCKET_COL],
         dedup_key="hash",
-        read_fn=read_items,
-        write_fn=_write_items_unlocked,
         allow_additive=allow_additive,
+        protocol=protocol,
     )
 
 
@@ -924,18 +727,6 @@ def merge_write_claims(
     store-side backstop). Never row-level dedup — claims differing only in
     qualifiers or value_quantity must both survive (duplicate-page batches
     are deduped on page_id before the pipeline, not here)."""
-    if _merge_protocol(protocol) == "optimistic":
-        _merge_write_optimistic(
-            spark,
-            new_claims,
-            path,
-            bucket_key="subject_qid",
-            anti_key="subject_qid",
-            partitions=["property", BUCKET_COL],
-            dedup_key=None,
-            allow_additive=allow_additive,
-        )
-        return
     _merge_write(
         spark,
         new_claims,
@@ -944,9 +735,8 @@ def merge_write_claims(
         anti_key="subject_qid",
         partitions=["property", BUCKET_COL],
         dedup_key=None,
-        read_fn=read_claims,
-        write_fn=_write_claims_unlocked,
         allow_additive=allow_additive,
+        protocol=protocol,
     )
 
 
@@ -985,7 +775,7 @@ def _delete_plan(
     touched_prunes: list,
     keys_unique: bool = False,
 ):
-    """Shared read-side body of both delete protocols, against an
+    """Read-side body of :func:`delete_from_store`, against an
     already-resolved immutable snapshot: returns ``(n_doomed,
     touched_tuples, exclude_relpaths, kept_df)`` where ``kept_df`` is the
     MATERIALIZED rewrite content for the touched partitions (empty
@@ -1050,20 +840,6 @@ def _delete_plan(
     return n_doomed, stats, exclude, kept
 
 
-def _write_kept(
-    kept: DataFrame, vdir: str, partitions: list[str], sort_key: str
-) -> None:
-    """One task per rewritten partition tuple → exactly one file each,
-    sorted (partition cols, lookup key) like every store writer."""
-    (
-        kept.repartition(*[F.col(c) for c in partitions])
-        .sortWithinPartitions(*partitions, sort_key)
-        .write.mode("append")
-        .partitionBy(*partitions)
-        .parquet(vdir)
-    )
-
-
 def delete_from_store(
     spark: SparkSession,
     doomed_keys: DataFrame,
@@ -1093,7 +869,8 @@ def delete_from_store(
     stores; pass ``None`` when ``doomed_keys`` already carries
     ``prune_col`` (the ANN codes store's domain-derived ``cluster``).
     ``protocol="optimistic"`` (or ``WCD_STORE_PROTOCOL``) commits
-    lock-free through the rename arbiter like every other writer."""
+    lock-free through the rename arbiter like every other writer
+    (``versioned.commit``). An empty store deletes nothing."""
     sort_key = sort_key or key
     keys_b = (
         with_bucket(doomed_keys.select(key), key)
@@ -1106,134 +883,39 @@ def delete_from_store(
     # callers pass doomed_keys that are themselves joins/aggregates —
     # evaluate wide key plans ONCE (see _maybe_materialize_batch)
     keys_b = _maybe_materialize_batch(keys_b)
-    touched_prunes = [
+    default_prunes = [
         r[prune_col] for r in keys_b.select(prune_col).distinct().collect()
     ]
-    if not touched_prunes:
+    if not default_prunes:
         return 0
-    if _merge_protocol(protocol) == "optimistic":
-        return _delete_from_store_optimistic(
-            spark,
-            keys_b,
-            path,
-            key=key,
-            bucket_key=bucket_key,
-            partitions=partitions,
-            prune_col=prune_col,
-            sort_key=sort_key,
-            touched_prunes=touched_prunes,
-            keys_unique=keys_unique,
-            publish_gate=publish_gate,
-        )
-    # see _merge_write: the gate runs BEFORE the lock (overlap the
-    # batch-side evaluation above; never hold a lock while waiting)
-    if publish_gate is not None:
-        publish_gate()
-    with versioned.writer_lock(path):
-        if not has_parquet_data(path):
-            return 0
-        spark.catalog.refreshByPath(path)
-        current_dir = versioned.data_dir(path)
+
+    def stage(base_dir: str, vdir: str):
+        if not versioned.tree_has_data(base_dir):
+            return 0, False
         # split stores: the doomed keys' buckets follow the snapshot's map
-        keys_b, leaves = _rebucket_for_base(keys_b, bucket_key, current_dir)
+        batch_keys, leaves = _rebucket_for_base(keys_b, bucket_key, base_dir)
+        touched_prunes = default_prunes
         if leaves is not None:
             touched_prunes = [
                 r[prune_col]
-                for r in keys_b.select(prune_col).distinct().collect()
+                for r in batch_keys.select(prune_col).distinct().collect()
             ]
         n_doomed, _stats, exclude, kept = _delete_plan(
             spark,
-            current_dir,
-            keys_b,
+            base_dir,
+            batch_keys,
             key=key,
             partitions=partitions,
             prune_col=prune_col,
             touched_prunes=touched_prunes,
             keys_unique=keys_unique,
         )
-        if not n_doomed:
-            return 0
-        version, vdir = versioned.stage_new(path)
-        versioned.link_tree(current_dir, vdir, exclude_rel_dirs=exclude)
-        _write_kept(kept, vdir, partitions, sort_key)
-        versioned.publish(path, version)
-        return n_doomed
-
-
-def _delete_from_store_optimistic(
-    spark: SparkSession,
-    keys_b: DataFrame,
-    path: str,
-    *,
-    key: str,
-    bucket_key: str | None,
-    partitions: list[str],
-    prune_col: str,
-    sort_key: str,
-    touched_prunes: list,
-    keys_unique: bool = False,
-    publish_gate=None,
-) -> int:
-    """Lock-free :func:`delete_from_store` body: same pruned
-    copy-on-write, committed through the rename arbiter. A lost race
-    rebases — the winner may have APPENDED new rows into a touched
-    partition (or even re-inserted a doomed key), so the kept-content
-    recompute against the winner's tree is required for correctness,
-    exactly like the MERGE rebase. Only the transient pruned-base read
-    race is retried; real defects surface immediately."""
-    # see _merge_write_optimistic: reset to the default-map list when a
-    # rebase lands on a manifest-less base (r11 ADVICE)
-    default_touched = list(touched_prunes)
-    last_err: Exception | None = None
-    for attempt in range(MAX_OPTIMISTIC_ATTEMPTS):
-        if attempt:
-            time.sleep(0.05 * attempt)
-        base, base_dir, target = versioned.resolve_latest(path)
-        if base is None:
-            if _tree_has_parquet(path):
-                raise ValueError(
-                    f"optimistic deletes need a versioned store; migrate "
-                    f"the legacy root {path} with one locked write first"
-                )
-            return 0  # empty store: nothing to delete
-        try:
-            spark.catalog.refreshByPath(base_dir)
-            batch_keys, leaves = _rebucket_for_base(keys_b, bucket_key, base_dir)
-            if leaves is not None:
-                touched_prunes = [
-                    r[prune_col]
-                    for r in batch_keys.select(prune_col).distinct().collect()
-                ]
-            else:
-                touched_prunes = default_touched
-            n_doomed, _stats, exclude, kept = _delete_plan(
-                spark,
-                base_dir,
-                batch_keys,
-                key=key,
-                partitions=partitions,
-                prune_col=prune_col,
-                touched_prunes=touched_prunes,
-                keys_unique=keys_unique,
-            )
-            if not n_doomed:
-                return 0
-            vdir = versioned.stage_optimistic(path, target)
+        if n_doomed:
             versioned.link_tree(base_dir, vdir, exclude_rel_dirs=exclude)
-            _write_kept(kept, vdir, partitions, sort_key)
-            if publish_gate is not None:
-                publish_gate()  # lock-free: gate only the commit
-            if versioned.try_publish(path, target, vdir):
-                return n_doomed
-        except Exception as e:
-            if not versioned.is_transient_read_race(e):
-                raise
-            last_err = e
-            continue
-    raise TimeoutError(
-        f"optimistic delete from {path} lost {MAX_OPTIMISTIC_ATTEMPTS} "
-        f"commit races"
-    ) from last_err
+            _write_sorted(kept, vdir, partitions, sort_key, per_dir=True)
+        return n_doomed, n_doomed > 0
+
+    return versioned.commit(path, protocol, stage, publish_gate)
 
 
 def upsert_into_store(
@@ -1265,262 +947,145 @@ def upsert_into_store(
     fast path stays :func:`_merge_write` — cheaper (append-only, no
     bucket rewrite) whenever existing rows must win.
 
-    Returns ``{"updated": n, "inserted": n}``."""
+    Returns ``{"updated": n, "inserted": n}``; an empty store's first
+    commit inserts the whole batch."""
     sort_key = sort_key or key
     new_df = new_df.dropDuplicates([key])
     new_b = with_bucket(new_df, bucket_key) if bucket_key else new_df
-    if _merge_protocol(protocol) == "optimistic":
-        return _upsert_into_store_optimistic(
-            spark,
-            new_b,
-            path,
-            key=key,
-            bucket_key=bucket_key,
-            partitions=partitions,
-            prune_col=prune_col,
-            sort_key=sort_key,
-            allow_additive=allow_additive,
-        )
-    with versioned.writer_lock(path):
-        if not has_parquet_data(path):
-            staged = new_b.localCheckpoint(eager=False)
-            n = staged.count()  # runs the lazy checkpoint — one job
+
+    def stage(base_dir: str, vdir: str):
+        if not versioned.tree_has_data(base_dir):
+            batch = new_b.localCheckpoint(eager=False)
+            n = batch.count()  # runs the lazy checkpoint — one job
             if n:
-                version, vdir = versioned.stage_new(path)
-                (
-                    staged.sortWithinPartitions(*partitions, sort_key)
-                    .write.mode("overwrite")
-                    .partitionBy(*partitions)
-                    .parquet(vdir)
-                )
-                versioned.publish(path, version)
-            return {"updated": 0, "inserted": int(n)}
-        spark.catalog.refreshByPath(path)
-        current_dir = versioned.data_dir(path)
-        new_b, _leaves = _rebucket_for_base(new_b, bucket_key, current_dir)
-        res = _stage_upsert(
-            spark,
-            path,
-            current_dir,
-            new_b,
-            key=key,
-            partitions=partitions,
-            prune_col=prune_col,
-            sort_key=sort_key,
-            allow_additive=allow_additive,
-            staged_dir=None,
+                _write_sorted(batch, vdir, partitions, sort_key)
+            return {"updated": 0, "inserted": int(n)}, n > 0
+        # the touched partition set is batch dirs ∪ matched-row dirs (an
+        # update may MOVE a row when a non-bucket partition value
+        # changed, e.g. a reclassified ``instance_of``); hardlinks for
+        # everything else, touched partitions rewritten as kept ∪ batch.
+        # A lost optimistic race recomputes all of it against the
+        # winner's tree (a concurrent merge may have inserted rows this
+        # upsert must now replace).
+        batch_b, _leaves = _rebucket_for_base(new_b, bucket_key, base_dir)
+        snap = _read_tree(spark, base_dir)
+        new_cols = _check_merge_schema(
+            batch_b.columns, snap.columns, allow_additive=allow_additive
         )
-        versioned.publish(path, res.pop("_version"))
-        return res
-
-
-def _stage_upsert(
-    spark,
-    path,
-    base_dir,
-    new_b,
-    *,
-    key,
-    partitions,
-    prune_col,
-    sort_key,
-    allow_additive,
-    staged_dir,
-):
-    """Shared upsert body against a resolved base snapshot: compute the
-    touched partition set (batch dirs ∪ matched-row dirs — an update may
-    MOVE a row when a non-bucket partition value changed, e.g. a
-    reclassified ``instance_of``), stage hardlinks for everything else,
-    and rewrite touched partitions as kept ∪ batch. Returns
-    {updated, inserted, "_version"}."""
-    snap = _read_tree(spark, base_dir)
-    new_cols = _check_merge_schema(
-        new_b.columns, snap.columns, allow_additive=allow_additive
-    )
-    batch = new_b.localCheckpoint(eager=False)
-    # ONE grouped pass (which runs the lazy checkpoint) yields the batch
-    # row count, the touched buckets, and the batch's partition tuples —
-    # previously three separate jobs (r15). prune_col is one of the
-    # partition columns for every store layout this engine serves; the
-    # generic fallback keeps the old per-question jobs.
-    if prune_col in partitions:
-        batch_rows = (
-            batch.groupBy(*partitions).agg(F.count("*").alias("_n")).collect()
-        )
-        n_batch = int(sum(r["_n"] for r in batch_rows))
-        touched_prunes = sorted({r[prune_col] for r in batch_rows})
-    else:
-        n_batch = batch.count()
-        touched_prunes = [
-            r[prune_col]
-            for r in batch.select(prune_col).distinct().collect()
-        ]
-        batch_rows = batch.select(*partitions).distinct().collect()
-    pruned = snap.filter(F.col(prune_col).isin(touched_prunes))
-    # the batch is deduped on `key` upstream (both protocol entry
-    # points), so select(key) is already distinct — no extra exchange
-    # inside the broadcast build
-    keys_only = F.broadcast(batch.select(key))
-    # one annotated pass over the candidate buckets (see _delete_plan):
-    # the matched stats, the matched-key count, and the kept rewrite
-    # content below all derive from this one materialized scan — the
-    # previous shape read the pruned store three times
-    marked = pruned.join(
-        keys_only.withColumn("_matched", F.lit(True)), key, "left"
-    ).localCheckpoint(eager=False)
-    # the updated/inserted split counts matched BATCH KEYS, not matched
-    # store rows: a layout whose key is not unique per row (the
-    # claims-shaped stores this generic API accepts) holds several rows
-    # per key, which would inflate "updated" and skew "inserted"
-    # negative (r11 ADVICE). The rollup folds the row-grained
-    # per-partition stats (grouping level 0 — they feed only the
-    # touched-partition set) and the global distinct-key count into ONE
-    # aggregation pass, which also runs the marked scan's lazy
-    # checkpoint (r15; two jobs before).
-    grouped = (
-        marked.filter(F.col("_matched"))
-        .rollup(*partitions)
-        .agg(
-            F.count("*").alias("_n"),
-            F.countDistinct(key).alias("_k"),
-            F.grouping_id().alias("_g"),
-        )
-        .collect()
-    )
-    matched_stats = [r for r in grouped if r["_g"] == 0]
-    n_matched_keys = (
-        int(next(r["_k"] for r in grouped if r["_g"] == 2 ** len(partitions) - 1))
-        if matched_stats
-        else 0
-    )
-    matched_tuples = {tuple(r[c] for c in partitions) for r in matched_stats}
-    touched = matched_tuples | {
-        tuple(r[c] for c in partitions) for r in batch_rows
-    }
-    touched_rows = [dict(zip(partitions, t)) for t in sorted(touched)]
-    exclude = set()
-    for r in touched_rows:
-        rel = _partition_relpath(r, partitions)
-        if os.path.isdir(os.path.join(base_dir, rel)):
-            exclude.add(rel)
-        elif tuple(r[c] for c in partitions) in matched_tuples:
-            # a BATCH-only tuple may legitimately be absent (brand-new
-            # partition: nothing to exclude), but every matched tuple
-            # came from real base files — a missing constructed dir is a
-            # value-escaping mismatch, and hardlinking it would keep the
-            # matched rows alongside their replacements while the batch
-            # rows append duplicates: fail loudly like _delete_plan
-            # instead of silently corrupting the store (r11 ADVICE)
-            raise ValueError(
-                f"matched partition dir not found under {base_dir}: {rel}"
-                f" — value escaping mismatch; refusing an unpruned upsert"
+        batch = batch_b.localCheckpoint(eager=False)
+        # ONE grouped pass (which runs the lazy checkpoint) yields the batch
+        # row count, the touched buckets, and the batch's partition tuples —
+        # previously three separate jobs (r15). prune_col is one of the
+        # partition columns for every store layout this engine serves; the
+        # generic fallback keeps the old per-question jobs.
+        if prune_col in partitions:
+            batch_rows = (
+                batch.groupBy(*partitions)
+                .agg(F.count("*").alias("_n"))
+                .collect()
             )
-    kept = (
-        marked.filter(_partition_values_predicate(touched_rows, partitions))
-        .filter(F.col("_matched").isNull())
-        # the USING join moved `key` first — restore the snapshot's
-        # column order so rewritten files match the hardlinked ones
-        .select(*pruned.columns)
-    )
-    if new_cols:
-        # evolved columns: old kept rows read null via the base sidecar
-        # only if the store already evolved; otherwise align by adding
-        # the nulls explicitly so the union below is by-name complete
-        for f in new_b.schema.fields:
-            if f.name in set(new_cols):
-                kept = kept.withColumn(
-                    f.name, F.lit(None).cast(f.dataType)
-                )
-    content = kept.unionByName(batch)
-    if staged_dir is None:
-        version, vdir = versioned.stage_new(path)
-    else:
-        version, vdir = None, staged_dir
-    versioned.link_tree(base_dir, vdir, exclude_rel_dirs=exclude)
-    (
-        content.repartition(*[F.col(c) for c in partitions])
-        .sortWithinPartitions(*partitions, sort_key)
-        .write.mode("append")
-        .partitionBy(*partitions)
-        .parquet(vdir)
-    )
-    if new_cols:
-        _write_schema_sidecar(
-            vdir, _evolved_schema(snap.schema, new_b.schema, new_cols)
+            n_batch = int(sum(r["_n"] for r in batch_rows))
+            touched_prunes = sorted({r[prune_col] for r in batch_rows})
+        else:
+            n_batch = batch.count()
+            touched_prunes = [
+                r[prune_col]
+                for r in batch.select(prune_col).distinct().collect()
+            ]
+            batch_rows = batch.select(*partitions).distinct().collect()
+        pruned = snap.filter(F.col(prune_col).isin(touched_prunes))
+        # the batch is deduped on `key` above, so select(key) is already
+        # distinct — no extra exchange inside the broadcast build
+        keys_only = F.broadcast(batch.select(key))
+        # one annotated pass over the candidate buckets (see _delete_plan):
+        # the matched stats, the matched-key count, and the kept rewrite
+        # content below all derive from this one materialized scan — the
+        # previous shape read the pruned store three times
+        marked = pruned.join(
+            keys_only.withColumn("_matched", F.lit(True)), key, "left"
+        ).localCheckpoint(eager=False)
+        # the updated/inserted split counts matched BATCH KEYS, not matched
+        # store rows: a layout whose key is not unique per row (the
+        # claims-shaped stores this generic API accepts) holds several rows
+        # per key, which would inflate "updated" and skew "inserted"
+        # negative (r11 ADVICE). The rollup folds the row-grained
+        # per-partition stats (grouping level 0 — they feed only the
+        # touched-partition set) and the global distinct-key count into ONE
+        # aggregation pass, which also runs the marked scan's lazy
+        # checkpoint (r15; two jobs before).
+        grouped = (
+            marked.filter(F.col("_matched"))
+            .rollup(*partitions)
+            .agg(
+                F.count("*").alias("_n"),
+                F.countDistinct(key).alias("_k"),
+                F.grouping_id().alias("_g"),
+            )
+            .collect()
         )
-    return {
-        "updated": n_matched_keys,
-        "inserted": int(n_batch - n_matched_keys),
-        "_version": version,
-    }
-
-
-def _upsert_into_store_optimistic(
-    spark,
-    new_b,
-    path,
-    *,
-    key,
-    bucket_key,
-    partitions,
-    prune_col,
-    sort_key,
-    allow_additive,
-) -> dict:
-    """Lock-free upsert: the rebase recomputes kept ∪ batch against the
-    winner's tree (a concurrent merge may have inserted rows the upsert
-    must now replace). Only the transient pruned-base race retries."""
-    last_err: Exception | None = None
-    for attempt in range(MAX_OPTIMISTIC_ATTEMPTS):
-        if attempt:
-            time.sleep(0.05 * attempt)
-        base, base_dir, target = versioned.resolve_latest(path)
-        if base is None:
-            if _tree_has_parquet(path):
+        matched_stats = [r for r in grouped if r["_g"] == 0]
+        top = 2 ** len(partitions) - 1  # the grand-total grouping level
+        n_matched_keys = (
+            int(next(r["_k"] for r in grouped if r["_g"] == top))
+            if matched_stats
+            else 0
+        )
+        matched_tuples = {
+            tuple(r[c] for c in partitions) for r in matched_stats
+        }
+        touched = matched_tuples | {
+            tuple(r[c] for c in partitions) for r in batch_rows
+        }
+        touched_rows = [dict(zip(partitions, t)) for t in sorted(touched)]
+        exclude = set()
+        for r in touched_rows:
+            rel = _partition_relpath(r, partitions)
+            if os.path.isdir(os.path.join(base_dir, rel)):
+                exclude.add(rel)
+            elif tuple(r[c] for c in partitions) in matched_tuples:
+                # a BATCH-only tuple may legitimately be absent (brand-new
+                # partition: nothing to exclude), but every matched tuple
+                # came from real base files — a missing constructed dir is a
+                # value-escaping mismatch, and hardlinking it would keep the
+                # matched rows alongside their replacements while the batch
+                # rows append duplicates: fail loudly like _delete_plan
+                # instead of silently corrupting the store (r11 ADVICE)
                 raise ValueError(
-                    f"optimistic upserts need a versioned store; migrate "
-                    f"the legacy root {path} with one locked write first"
+                    f"matched partition dir not found under {base_dir}: "
+                    f"{rel} — value escaping mismatch; refusing an "
+                    f"unpruned upsert"
                 )
-            staged = new_b.localCheckpoint(eager=False)
-            n = staged.count()  # runs the lazy checkpoint — one job
-            vdir = versioned.stage_optimistic(path, target)
-            (
-                staged.sortWithinPartitions(*partitions, sort_key)
-                .write.mode("overwrite")
-                .partitionBy(*partitions)
-                .parquet(vdir)
+        kept = (
+            marked.filter(
+                _partition_values_predicate(touched_rows, partitions)
             )
-            if versioned.try_publish(path, target, vdir):
-                return {"updated": 0, "inserted": int(n)}
-            continue
-        try:
-            spark.catalog.refreshByPath(base_dir)
-            batch, _leaves = _rebucket_for_base(new_b, bucket_key, base_dir)
-            vdir = versioned.stage_optimistic(path, target)
-            res = _stage_upsert(
-                spark,
-                path,
-                base_dir,
-                batch,
-                key=key,
-                partitions=partitions,
-                prune_col=prune_col,
-                sort_key=sort_key,
-                allow_additive=allow_additive,
-                staged_dir=vdir,
+            .filter(F.col("_matched").isNull())
+            # the USING join moved `key` first — restore the snapshot's
+            # column order so rewritten files match the hardlinked ones
+            .select(*pruned.columns)
+        )
+        if new_cols:
+            # evolved columns: old kept rows read null via the base sidecar
+            # only if the store already evolved; otherwise align by adding
+            # the nulls explicitly so the union below is by-name complete
+            for f in batch_b.schema.fields:
+                if f.name in set(new_cols):
+                    kept = kept.withColumn(
+                        f.name, F.lit(None).cast(f.dataType)
+                    )
+        content = kept.unionByName(batch)
+        versioned.link_tree(base_dir, vdir, exclude_rel_dirs=exclude)
+        _write_sorted(content, vdir, partitions, sort_key, per_dir=True)
+        if new_cols:
+            _write_schema_sidecar(
+                vdir, _evolved_schema(snap.schema, batch_b.schema, new_cols)
             )
-            res.pop("_version")
-            if versioned.try_publish(path, target, vdir):
-                return res
-        except Exception as e:
-            if not versioned.is_transient_read_race(e):
-                raise
-            last_err = e
-            continue
-    raise TimeoutError(
-        f"optimistic upsert into {path} lost {MAX_OPTIMISTIC_ATTEMPTS} "
-        f"commit races"
-    ) from last_err
+        return {
+            "updated": n_matched_keys,
+            "inserted": int(n_batch - n_matched_keys),
+        }, True
+
+    return versioned.commit(path, protocol, stage)
 
 
 def upsert_write_items(
@@ -1574,122 +1139,53 @@ def split_bucket(
     buckets keep the base layout. Returns
     ``{"bucket", "children", "depth", "rows_moved"}``.
 
-    :raises ValueError: when ``bucket`` is not currently a leaf."""
+    :raises ValueError: when ``bucket`` is not currently a leaf, or
+        the store is empty."""
     sort_key = sort_key or key
-    if _merge_protocol(protocol) == "optimistic":
-        return _split_bucket_optimistic(
-            spark, path, bucket, key=key, partitions=partitions,
-            sort_key=sort_key,
-        )
-    with versioned.writer_lock(path):
-        if not has_parquet_data(path):
+
+    def stage(base_dir: str, vdir: str):
+        # a lost optimistic race re-runs this against the winner's tree,
+        # whose new rows in the split bucket must be redistributed too
+        if not versioned.tree_has_data(base_dir):
             raise ValueError(f"cannot split bucket of empty store {path}")
-        spark.catalog.refreshByPath(path)
-        current_dir = versioned.data_dir(path)
-        n, vdir, info = _stage_split(
-            spark, path, current_dir, bucket, key, partitions, sort_key,
-            staged_dir=None,
-        )
-        versioned.publish(path, info.pop("_version"))
-        return info
-
-
-def _split_leaf_layout(current_dir: str, bucket: int):
-    """(old leaves, new leaves, child id, depth) for splitting ``bucket``."""
-    leaves = _bucket_leaves(current_dir)
-    if leaves is None:
-        leaves = {b: 0 for b in range(N_BUCKETS)}
-    if bucket not in leaves:
-        raise ValueError(
-            f"bucket {bucket} is not a leaf; leaves: {sorted(leaves)}"
-        )
-    d = leaves[bucket]
-    child = bucket + N_BUCKETS * (2 ** d)
-    new_leaves = dict(leaves)
-    new_leaves[bucket] = d + 1
-    new_leaves[child] = d + 1
-    return leaves, new_leaves, child, d
-
-
-def _stage_split(
-    spark, path, current_dir, bucket, key, partitions, sort_key, staged_dir
-):
-    """Shared split body: stage the post-split tree (hardlink everything
-    except the split bucket's dirs, rewrite its rows under the child
-    map, bump the manifest). Returns (rows_moved, staged_dir, info)."""
-    _old, new_leaves, child, d = _split_leaf_layout(current_dir, bucket)
-    snap = _read_tree(spark, current_dir)
-    rows = (
-        snap.filter(F.col(BUCKET_COL) == bucket)
-        .drop(BUCKET_COL)
-        .withColumn(BUCKET_COL, _bucket_column(key, new_leaves))
-        .localCheckpoint(eager=False)  # the count below runs it
-    )
-    n = rows.count()
-    exclude = set()
-    for root, dirs, _files in os.walk(current_dir):
-        for dname in dirs:
-            if dname == f"{BUCKET_COL}={bucket}":
-                exclude.add(
-                    os.path.relpath(os.path.join(root, dname), current_dir)
-                )
-    if staged_dir is None:
-        version, vdir = versioned.stage_new(path)
-    else:
-        version, vdir = None, staged_dir
-    versioned.link_tree(current_dir, vdir, exclude_rel_dirs=exclude)
-    if n:
-        (
-            rows.repartition(*[F.col(c) for c in partitions])
-            .sortWithinPartitions(*partitions, sort_key)
-            .write.mode("append")
-            .partitionBy(*partitions)
-            .parquet(vdir)
-        )
-    _write_bucket_manifest(vdir, new_leaves)
-    info = {
-        "bucket": int(bucket),
-        "children": [int(bucket), int(child)],
-        "depth": int(d + 1),
-        "rows_moved": int(n),
-        "_version": version,
-    }
-    return n, vdir, info
-
-
-def _split_bucket_optimistic(
-    spark, path, bucket, *, key, partitions, sort_key
-) -> dict:
-    """Lock-free split: same staged tree, committed through the rename
-    arbiter. Losing to a concurrent merge is the correct outcome — the
-    winner's new rows in the split bucket must be redistributed too, so
-    the rebase recomputes against the winner's tree."""
-    last_err: Exception | None = None
-    for attempt in range(MAX_OPTIMISTIC_ATTEMPTS):
-        if attempt:
-            time.sleep(0.05 * attempt)
-        base, base_dir, target = versioned.resolve_latest(path)
-        if base is None:
-            raise ValueError(f"cannot split bucket of empty store {path}")
-        try:
-            spark.catalog.refreshByPath(base_dir)
-            vdir = versioned.stage_optimistic(path, target)
-            _n, vdir, info = _stage_split(
-                spark, path, base_dir, bucket, key, partitions, sort_key,
-                staged_dir=vdir,
+        leaves = _bucket_leaves(base_dir) or {
+            b: 0 for b in range(N_BUCKETS)
+        }
+        if bucket not in leaves:
+            raise ValueError(
+                f"bucket {bucket} is not a leaf; leaves: {sorted(leaves)}"
             )
-            info.pop("_version")
-            if versioned.try_publish(path, target, vdir):
-                return info
-        except Exception as e:
-            if not versioned.is_transient_read_race(e):
-                raise
-            last_err = e
-            continue
-    raise TimeoutError(
-        f"optimistic bucket split of {path} lost "
-        f"{MAX_OPTIMISTIC_ATTEMPTS} commit races"
-    ) from last_err
+        d = leaves[bucket]
+        child = bucket + N_BUCKETS * (2 ** d)
+        new_leaves = {**leaves, bucket: d + 1, child: d + 1}
+        rows = (
+            _read_tree(spark, base_dir)
+            .filter(F.col(BUCKET_COL) == bucket)
+            .drop(BUCKET_COL)
+            .withColumn(BUCKET_COL, _bucket_column(key, new_leaves))
+            .localCheckpoint(eager=False)  # the count below runs it
+        )
+        n = rows.count()
+        exclude = set()
+        for root, dirs, _files in os.walk(base_dir):
+            for dname in dirs:
+                if dname == f"{BUCKET_COL}={bucket}":
+                    exclude.add(
+                        os.path.relpath(os.path.join(root, dname), base_dir)
+                    )
+        versioned.link_tree(base_dir, vdir, exclude_rel_dirs=exclude)
+        if n:
+            _write_sorted(rows, vdir, partitions, sort_key, per_dir=True)
+        _write_bucket_manifest(vdir, new_leaves)
+        info = {
+            "bucket": int(bucket),
+            "children": [int(bucket), int(child)],
+            "depth": int(d + 1),
+            "rows_moved": int(n),
+        }
+        return info, True
+
+    return versioned.commit(path, protocol, stage)
 
 
 def merge_delete_items(
@@ -1782,37 +1278,30 @@ def compact_store(
     Iceberg rewrite_data_files); this is the plain-parquet form on the
     same snapshot engine.
 
-    Mechanics mirror :func:`_merge_write` exactly: under the writer
-    lock, find partitions holding more than ``max_files`` data files
-    (ONE engine-side aggregate over ``input_file_name`` — the result is
-    bounded by the partition SCHEMA, types x buckets, never data
-    volume), materialize just those partitions, hardlink the rest into
-    a staged version, dynamically overwrite the touched partitions with
-    one task per partition (repartition on the partition columns), and
-    flip the pointer. Readers see old or new, never partial; a reader
-    pinned to the old version keeps its small files (hardlinks keep
-    inodes alive). A store already compact publishes NOTHING.
+    Mechanics, as one ``versioned.commit`` stage: find partitions
+    holding more than ``max_files`` data files (ONE engine-side
+    aggregate over ``input_file_name`` — the result is bounded by the
+    partition SCHEMA, types x buckets, never data volume), hardlink the
+    base snapshot into the staged version, dynamically overwrite just
+    the over-filed partitions with one task per partition (repartition
+    on the partition columns), and publish. Readers see old or new,
+    never partial; a reader pinned to the old version keeps its small
+    files (hardlinks keep inodes alive). A store already compact (or
+    empty) publishes NOTHING.
 
     Returns ``{"compacted_partitions": n, "files_before": m}``.
 
     Under the optimistic protocol (``protocol="optimistic"`` or
-    ``WCD_STORE_PROTOCOL``) the same content rewrite commits through the
-    rename arbiter instead of the lock: compaction is just another
-    writer, and LOSING a race to a merge is the correct outcome — the
-    merge's new files make the just-computed layout stale, so the rebase
-    recomputes which partitions are still over-filed against the
-    winner's tree."""
-    if _merge_protocol(protocol) == "optimistic":
-        return _compact_store_optimistic(
-            spark, path, sort_key=sort_key, partitions=partitions,
-            max_files=max_files,
-        )
-    with versioned.writer_lock(path):
-        if not has_parquet_data(path):
-            return {"compacted_partitions": 0, "files_before": 0}
-        spark.catalog.refreshByPath(path)
-        current_dir = versioned.data_dir(path)
-        snap = _read_tree(spark, current_dir)
+    ``WCD_STORE_PROTOCOL``) compaction is just another writer, and
+    LOSING a race to a merge is the correct outcome — the merge's new
+    files make the just-computed layout stale, so the rebase recomputes
+    which partitions are still over-filed against the winner's tree."""
+    nothing = {"compacted_partitions": 0, "files_before": 0}
+
+    def stage(base_dir: str, vdir: str):
+        if not versioned.tree_has_data(base_dir):
+            return nothing, False
+        snap = _read_tree(spark, base_dir)
         over = (
             # input_file_name is non-deterministic: project it BEFORE
             # aggregating (Spark rejects it inside an aggregate argument)
@@ -1823,98 +1312,24 @@ def compact_store(
             .collect()
         )
         if not over:
-            return {"compacted_partitions": 0, "files_before": 0}
-        touched = snap.filter(
-            _partition_values_predicate(over, partitions)
+            return nothing, False
+        touched = snap.filter(_partition_values_predicate(over, partitions))
+        if not versioned.is_locked_stage(vdir):
+            # lock-free: a competitor's prune may remove the base files
+            # mid-write, so materialize before staging. Under the lock
+            # the base is stable and the write below is the plan's only
+            # consumer: one job instead of materialize + write (r15)
+            touched = touched.localCheckpoint(eager=True)
+        versioned.link_tree(base_dir, vdir)
+        _write_sorted(
+            touched, vdir, partitions, sort_key, per_dir=True, overwrite=True
         )
-        # one task per partition tuple -> exactly one output file each.
-        # Sort by (partition cols, lookup key): the prefix satisfies the
-        # dynamic-partition writer's required ordering, so it inserts NO
-        # sort of its own and the lookup-key order inside each file
-        # survives for row-group pruning.
-        # no checkpoint: under the writer lock the base tree is stable,
-        # the write below is the plan's only consumer, and it reads the
-        # CURRENT version dir while writing into the staged one — one
-        # job instead of materialize + write (r15)
-        staged = (
-            touched.repartition(*[F.col(c) for c in partitions])
-            .sortWithinPartitions(*partitions, sort_key)
-        )
-        version, vdir = versioned.stage_new(path)
-        versioned.link_tree(current_dir, vdir)
-        (
-            staged.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(*partitions)
-            .parquet(vdir)
-        )
-        versioned.publish(path, version)
         return {
             "compacted_partitions": len(over),
             "files_before": int(sum(r["n_files"] for r in over)),
-        }
+        }, True
 
-
-def _compact_store_optimistic(
-    spark: SparkSession,
-    path: str,
-    *,
-    sort_key: str,
-    partitions: list[str],
-    max_files: int,
-) -> dict:
-    """Lock-free :func:`compact_store` body — same mechanics, committed
-    through :func:`versioned.try_publish`. See compact_store docstring."""
-    last_err: Exception | None = None
-    for attempt in range(MAX_OPTIMISTIC_ATTEMPTS):
-        if attempt:
-            time.sleep(0.05 * attempt)
-        base, base_dir, target = versioned.resolve_latest(path)
-        if base is None:
-            # empty or legacy store: nothing versioned to compact
-            return {"compacted_partitions": 0, "files_before": 0}
-        try:
-            snap = _read_tree(spark, base_dir)
-            over = (
-                snap.select(
-                    *partitions, F.input_file_name().alias("_file")
-                )
-                .groupBy(*partitions)
-                .agg(F.countDistinct("_file").alias("n_files"))
-                .filter(F.col("n_files") > max_files)
-                .collect()
-            )
-            if not over:
-                return {"compacted_partitions": 0, "files_before": 0}
-            touched = snap.filter(
-                _partition_values_predicate(over, partitions)
-            )
-            staged = (
-                touched.repartition(*[F.col(c) for c in partitions])
-                .sortWithinPartitions(*partitions, sort_key)
-            ).localCheckpoint(eager=True)
-            vdir = versioned.stage_optimistic(path, target)
-            versioned.link_tree(base_dir, vdir)
-            (
-                staged.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy(*partitions)
-                .parquet(vdir)
-            )
-            if versioned.try_publish(path, target, vdir):
-                return {
-                    "compacted_partitions": len(over),
-                    "files_before": int(sum(r["n_files"] for r in over)),
-                }
-        except Exception as e:
-            if not versioned.is_transient_read_race(e):
-                raise  # genuine defect — not the pruned-base race
-            last_err = e
-            continue
-    raise TimeoutError(
-        f"optimistic compaction of {path} lost "
-        f"{MAX_OPTIMISTIC_ATTEMPTS} commit races"
-    ) from last_err
+    return versioned.commit(path, protocol, stage)
 
 
 def compact_items(spark: SparkSession, path: str) -> dict:

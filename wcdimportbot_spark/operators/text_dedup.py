@@ -743,26 +743,6 @@ def incremental_dedup(
 # ---------------------------------------------------------------------------
 
 
-def _write_hash_store_unlocked(df: DataFrame, path: str) -> None:
-    from wcdimportbot_spark.operators import sinks, versioned
-
-    version, vdir = versioned.stage_new(path)
-    sinks._sorted_on(sinks.with_bucket(df, "text_hash"), "text_hash").write.mode(
-        "overwrite"
-    ).partitionBy(sinks.BUCKET_COL).parquet(vdir)
-    versioned.publish(path, version)
-
-
-def _write_band_store_unlocked(df: DataFrame, path: str) -> None:
-    from wcdimportbot_spark.operators import sinks, versioned
-
-    version, vdir = versioned.stage_new(path)
-    sinks._sorted_on(sinks.with_bucket(df, "bk"), "bk").write.mode(
-        "overwrite"
-    ).partitionBy(sinks.BUCKET_COL).parquet(vdir)
-    versioned.publish(path, version)
-
-
 def _with_band_key(bands_rel: DataFrame) -> DataFrame:
     """Single-column merge key for the ATTRIBUTED band relation
     (text_hash, band, bucket): ``bk = text_hash#band`` — the MERGE
@@ -1115,42 +1095,14 @@ def dedup_index_merge(
         return g
 
     def _do() -> None:
-        if sinks._merge_protocol(protocol) == "optimistic":
-            # same bands-before-hashes crash ordering, committed
-            # lock-free through the rename arbiter (versioned.py
-            # §optimistic) — the multi-host form of the ingest loop.
-            # Kept serial; the caller's publish_gate still guards BOTH
-            # commits (an empty bands batch must not let the hashes
-            # commit jump the external order).
-            sinks._merge_write_optimistic(
-                spark,
-                _with_band_key(s_bands),
-                os.path.join(base_path, "bands"),
-                bucket_key="bk",
-                anti_key="bk",
-                partitions=[sinks.BUCKET_COL],
-                dedup_key="bk",
-                publish_gate=publish_gate,
-            )
-            sinks._merge_write_optimistic(
-                spark,
-                s_hashes,
-                os.path.join(base_path, "hashes"),
-                bucket_key="text_hash",
-                anti_key="text_hash",
-                partitions=[sinks.BUCKET_COL],
-                dedup_key="text_hash",
-                publish_gate=publish_gate,
-            )
-            return
-
         # the two merges OVERLAP their batch-side evaluation while the
         # bands-before-hashes publish ORDER is pinned by the gate chain
-        # (versioned.run_publish_ordered: gates run before any lock is
-        # taken, so no deadlock against the delete's opposite order).
-        # The external publish_gate is chained into BOTH arms: an
-        # empty-bands early return must not let the hashes publish jump
-        # the caller's ordering.
+        # (versioned.run_publish_ordered: the gates run before any lock
+        # is taken, so no deadlock against the delete's opposite order;
+        # lock-free commits run them before their rename). The external
+        # publish_gate is chained into BOTH arms: an empty-bands early
+        # return must not let the hashes publish jump the caller's
+        # ordering.
         def _bands_arm(gate):
             return sinks._merge_write(
                 spark,
@@ -1160,9 +1112,8 @@ def dedup_index_merge(
                 anti_key="bk",
                 partitions=[sinks.BUCKET_COL],
                 dedup_key="bk",
-                read_fn=sinks.read_snapshot,
-                write_fn=_write_band_store_unlocked,
                 publish_gate=_chain(publish_gate, gate),
+                protocol=protocol,
             )
 
         def _hashes_arm(gate):
@@ -1174,9 +1125,8 @@ def dedup_index_merge(
                 anti_key="text_hash",
                 partitions=[sinks.BUCKET_COL],
                 dedup_key="text_hash",
-                read_fn=sinks.read_snapshot,
-                write_fn=_write_hash_store_unlocked,
                 publish_gate=_chain(publish_gate, gate),
+                protocol=protocol,
             )
 
         versioned.run_publish_ordered([_bands_arm, _hashes_arm])

@@ -27,9 +27,13 @@ unchanged files. A store written before versioning existed (no
 ``_CURRENT``) keeps reading from the root; its first versioned write
 migrates it.
 
-**Concurrency contract.** One writer per table at a time: the sinks'
-whole MERGE sequence (resolve current snapshot → anti-join → stage →
-publish) runs under :func:`writer_lock` (an O_EXCL pid lock file; a
+**Concurrency contract.** Every store engine in ``operators/sinks.py``
+(and every store built on it) commits through :func:`commit`, or
+:func:`commit_full` for full rewrites — the one place that picks the
+write protocol. Under the default LOCK protocol,
+one writer per table at a time: the sinks' whole MERGE sequence
+(resolve current snapshot → anti-join → stage → publish) runs under
+:func:`writer_lock` (an O_EXCL pid lock file; a
 lock whose owner pid is dead is stolen, so a crashed writer never
 wedges the store). Holding the lock across the read as well as the
 write makes concurrent ``merge_write_*`` calls SERIALIZABLE — each
@@ -115,8 +119,9 @@ def run_publish_ordered(arms: list) -> list:
     Each arm is a callable taking one ``publish_gate`` argument — a
     zero-arg callable (or ``None`` for the first arm) the arm must pass
     through to its engine call (``_merge_write``/``delete_from_store``
-    ``publish_gate=``). The engines invoke the gate BEFORE acquiring
-    the store's writer lock, which gives two properties:
+    ``publish_gate=``). :func:`commit` invokes the gate BEFORE
+    acquiring the store's writer lock (lock-free commits: before their
+    rename), which gives two properties:
 
     - **publish order**: arm ``i``'s gate returns only after arm
       ``i-1`` has fully completed (its publish included), so the
@@ -131,8 +136,8 @@ def run_publish_ordered(arms: list) -> list:
       stores oppositely (merge bands→hashes vs delete hashes→bands).
 
     An arm that fails makes every later arm's gate raise (their
-    engines then abort BEFORE mutating; any already-staged snapshot
-    dirs are unpublished garbage the normal pruning removes), and the
+    engines then abort BEFORE mutating; :func:`commit` removes a
+    lock-free arm's already-staged snapshot dir), and the
     first failure in publish order is re-raised here. Returns the arm
     results in order."""
     import threading
@@ -220,6 +225,12 @@ def epoch_bump(base_path: str, fname: str) -> None:
 #: attempts of one :func:`epoch_bracket` before it fails loudly
 #: (adversarial scheduling only — the no-race path runs one attempt)
 REPAIR_ATTEMPTS = 5
+
+#: commit-race rebase budget of one optimistic :func:`commit`: each
+#: retry re-stages against the winner's tree, so this bounds
+#: pathological contention, not normal operation (N writers racing
+#: resolve in at most N rounds — every round commits someone)
+MAX_OPTIMISTIC_ATTEMPTS = 12
 
 
 def epoch_bracket(
@@ -398,6 +409,22 @@ def data_dir(path: str) -> str:
     ``path`` itself for pre-versioning (legacy) stores."""
     cur = current_version(path)
     return os.path.join(path, cur) if cur else path
+
+
+def tree_has_data(base: str) -> bool:
+    """True when the resolved snapshot directory ``base`` holds at least
+    one parquet data file. A legacy root's unpublished (crashed or
+    in-flight) version and staging trees do not count."""
+    for root, dirs, files in os.walk(base):
+        if root == base:
+            dirs[:] = [
+                d
+                for d in dirs
+                if not _VERSION_RE.match(d) and not d.endswith(".staging")
+            ]
+        if any(f.endswith(".parquet") for f in files):
+            return True
+    return False
 
 
 def stage_new(path: str) -> tuple[str, str]:
@@ -607,8 +634,13 @@ def link_tree(
 #
 # A table's writers must all use ONE protocol (lock or optimistic), like
 # any log-structured table format; readers need no coordination either
-# way. Pinned by tests/test_versioned.py (rename-arbiter unit race,
-# in-process rebase, multi-process stress with no lock file present).
+# way. The protocol is resolved in one place, :func:`store_protocol`,
+# and only :func:`commit` (base-dependent writes) and
+# :func:`commit_full` (full rewrites) act on it — every store engine
+# commits through one of the two, so an engine is written once, as a
+# stage body, for both protocols. Pinned by tests/test_versioned.py
+# (rename-arbiter unit race, in-process rebase, multi-process stress
+# with no lock file present) and tests/test_publish_order.py.
 # ---------------------------------------------------------------------------
 
 #: optimistic stagings: ``vNNNNNNNN.<nonce>.opt.staging`` — disjoint from
@@ -823,6 +855,124 @@ def publish_full_optimistic(
     raise TimeoutError(
         f"full publish into {path} lost {max_attempts} commit races"
     )
+
+
+def store_protocol(protocol: str | None) -> str:
+    """The write protocol of one store write: per-call override >
+    ``WCD_STORE_PROTOCOL`` env > ``lock``. One table must be written
+    under ONE protocol (see §optimistic above) — the switch exists per
+    deployment, not per call site."""
+    p = protocol or os.environ.get("WCD_STORE_PROTOCOL", "lock")
+    if p not in ("lock", "optimistic"):
+        raise ValueError(f"unknown store write protocol {p!r}")
+    return p
+
+
+def is_locked_stage(staged_dir: str) -> bool:
+    """True when ``staged_dir`` was staged by a LOCKED :func:`commit`:
+    its base snapshot cannot change or be pruned before the stage
+    returns. An optimistic stage's base can be pruned by competitors'
+    commits mid-stage, so a stage that would read its base lazily while
+    writing must materialize it first."""
+    return not staged_dir.endswith(OPT_STAGING_SUFFIX)
+
+
+def _run_stage(stage, base_dir: str, vdir: str, publish_gate=None):
+    """``stage(base_dir, vdir) -> (result, changed)``, then the publish
+    gate when there is something to publish. ``vdir`` is removed when
+    the stage or the gate fails or nothing changed."""
+    try:
+        result, changed = stage(base_dir, vdir)
+        if changed and publish_gate is not None:
+            publish_gate()
+    except BaseException:
+        shutil.rmtree(vdir, ignore_errors=True)
+        raise
+    if not changed:
+        shutil.rmtree(vdir, ignore_errors=True)
+    return result, changed
+
+
+def commit(path: str, protocol: str | None, stage, publish_gate=None):
+    """Commit one base-dependent write (merge, delete, upsert, split,
+    compaction) to the store table ``path`` under its write protocol
+    (:func:`store_protocol`) and return the stage's result.
+
+    ``stage(base_dir, staged_dir) -> (result, changed)`` is the engine:
+    it reads the resolved base snapshot ``base_dir`` (the table root for
+    an empty store, whose first commit is born versioned), writes the
+    next snapshot into the fresh, empty ``staged_dir`` and says whether
+    anything changed; an unchanged stage publishes nothing. The stage
+    must not resolve the store itself.
+
+    - **lock**: ``publish_gate`` runs first (never hold a lock while
+      waiting — see :func:`run_publish_ordered`); then, under
+      :func:`writer_lock`, :func:`stage_new`, the stage against the
+      current snapshot, :func:`publish`.
+    - **optimistic**: per attempt, :func:`resolve_latest`,
+      :func:`stage_optimistic`, the stage, ``publish_gate`` (the gate
+      orders only the commit), :func:`try_publish`. A lost rename
+      rebases: the next attempt re-stages against the winner's tree, so
+      the stage is re-run from scratch. A stage failure rebases only
+      when :func:`is_transient_read_race` (a competitor pruned the base
+      mid-read); any other error surfaces at once. A legacy
+      (pre-versioning) root with data is refused: it mixes data files
+      with in-flight stagings in one directory, so a lock-free read of
+      it could list a competitor's half-written files — migration is
+      one locked write.
+
+    :func:`publish` and :func:`try_publish` are looked up as module
+    globals at call time, so tests and tracers may replace them."""
+    if store_protocol(protocol) == "lock":
+        if publish_gate is not None:
+            publish_gate()
+        with writer_lock(path):
+            version, vdir = stage_new(path)
+            result, changed = _run_stage(stage, data_dir(path), vdir)
+            if changed:
+                publish(path, version)
+            return result
+    last_err: Exception | None = None
+    for attempt in range(MAX_OPTIMISTIC_ATTEMPTS):
+        if attempt:
+            time.sleep(0.05 * attempt)
+        base, base_dir, target = resolve_latest(path)
+        if base is None and tree_has_data(path):
+            raise ValueError(
+                f"optimistic writes need a versioned store; migrate the "
+                f"legacy root {path} with one locked write first"
+            )
+        vdir = stage_optimistic(path, target)
+        try:
+            result, changed = _run_stage(stage, base_dir, vdir, publish_gate)
+        except Exception as e:
+            if not is_transient_read_race(e):
+                raise
+            last_err = e
+            continue
+        if not changed or try_publish(path, target, vdir):
+            return result
+    raise TimeoutError(
+        f"optimistic commit into {path} lost {MAX_OPTIMISTIC_ATTEMPTS} "
+        f"commit races"
+    ) from last_err
+
+
+def commit_full(path: str, protocol: str | None, populate) -> str:
+    """Commit a FULL rewrite of the store table ``path`` (content
+    independent of the base: bootstrap, flush, rebuild):
+    ``populate(staged_dir)`` writes the whole next snapshot. Locked, it
+    runs under :func:`writer_lock` between :func:`stage_new` and
+    :func:`publish`; optimistic, it is :func:`publish_full_optimistic`
+    (a lost race re-targets the same staged tree). Returns the published
+    version."""
+    if store_protocol(protocol) == "optimistic":
+        return publish_full_optimistic(path, populate)
+    with writer_lock(path):
+        version, vdir = stage_new(path)
+        populate(vdir)
+        publish(path, version)
+    return version
 
 
 def expire_history(path: str) -> list[str]:

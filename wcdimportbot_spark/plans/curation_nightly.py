@@ -113,16 +113,6 @@ def _index_path(base_path: str) -> str:
     return os.path.join(base_path, INDEX_DIR)
 
 
-def _write_corpus_unlocked(df: DataFrame, path: str) -> None:
-    """Bootstrap writer for the curated corpus store (hash-bucketed on
-    the content hash, sorted for point-lookup row-group pruning)."""
-    version, vdir = versioned.stage_new(path)
-    sinks._sorted_on(
-        sinks.with_bucket(df, "text_hash"), "text_hash"
-    ).write.mode("overwrite").partitionBy(sinks.BUCKET_COL).parquet(vdir)
-    versioned.publish(path, version)
-
-
 def read_curated_corpus(spark: SparkSession, base_path: str) -> DataFrame:
     """The CURRENT curated-corpus snapshot
     (doc_id, text_hash, quality, detected_lang)."""
@@ -140,27 +130,15 @@ def merge_curated_corpus(
     """Insert-if-absent by content hash through the shared MERGE engine
     (append-only writes, O(batch) bytes): acceptance is exactly-once
     across replays and across racing increments."""
-    path = _corpus_path(base_path)
-    if sinks._merge_protocol(protocol) == "optimistic":
-        return sinks._merge_write_optimistic(
-            spark,
-            accepted,
-            path,
-            bucket_key="text_hash",
-            anti_key="text_hash",
-            partitions=[sinks.BUCKET_COL],
-            dedup_key="text_hash",
-        )
     return sinks._merge_write(
         spark,
         accepted,
-        path,
+        _corpus_path(base_path),
         bucket_key="text_hash",
         anti_key="text_hash",
         partitions=[sinks.BUCKET_COL],
         dedup_key="text_hash",
-        read_fn=sinks.read_snapshot,
-        write_fn=_write_corpus_unlocked,
+        protocol=protocol,
     )
 
 

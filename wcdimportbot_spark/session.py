@@ -75,6 +75,11 @@ def get_spark(
     return spark
 
 
+#: logger whose accumulator-update noise is filtered, and the pattern
+DAG_SCHEDULER_LOGGER = "org.apache.spark.scheduler.DAGScheduler"
+ACCUMULATOR_NOISE = r"Failed to update accumulator .*"
+
+
 def _silence_late_accumulator_noise(spark) -> None:
     """Raise the log level of DAGScheduler's ``updateAccumulators``
     failure to what it is: noise. When a completed task's metric
@@ -86,27 +91,41 @@ def _silence_late_accumulator_noise(spark) -> None:
     a busy host, zero effect on results (the full DuckDB oracle sweep
     and every suite stay green with and without the noise; only the
     already-dead query's UI metrics are lost). Spark has no narrower
-    switch, so DENY exactly this message pattern (the filter lands on
-    the root logger config since DAGScheduler has no dedicated one;
-    the pattern only ever matches this event) — every other
-    DAGScheduler error still logs, verified with a sentinel."""
+    switch, so DENY exactly this message pattern on a dedicated
+    DAGScheduler logger config — additive, with no level of its own, so
+    it inherits the root appenders and level. Never on the root config:
+    there the filter would apply to every logger's events. Idempotent
+    across sessions (the log4j configuration outlives a SparkContext):
+    a config that already carries the filter is left alone. Every other
+    DAGScheduler error still logs."""
     try:
         jvm = spark.sparkContext._jvm
-        log_manager = jvm.org.apache.logging.log4j.LogManager
-        ctx = log_manager.getContext(False)
+        core = jvm.org.apache.logging.log4j.core
+        ctx = jvm.org.apache.logging.log4j.LogManager.getContext(False)
         config = ctx.getConfiguration()
-        logger_cfg = config.getLoggerConfig(
-            "org.apache.spark.scheduler.DAGScheduler"
+        logger_cfg = config.getLoggerConfig(DAG_SCHEDULER_LOGGER)
+        if logger_cfg.getName() != DAG_SCHEDULER_LOGGER:
+            # the lookup fell through to an ancestor (the root): add a
+            # dedicated config instead of filtering the ancestor's
+            logger_cfg = (
+                core.config.LoggerConfig.newBuilder()
+                .withLoggerName(DAG_SCHEDULER_LOGGER)
+                .withAdditivity(True)
+                .withConfig(config)
+                .build()
+            )
+            config.addLogger(DAG_SCHEDULER_LOGGER, logger_cfg)
+        elif ACCUMULATOR_NOISE in str(logger_cfg.getFilter()):
+            return  # installed by an earlier session
+        logger_cfg.addFilter(
+            core.filter.RegexFilter.createFilter(
+                ACCUMULATOR_NOISE,
+                None,
+                False,
+                core.Filter.Result.DENY,
+                core.Filter.Result.NEUTRAL,
+            )
         )
-        regex_filter = jvm.org.apache.logging.log4j.core.filter.RegexFilter
-        deny = regex_filter.createFilter(
-            r"Failed to update accumulator .*",
-            None,
-            False,
-            jvm.org.apache.logging.log4j.core.Filter.Result.DENY,
-            jvm.org.apache.logging.log4j.core.Filter.Result.NEUTRAL,
-        )
-        logger_cfg.addFilter(deny)
         ctx.updateLoggers()
     except Exception:  # noqa: BLE001 - logging cosmetics must never fail a job
         pass
