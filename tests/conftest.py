@@ -5,6 +5,9 @@ import os
 import pytest
 
 os.environ.setdefault("SPARK_GRAFT_CPUS", "4")  # keep unit tests light
+# the session's 24g default heap lets the JVM grow past what a shared
+# host tolerates under the threaded race tests
+os.environ.setdefault("SPARK_DRIVER_MEMORY", "6g")
 
 
 @pytest.fixture(scope="session")

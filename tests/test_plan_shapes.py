@@ -279,3 +279,145 @@ def test_delete_probe_single_annotated_scan(spark, tmp_path):
         spark, doomed, store, key="hash", bucket_key="hash",
         partitions=[sinks.BUCKET_COL],
     ) == 0
+
+
+def _shuffles(df) -> int:
+    """Shuffle Exchange nodes (not BroadcastExchange) in ``df``'s
+    physical plan (its initial plan once adaptive execution has run)."""
+    import re
+
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    plan = plan.split("== Initial Plan ==")[-1]
+    return len(re.findall(r"(?<![A-Za-z])Exchange ", plan))
+
+
+def _checkpointed(monkeypatch, spark, fn, marker):
+    """Run ``fn``; the relations it handed to ``localCheckpoint`` whose
+    analyzed plan mentions ``marker``."""
+    cls = type(spark.range(1))
+    real = cls.localCheckpoint
+    seen = []
+
+    def spy(self, *a, **kw):
+        seen.append(self)
+        return real(self, *a, **kw)
+
+    with monkeypatch.context() as m:
+        m.setattr(cls, "localCheckpoint", spy)
+        fn()
+    return [
+        d for d in seen
+        if marker in d._jdf.queryExecution().analyzed().toString()
+    ]
+
+
+def _declare(df, col, flag):
+    """``df`` declared unique on ``col``, and the engine keywords that
+    said the same before declarations existed (``flag=True``): the counts
+    below hold under either form."""
+    try:
+        from wcdimportbot_spark.functions import keys
+    except ImportError:
+        return df, {flag: True}
+    return keys.unique(df, col), {}
+
+
+def test_merge_fresh_plan_skips_distincts_of_unique_batches(
+    spark, tmp_path, monkeypatch
+):
+    """The merge's fresh-row plan (batch LEFT-ANTI matched keys): a
+    batch deduped on the anti key, or declared unique on it, broadcasts
+    its keys and the store's matched keys without a distinct; any other
+    batch pays both distincts."""
+    from pyspark.sql import functions as F
+
+    from wcdimportbot_spark.operators import sinks
+
+    def batch(lo, hi):
+        return spark.range(lo, hi).select(
+            F.concat(F.lit("h"), F.col("id")).alias("hash"),
+            F.lit("x").alias("v"),
+        )
+
+    def fresh_plan(name, df, dedup_key, **kw):
+        path = str(tmp_path / name)
+        sinks._merge_write(
+            spark, batch(0, 40), path, bucket_key="hash", anti_key="hash",
+            partitions=[sinks.BUCKET_COL], dedup_key="hash",
+        )
+        (plan,) = _checkpointed(
+            monkeypatch, spark,
+            lambda: sinks._merge_write(
+                spark, df, path, bucket_key="hash", anti_key="hash",
+                partitions=[sinks.BUCKET_COL], dedup_key=dedup_key, **kw,
+            ),
+            "LeftAnti",
+        )
+        return _shuffles(plan)
+
+    declared, kw = _declare(batch(20, 60), "hash", "batch_distinct")
+    assert fresh_plan("deduped", batch(20, 60), "hash") == 0
+    assert fresh_plan("declared", declared, None, **kw) == 0
+    assert fresh_plan("plain", batch(20, 60), None) == 2
+
+
+def test_delete_scan_skips_the_distinct_of_declared_keys(
+    spark, tmp_path, monkeypatch
+):
+    """delete_from_store's annotated scan: declared keys are broadcast
+    as they are; undeclared keys pay one distinct."""
+    from pyspark.sql import functions as F
+
+    from wcdimportbot_spark.operators import sinks
+
+    def marked_plan(name, doomed, **kw):
+        path = str(tmp_path / name)
+        sinks.merge_write_items(
+            spark,
+            spark.range(60).select(
+                F.concat(F.lit("h"), F.col("id")).alias("hash"),
+                F.lit("Q").alias("qid"),
+                F.lit("website").alias("instance_of"),
+            ),
+            path,
+        )
+        (plan,) = _checkpointed(
+            monkeypatch, spark,
+            lambda: sinks.delete_from_store(
+                spark, doomed, path, key="hash", bucket_key="hash",
+                partitions=["instance_of", sinks.BUCKET_COL], **kw,
+            ),
+            "_doomed",
+        )
+        return _shuffles(plan)
+
+    def doomed():
+        return spark.createDataFrame(
+            [(f"h{i}",) for i in range(10)], "hash string"
+        )
+
+    declared, kw = _declare(doomed(), "hash", "keys_unique")
+    assert marked_plan("declared", declared, **kw) == 0
+    assert marked_plan("plain", doomed()) == 1
+
+
+def test_incremental_dedup_skips_the_hash_distinct_of_declared_winners(
+    spark,
+):
+    """incremental_dedup's plan: a batch declared unique on its text
+    broadcasts its hashes without a distinct."""
+    from wcdimportbot_spark.operators.text_dedup import (
+        dedup_index,
+        incremental_dedup,
+    )
+
+    docs = spark.createDataFrame(
+        [(i, f"doc {i} on shuffle joins and window {i % 7}") for i in range(30)],
+        "doc_id long, text string",
+    )
+    hashes, bands_rel = dedup_index(docs.filter("doc_id % 3 = 0"))
+    batch = docs.filter("doc_id % 3 != 0")
+    # a declaration tags its object: declare a separate one
+    declared, kw = _declare(batch.select("*"), "text", "batch_hash_unique")
+    assert _shuffles(incremental_dedup(batch, hashes, bands_rel)) == 9
+    assert _shuffles(incremental_dedup(declared, hashes, bands_rel, **kw)) == 8

@@ -72,6 +72,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from wcdimportbot_spark.functions import keys
 from wcdimportbot_spark.operators import versioned
 
 MODEL_DIR = "model"
@@ -557,8 +558,7 @@ def ann_index_add_batch(
         bucket_key=None,  # partition layout is the domain-derived cluster
         anti_key="vec_id",
         partitions=["cluster"],
-        dedup_key=None,  # already deduped above ...
-        batch_distinct=True,  # ... so the probe skips its re-distinct
+        dedup_key=None,  # enc is deduped and declared below
         prune_col="cluster",
         sort_key="vec_id",
     )
@@ -585,6 +585,7 @@ def ann_index_add_batch(
                 # the lazy checkpoint (one job, not two)
                 .localCheckpoint(eager=False)
             )
+            enc = keys.unique(enc, "vec_id")  # deduped on vec_id above
             n_batch = enc.count()
             try:
                 n_fresh = sinks._merge_write(
@@ -660,9 +661,6 @@ def ann_index_upsert(
     from wcdimportbot_spark.operators import sinks
 
     spark = new_embeddings.sparkSession
-    batch_ids = (
-        new_embeddings.select(F.col(id_col).alias("vec_id")).distinct()
-    )
     n_matched = 0
     if sinks.has_parquet_data(_codes_path(base_path)):
         # read the merge-side epoch BEFORE the matched-row scan, so the
@@ -671,18 +669,17 @@ def ann_index_upsert(
         # scan and the delete's publish is detected and the delete
         # re-resolves from the live store
         m0 = ann_merge_epoch(base_path)
-        pairs = (
-            read_ann_codes(spark, base_path)
-            .select("vec_id", "cluster")
-            .join(F.broadcast(batch_ids), "vec_id", "left_semi")
-            # the count below runs the lazy checkpoint — materialized
-            # BEFORE the delete half mutates the store, in one job
-            .localCheckpoint(eager=False)
-        )
+        # the count below runs the lazy checkpoint — materialized
+        # BEFORE the delete half mutates the store, in one job
+        pairs = keys.probe(
+            read_ann_codes(spark, base_path).select("vec_id", "cluster"),
+            new_embeddings.select(F.col(id_col).alias("vec_id")),
+            "vec_id",
+        ).localCheckpoint(eager=False)
         # updated counts matched IDS; pairs stays row-grained so the
         # delete also heals a store that already duplicated an id (see
         # the changed-content hazard in ann_index_add_batch's docstring)
-        n_matched = pairs.select("vec_id").distinct().count()
+        n_matched = keys.key_set(pairs, "vec_id").count()
         if n_matched:
             ann_index_delete(
                 pairs, base_path, protocol=protocol, merge_epoch0=m0
@@ -760,11 +757,8 @@ def ann_index_delete(
     def _ids() -> DataFrame:
         if "ids" not in memo:
             # lazy: materialized inside the first pairs computation
-            memo["ids"] = (
-                vec_ids.select("vec_id")
-                .distinct()
-                .localCheckpoint(eager=False)
-            )
+            ids = keys.key_set(vec_ids, "vec_id").localCheckpoint(eager=False)
+            memo["ids"] = keys.unique(ids, "vec_id")  # a checkpointed key set
         return memo["ids"]
 
     def _resolve() -> DataFrame | None:
@@ -775,11 +769,13 @@ def ann_index_delete(
         # action, before any mutation) runs this checkpoint; the epoch
         # bracket's soundness covers the whole resolve→publish window
         # regardless of where inside it the materialization lands
-        return codes.join(
-            F.broadcast(_ids()), "vec_id", "left_semi"
-        ).localCheckpoint(eager=False)
+        pairs = keys.probe(codes, _ids(), "vec_id").localCheckpoint(
+            eager=False
+        )
+        # the codes store holds one row per vec_id (engine invariant)
+        return keys.unique(pairs, "vec_id")
 
-    def _publish(pairs: DataFrame | None, keys_unique: bool) -> int:
+    def _publish(pairs: DataFrame | None) -> int:
         if pairs is None or not sinks.has_parquet_data(
             _codes_path(base_path)
         ):
@@ -794,7 +790,6 @@ def ann_index_delete(
             prune_col="cluster",
             sort_key="vec_id",
             protocol=protocol,
-            keys_unique=keys_unique,
         )
 
     # the caller read merge_epoch0 BEFORE its own resolve scan, so the
@@ -812,13 +807,8 @@ def ann_index_delete(
         return versioned.epoch_read(base_path, ANN_MERGE_EPOCH_FILE)
 
     def _attempt() -> int:
-        if hint:
-            # caller pairs may repeat a vec_id: leave them to the
-            # engine's distinct
-            return _publish(hint.pop(), keys_unique=False)
-        # the codes store is key-unique on vec_id (engine invariant),
-        # so its semi-join against distinct ids is too
-        return _publish(_resolve(), keys_unique=True)
+        # caller pairs are undeclared (they may repeat a vec_id)
+        return _publish(hint.pop() if hint else _resolve())
 
     # delete-vs-add race (see ANN_DELETE_EPOCH_FILE): re-deletes of
     # rows a racing merge re-inserted are real deletions, so the

@@ -29,6 +29,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from wcdimportbot_spark.functions import keys
+
 CACHE_SCHEMA = T.StructType(
     [
         T.StructField("hash", T.StringType(), False),
@@ -75,29 +77,18 @@ def split_hits_and_misses(
     AQE picks broadcast automatically anyway when the runtime size is
     under the threshold.
 
-    The miss side derives from the MATCHED keys rather than a direct
-    ``entities LEFT-ANTI cache`` (round-10 join inversion, the
-    text_dedup/sinks probe reasoning): an anti-join can only build its
-    right side, so at scale it would hash-build the billion-row cache.
-    Matched keys are computed INDEPENDENTLY of the hits plan — cache
-    column-pruned to its key, semi-joined against the broadcast batch
-    keys (the ``sinks._matched_keys`` shape) — so an action on
-    ``misses`` scans the cache once through a cheap semi-join instead
-    of re-executing the full entities×cache hits JOIN a second time
-    (r10 ADVICE)."""
+    The miss side derives from the MATCHED keys (:func:`keys.probe`, the
+    cache streamed against the broadcast batch keys) rather than a
+    direct ``entities LEFT-ANTI cache``, which would hash-build the
+    billion-row cache. The probe is independent of the hits plan, so an
+    action on ``misses`` scans the cache once through a cheap semi-join
+    instead of re-executing the entities×cache hits JOIN (r10 ADVICE)."""
     cache_side = F.broadcast(cache) if broadcast else cache
     hits = entities.join(
         cache_side, entities[hash_col] == cache_side["hash"], "inner"
     ).drop(cache_side["hash"])
-    matched = (
-        cache.select(F.col("hash").alias(hash_col))
-        .join(
-            F.broadcast(entities.select(hash_col).distinct()),
-            hash_col,
-            "left_semi",
-        )
-        .distinct()
-    )
+    stored = cache.select(F.col("hash").alias(hash_col))
+    matched = keys.key_set(keys.probe(stored, entities, hash_col), hash_col)
     misses = entities.join(F.broadcast(matched), hash_col, "left_anti")
     return hits, misses
 
@@ -136,14 +127,14 @@ def merge_write_cache(
     new_mappings: DataFrame,
     path: str,
     protocol: str | None = None,
-) -> None:
+) -> int:
     """S7+S9 incremental MERGE: insert-if-absent by hash (existing mapping
     wins — conflict-as-success) via the shared bucket-MERGE engine in
     operators/sinks.py. Delta form: MERGE INTO cache USING new ON hash
-    WHEN NOT MATCHED INSERT."""
+    WHEN NOT MATCHED INSERT. Returns the number of mappings inserted."""
     from wcdimportbot_spark.operators import sinks
 
-    sinks._merge_write(
+    return sinks._merge_write(
         spark,
         new_mappings.select("hash", "qid"),
         path,

@@ -63,6 +63,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from wcdimportbot_spark.functions import keys
 from wcdimportbot_spark.operators import versioned
 
 #: store-level hash-bucket fanout; sized so local test stores stay readable.
@@ -299,49 +300,6 @@ def _partition_values_predicate(rows, cols: list[str]):
     )
 
 
-def _matched_keys(
-    existing: DataFrame,
-    new_b: DataFrame,
-    anti_key: str,
-    batch_distinct: bool = False,
-    store_unique: bool = False,
-):
-    """The batch keys ALREADY present in the store, computed with the
-    store on the STREAM side (round-10 join inversion, same reasoning as
-    the dedup probe, text_dedup.incremental_dedup): the naive
-    ``batch LEFT-ANTI existing-keys`` builds a hash table of every
-    existing key in the touched partitions — at 100 TB that is the
-    store, which cannot broadcast, degenerating the insert-if-absent
-    probe to a per-batch store shuffle. Here the store is scanned once
-    (column-pruned to the key), semi-joined against the BROADCAST batch
-    keys, and deduped — every hash table and the result are bounded by
-    the batch. The caller anti-joins the batch against the broadcast of
-    this ≤|batch|-row relation.
-
-    ``batch_distinct=True`` declares the batch already unique on
-    ``anti_key`` (the engine deduped it on exactly that column), which
-    drops the exchange inside the broadcast build (r15).
-
-    ``store_unique=True`` declares the STORE unique on ``anti_key``,
-    dropping the outer distinct's exchange too (r16). The invariant
-    holds for every store consistently written by this engine with
-    ``dedup_key == anti_key``: the bootstrap write dedupes the batch,
-    merges insert only absent keys, upserts replace matched rows from a
-    deduped batch, and deletes only remove — so uniqueness is
-    preserved by induction. Either way the caller's anti-join is
-    key-membership (duplicate matched keys could only widen the
-    broadcast, never change results)."""
-    keys = new_b.select(anti_key)
-    if not batch_distinct:
-        keys = keys.distinct()
-    out = existing.select(anti_key).join(
-        F.broadcast(keys), anti_key, "left_semi"
-    )
-    if not store_unique:
-        out = out.distinct()
-    return out
-
-
 #: per-snapshot sidecar recording the store's CURRENT logical schema —
 #: the plain-parquet analog of Delta's log-held schema. Needed the moment
 #: additive evolution lands a column that exists only in fresh files:
@@ -573,7 +531,6 @@ def _merge_write(
     base_guard=None,
     stamp=None,
     allow_additive: bool = False,
-    batch_distinct: bool | None = None,
     publish_gate=None,
     protocol: str | None = None,
 ) -> int:
@@ -603,14 +560,16 @@ def _merge_write(
     records the model version a codes store is born under); later
     commits carry it forward through the hardlinks."""
     sort_key = sort_key or anti_key
+    # one row per anti_key: deduped on it below, or declared by the caller
+    unique_batch = dedup_key == anti_key or keys.declared(new_df, anti_key)
     if dedup_key is not None:
         new_df = new_df.dropDuplicates([dedup_key])
-    if batch_distinct is None:
-        batch_distinct = dedup_key == anti_key
     new_b = with_bucket(new_df, bucket_key) if bucket_key else new_df
     # one evaluation of the batch side for every attempt, before any
     # lock or commit race — see _maybe_materialize_batch
     new_b = _maybe_materialize_batch(new_b)
+    if unique_batch:
+        new_b = keys.unique(new_b, anti_key)  # bucketing keeps its rows
     # default-map touched set: materializes the lazy checkpoint above in
     # the same job and doubles as the empty-batch guard. Valid whenever
     # the base is unsplit (the common case — _rebucket_for_base is then
@@ -646,25 +605,23 @@ def _merge_write(
         existing = _read_tree(spark, base_dir).filter(
             F.col(prune_col).isin(touched)
         )
+        if unique_batch:
+            # a store merged only from unique batches is unique by
+            # induction: first commits write the batch, merges add absent
+            # keys, upserts replace matched keys, deletes only remove (an
+            # ANN changed-content duplicate only widens the broadcast)
+            existing = keys.unique(existing, anti_key)
         new_cols = _check_merge_schema(
             batch_b.columns, existing.columns, allow_additive=allow_additive
         )
-        # materialize BEFORE staging: after the count below (which runs
-        # the lazy checkpoint — one job, not two) the data lives in the
-        # block manager, decoupled from base files a competitor's prune
-        # might remove
+        # the batch keys already stored (new_b: the rebucket leaves
+        # anti_key as is). Materialize BEFORE staging: after the count
+        # below (which runs the lazy checkpoint — one job, not two) the
+        # data lives in the block manager, decoupled from base files a
+        # competitor's prune might remove
+        matched = keys.key_set(keys.probe(existing, new_b, anti_key), anti_key)
         fresh = batch_b.join(
-            F.broadcast(
-                _matched_keys(
-                    existing,
-                    batch_b,
-                    anti_key,
-                    batch_distinct=batch_distinct,
-                    store_unique=batch_distinct,
-                )
-            ),
-            anti_key,
-            "left_anti",
+            F.broadcast(matched), anti_key, "left_anti"
         ).localCheckpoint(eager=False)
         n_fresh = fresh.count()
         if n_fresh:
@@ -773,7 +730,6 @@ def _delete_plan(
     partitions: list[str],
     prune_col: str,
     touched_prunes: list,
-    keys_unique: bool = False,
 ):
     """Read-side body of :func:`delete_from_store`, against an
     already-resolved immutable snapshot: returns ``(n_doomed,
@@ -795,19 +751,12 @@ def _delete_plan(
     pass), doubling store reads per delete."""
     snap = _read_tree(spark, base_dir)
     pruned = snap.filter(F.col(prune_col).isin(touched_prunes))
-    # a duplicated key on the broadcast side duplicates its matched
-    # store rows through the left join below; every copy is marked
-    # _doomed, so the kept rewrite content is unaffected, but the
-    # doomed counts and per-partition stats inflate. ``keys_unique=True``
-    # callers passed a provably-deduped relation and skip the exchange
-    # (r16).
-    keys_only = keys_b.select(key)
-    if not keys_unique:
-        keys_only = keys_only.distinct()
-    keys_only = F.broadcast(keys_only)
+    # a duplicated key on the broadcast side would duplicate its matched
+    # store rows through the left join below and inflate the doomed
+    # counts, hence a key set (no exchange for declared keys)
+    keys_only = F.broadcast(keys.key_set(keys_b, key))
     # one annotated pass over the candidate buckets: _doomed marks rows
-    # whose key is in the broadcast list (keys_only is distinct, so the
-    # left join cannot duplicate store rows); the lazy checkpoint runs
+    # whose key is in the broadcast list; the lazy checkpoint runs
     # inside the stats collect below (one job) — decoupling the rewrite
     # content from the base files pre-stage and letting the kept filter
     # run off cached blocks
@@ -851,7 +800,6 @@ def delete_from_store(
     prune_col: str = BUCKET_COL,
     sort_key: str | None = None,
     protocol: str | None = None,
-    keys_unique: bool = False,
     publish_gate=None,
 ) -> int:
     """``DELETE FROM store WHERE key IN (doomed_keys)`` as a partition-
@@ -870,7 +818,9 @@ def delete_from_store(
     ``prune_col`` (the ANN codes store's domain-derived ``cluster``).
     ``protocol="optimistic"`` (or ``WCD_STORE_PROTOCOL``) commits
     lock-free through the rename arbiter like every other writer
-    (``versioned.commit``). An empty store deletes nothing."""
+    (``versioned.commit``). An empty store deletes nothing.
+    ``doomed_keys`` declared unique on ``key`` (``keys.unique``) skip
+    the key set's distinct."""
     sort_key = sort_key or key
     keys_b = (
         with_bucket(doomed_keys.select(key), key)
@@ -883,6 +833,8 @@ def delete_from_store(
     # callers pass doomed_keys that are themselves joins/aggregates —
     # evaluate wide key plans ONCE (see _maybe_materialize_batch)
     keys_b = _maybe_materialize_batch(keys_b)
+    if keys.declared(doomed_keys, key):
+        keys_b = keys.unique(keys_b, key)  # bucketing keeps its rows
     default_prunes = [
         r[prune_col] for r in keys_b.select(prune_col).distinct().collect()
     ]
@@ -900,15 +852,15 @@ def delete_from_store(
                 r[prune_col]
                 for r in batch_keys.select(prune_col).distinct().collect()
             ]
+        # keys_b, not batch_keys: the rebucket leaves `key` as is
         n_doomed, _stats, exclude, kept = _delete_plan(
             spark,
             base_dir,
-            batch_keys,
+            keys_b,
             key=key,
             partitions=partitions,
             prune_col=prune_col,
             touched_prunes=touched_prunes,
-            keys_unique=keys_unique,
         )
         if n_doomed:
             versioned.link_tree(base_dir, vdir, exclude_rel_dirs=exclude)
@@ -1025,7 +977,7 @@ def upsert_into_store(
         )
         matched_stats = [r for r in grouped if r["_g"] == 0]
         top = 2 ** len(partitions) - 1  # the grand-total grouping level
-        n_matched_keys = (
+        n_keys_matched = (
             int(next(r["_k"] for r in grouped if r["_g"] == top))
             if matched_stats
             else 0
@@ -1081,8 +1033,8 @@ def upsert_into_store(
                 vdir, _evolved_schema(snap.schema, batch_b.schema, new_cols)
             )
         return {
-            "updated": n_matched_keys,
-            "inserted": int(n_batch - n_matched_keys),
+            "updated": n_keys_matched,
+            "inserted": int(n_batch - n_keys_matched),
         }, True
 
     return versioned.commit(path, protocol, stage)

@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from wcdimportbot_spark.functions import keys
 from wcdimportbot_spark.functions.expr_memo import memo_expr
 from wcdimportbot_spark.functions.partitioning import fan_out
 from wcdimportbot_spark.operators import versioned
@@ -651,7 +652,6 @@ def incremental_dedup(
     text_col: str = "text",
     shingle_n: int = 3,
     new_bands: DataFrame | None = None,
-    batch_hash_unique: bool = False,
 ) -> DataFrame:
     """Annotate a NEW batch against the stored index: per new doc, its
     text hash, ``exact_dup_of_history``, ``near_dup_of_history`` (shares
@@ -663,29 +663,17 @@ def incremental_dedup(
     rescan, no all-pairs anything. This is the production dedup loop:
     full-corpus pair generation (lsh_candidate_pairs) bootstraps the
     index once; every batch after that runs this probe and appends its
-    own hashes/buckets."""
+    own hashes/buckets.
+
+    Both probes are :func:`keys.probe` (the index streams, the batch
+    keys are broadcast; plan-pinned in tests/test_llm_ops.py). A batch
+    declared unique on ``text_col`` skips the hash key set's distinct."""
     hashed = new_docs.withColumn("text_hash", F.md5(F.col(text_col)))
-    # Join-side inversion (round 10): the obvious probe shape —
-    # batch LEFT-SEMI store — puts the CORPUS-scale index on the build
-    # side (a left-semi can only build its right side), which at 100 TB
-    # cannot broadcast and degenerates to shuffling the whole store per
-    # micro-batch. Flipping it — store LEFT-SEMI broadcast(batch keys),
-    # then batch LEFT-SEMI broadcast(matched keys, ≤|batch| rows) —
-    # keeps the store a pure streamed SCAN (no Exchange on it, ever)
-    # with both hash tables bounded by the batch. Same membership
-    # semantics; plan-pinned in tests/test_llm_ops.py.
-    batch_keys = hashed.select("text_hash")
-    if not batch_hash_unique:
-        # ``batch_hash_unique=True`` declares one row per text in the
-        # batch (e.g. an in-batch window already picked hash winners),
-        # dropping this exchange from the broadcast build; a duplicated
-        # key would only repeat semi-join probes, never change results
-        batch_keys = batch_keys.distinct()
-    matched_hashes = history_hashes.join(
-        F.broadcast(batch_keys),
-        "text_hash",
-        "left_semi",
-    )
+    if keys.declared(new_docs, text_col):
+        hashed = keys.unique(hashed, "text_hash")  # one row per text
+    # membership only (it feeds a semi-join's build side): no outer
+    # dedup, so repeated index rows cannot change the result
+    matched_hashes = keys.probe(history_hashes, hashed, "text_hash")
     exact_ids = (
         hashed.join(F.broadcast(matched_hashes), "text_hash", "left_semi")
         .select(id_col)
@@ -701,17 +689,15 @@ def incremental_dedup(
             bands,
             id_col,
         )
-    matched_buckets = (
-        history_bands.select("band", "bucket")
-        .join(
-            F.broadcast(new_bands.select("band", "bucket").distinct()),
-            ["band", "bucket"],
-            "left_semi",
-        )
-        # the attributed store (r12) keeps one row per contributing
-        # hash: dedup before broadcasting so the matched set stays
-        # bounded by the BATCH's bucket count, never the store's fan-in
-        .distinct()
+    # the attributed store (r12) keeps one row per contributing hash:
+    # the outer key set bounds the matched set by the BATCH's bucket
+    # count, never the store's fan-in
+    matched_buckets = keys.key_set(
+        keys.probe(
+            history_bands.select("band", "bucket"), new_bands, "band", "bucket"
+        ),
+        "band",
+        "bucket",
     )
     near_ids = (
         new_bands.join(
@@ -770,7 +756,7 @@ def _with_band_key(bands_rel: DataFrame) -> DataFrame:
 def _band_keys_for_hashes(doomed_hashes: DataFrame, bands: int) -> DataFrame:
     """Every ``bk`` the given content hashes ever contributed to the
     bands store — pure driver-known enumeration (hash × band index)."""
-    return doomed_hashes.select(
+    bks = keys.key_set(doomed_hashes, "text_hash").select(
         F.explode(
             F.array(
                 *[
@@ -782,6 +768,7 @@ def _band_keys_for_hashes(doomed_hashes: DataFrame, bands: int) -> DataFrame:
             )
         ).alias("bk")
     )
+    return keys.unique(bks, "bk")  # distinct hashes × distinct band indices
 
 
 def _attributed_bands(
@@ -967,7 +954,6 @@ def dedup_index_probe(
     shingle_n: int = 3,
     with_bands: bool = False,
     eager: bool = True,
-    batch_hash_unique: bool = False,
 ):
     """Read-only half of the ingest loop: annotate the batch against the
     current index snapshot, WITHOUT mutating the store. Returns
@@ -1018,7 +1004,7 @@ def dedup_index_probe(
     ).localCheckpoint(eager=False)
     ann = incremental_dedup(
         new_docs, hashes, bands_rel, num_hashes, bands, id_col, text_col,
-        shingle_n, new_bands=new_bands, batch_hash_unique=batch_hash_unique,
+        shingle_n, new_bands=new_bands,
     ).localCheckpoint(eager=eager)
     survivors = new_docs.join(
         ann.filter(F.col("fresh")).select(id_col), id_col, "left_semi"
@@ -1148,7 +1134,6 @@ def dedup_index_delete(
     base_path: str,
     bands: int = 4,
     protocol: str | None = None,
-    keys_unique: bool = False,
 ) -> dict:
     """Make the dedup index FORGET the given content hashes (r11
     verdict weak #1): remove their ``text_hash`` rows from the hashes
@@ -1206,13 +1191,10 @@ def dedup_index_delete(
     # lazy: the first delete's touched-bucket collect (its first action,
     # before any store mutation in this call) runs the checkpoint; the
     # bands delete and any race-repair re-run then reuse the blocks
-    doomed = doomed_hashes.select("text_hash")
-    if not keys_unique:
-        # ``keys_unique=True`` callers pass a provably-distinct hash
-        # set (the purge's resolved relation) — correctness-critical
-        # for the pruned deletes' broadcast side, see _delete_plan
-        doomed = doomed.distinct()
-    doomed = doomed.localCheckpoint(eager=False)
+    doomed = keys.key_set(doomed_hashes, "text_hash").localCheckpoint(
+        eager=False
+    )
+    doomed = keys.unique(doomed, "text_hash")  # a checkpointed key set
     hpath = os.path.join(base_path, "hashes")
     bpath = os.path.join(base_path, "bands")
 
@@ -1233,7 +1215,6 @@ def dedup_index_delete(
                 bucket_key="text_hash",
                 partitions=[sinks.BUCKET_COL],
                 protocol=protocol,
-                keys_unique=True,  # doomed is distinct above
                 publish_gate=gate,
             )
 
@@ -1257,8 +1238,6 @@ def dedup_index_delete(
                 bucket_key="bk",
                 partitions=[sinks.BUCKET_COL],
                 protocol=protocol,
-                # distinct hashes x distinct band indices -> unique bk
-                keys_unique=True,
                 publish_gate=gate,
             )
 

@@ -60,6 +60,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from wcdimportbot_spark.functions import keys
 from wcdimportbot_spark.functions.partitioning import fan_out
 from wcdimportbot_spark.operators import sinks, versioned
 
@@ -260,7 +261,8 @@ def curate_increment(
     # job pins ann + ranked + new_bands to the pre-increment snapshot
     # (the probe's default would spend a second full pass on it)
     ann, _fresh, new_bands = dedup_index_probe(
-        winners.select(id_col, text_col),
+        # one row per text: rn == 1 keeps one row per text_hash
+        keys.unique(winners.select(id_col, text_col), text_col),
         _index_path(base_path),
         num_hashes,
         bands,
@@ -269,9 +271,6 @@ def curate_increment(
         shingle_n,
         with_bands=True,
         eager=False,
-        # winners carry exactly one row per text_hash (the rn==1 window
-        # filter above) — the probe can skip its batch-key distinct
-        batch_hash_unique=True,
     )
     flags = winners.join(
         ann.select(
@@ -736,9 +735,7 @@ def purge_documents(
     # below reuses (the id form cannot: its hash set depends on the
     # prior-marker resolution, which needs input_digest first)
     if not id_form:
-        hashes = (
-            doomed.select("text_hash").distinct().localCheckpoint(eager=False)
-        )
+        hashes = keys.key_set(doomed, "text_hash").localCheckpoint(eager=False)
         input_digest, n_doomed = _digest_n(hashes, "text_hash")
     else:
         input_digest = _digest(doomed.select(id_col).distinct(), id_col)
@@ -790,16 +787,15 @@ def purge_documents(
         if not sinks.has_parquet_data(corpus_path):
             hashes = spark.createDataFrame([], "text_hash string")
         else:
-            hashes = (
-                read_curated_corpus(spark, base_path)
-                .select(id_col, "text_hash")
-                .join(
-                    F.broadcast(doomed.select(id_col).distinct()),
+            hashes = keys.key_set(
+                keys.probe(
+                    read_curated_corpus(spark, base_path).select(
+                        id_col, "text_hash"
+                    ),
+                    doomed,
                     id_col,
-                    "left_semi",
-                )
-                .select("text_hash")
-                .distinct()
+                ),
+                "text_hash",
             )
         # the crashed attempt resolved its hashes while the corpus rows
         # still existed; without this union an id-form replay after the
@@ -831,6 +827,7 @@ def purge_documents(
         # hash-form input IS its own resolution — same distinct values,
         # same digest (hashes/n_doomed fused into input_digest above)
         resolved_digest = input_digest
+    hashes = keys.unique(hashes, "text_hash")  # distinct, checkpointed
     if (
         id_form
         and prior_match
@@ -920,11 +917,13 @@ def purge_documents(
                         f"the ANN binding on {base_path} names key "
                         f"{bkey!r} but the corpus has no such column"
                     )
+                matched = keys.probe(
+                    corpus_rel.select(bkey, "text_hash"), hashes, "text_hash"
+                )
                 parts.append(
-                    corpus_rel.select(bkey, "text_hash")
-                    .join(F.broadcast(hashes), "text_hash", "left_semi")
-                    .select(F.col(bkey).alias("vec_id"))
-                    .distinct()
+                    keys.key_set(
+                        matched.select(F.col(bkey).alias("vec_id")), "vec_id"
+                    )
                 )
             if parts:
                 vec_union = parts[0]
@@ -1093,7 +1092,6 @@ def purge_documents(
                 bucket_key="text_hash",
                 partitions=[sinks.BUCKET_COL],
                 protocol=protocol,
-                keys_unique=True,  # hashes is distinct (both forms)
             )
         return 0
 
@@ -1104,7 +1102,6 @@ def purge_documents(
                 _index_path(base_path),
                 bands=bands,
                 protocol=protocol,
-                keys_unique=True,  # hashes is distinct (both forms)
             )
         return {"hashes_deleted": 0, "bands_deleted": 0}
 
@@ -1205,14 +1202,14 @@ def purge_documents(
             )
             q_list = []
             if sinks.has_parquet_data(gpaths["items"]):
+                items_rel = sinks.read_items(spark, gpaths["items"]).select(
+                    "hash", F.col("qid").alias("subject_qid")
+                )
                 q_list = [
                     r["subject_qid"]
-                    for r in sinks.read_items(spark, gpaths["items"])
-                    .select("hash", F.col("qid").alias("subject_qid"))
-                    .join(F.broadcast(doomed_hashes), "hash", "left_semi")
-                    .select("subject_qid")
-                    .distinct()
-                    .collect()
+                    for r in keys.key_set(
+                        keys.probe(items_rel, ih, "hash"), "subject_qid"
+                    ).collect()
                 ]
             q_list = sorted(set(q_list) | set(recorded or []))
             if q_list:

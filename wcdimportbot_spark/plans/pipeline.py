@@ -2,11 +2,11 @@
 SURVEY §3.1, restated for Spark):
 
     pages → extract (F1) → filter/fix/validate (P1-P5) → normalize (F4-F22)
-    → dedup (A5/A6) → anti-join cache (J4) → items/claims (F24-F26, J5)
-    → merge sinks (S7/S9)
+    → dedup (A5/A6) → items/claims (F24-F26, J5) → merge sinks (S7/S9)
 
-One job; shuffles only at the dropDuplicates and the cache join — exactly
-the plan SURVEY §3.1 calls for.
+One job; shuffles only at the dropDuplicates — the plan SURVEY §3.1 calls
+for. The store import's insert-if-absent merges and its page-level cache
+probe (plans/store_import.py) stand in for the J4 cache anti-join.
 """
 
 from __future__ import annotations
@@ -14,11 +14,9 @@ from __future__ import annotations
 from functools import cached_property
 
 from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
 
 from wcdimportbot_spark.functions.hashing import DEFAULT_WIKIBASE_TITLE
 from wcdimportbot_spark.functions.partitioning import fan_out
-from wcdimportbot_spark.operators import cache as cache_ops
 from wcdimportbot_spark.operators.extract import (
     extract_raw_templates,
     filter_supported_templates,
@@ -28,7 +26,6 @@ from wcdimportbot_spark.operators.extract import (
 from wcdimportbot_spark.operators.graph import (
     build_claims,
     build_items,
-    qid_from_hash,
 )
 from wcdimportbot_spark.operators.normalize import build_references, collect_rejects
 
@@ -48,14 +45,12 @@ class ImportResult:
         schema_rejects: DataFrame,
         wikibase_title: str,
         retrieved_date: Column | None,
-        cache: DataFrame | None,
     ):
         self.references = references
         self._pages = pages
         self._schema_rejects = schema_rejects
         self._wikibase_title = wikibase_title
         self._retrieved_date = retrieved_date
-        self._cache = cache
         self._items: DataFrame | None = None
         self._claims: DataFrame | None = None
 
@@ -90,13 +85,6 @@ class ImportResult:
     def rejects(self) -> DataFrame:
         return collect_rejects(self.references).unionByName(self._schema_rejects)
 
-    @cached_property
-    def new_cache_mappings(self) -> DataFrame:
-        new_items = self.items
-        if self._cache is not None:
-            new_items = new_items.join(self._cache, "hash", "left_anti")
-        return new_items.select(F.col("hash"), F.col("qid"))
-
 
 def run_import(
     pages: DataFrame,
@@ -106,7 +94,8 @@ def run_import(
     persist: bool = True,
 ) -> ImportResult:
     """pages(page_id, title, language_code, latest_revision_id, wikitext)
-    → graph tables + cache additions + rejects.
+    → graph tables + rejects. ``cache`` is accepted for older callers and
+    unused: the store import's cache merge counts the new mappings.
 
     ``persist=True`` (default) materializes the normalized references once:
     extraction + normalization is the expensive narrow stage and every
@@ -137,13 +126,12 @@ def run_import(
     )
     if persist:
         refs = refs.persist()
-    # graph emission (items/claims), rejects, and the J4 cache anti-join are
-    # built lazily on first access — see ImportResult
+    # graph emission (items/claims) and rejects are built lazily on first
+    # access — see ImportResult
     return ImportResult(
         references=refs,
         pages=pages,
         schema_rejects=schema_rejects,
         wikibase_title=wikibase_title,
         retrieved_date=retrieved_date,
-        cache=cache,
     )

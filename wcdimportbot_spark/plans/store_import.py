@@ -190,6 +190,7 @@ def import_pages_to_store(
     Each sink reads and rewrites only the hash buckets the batch touches
     (operators/sinks.py); a re-import of already-stored pages writes
     nothing."""
+    from wcdimportbot_spark.functions import keys
     from wcdimportbot_spark.functions.hashing import page_hash
     from wcdimportbot_spark.operators import cache as cache_ops
     from wcdimportbot_spark.operators import sinks
@@ -206,26 +207,16 @@ def import_pages_to_store(
         "_page_hash",
         page_hash(F.col("title"), F.col("language_code"), F.col("page_id")),
     )
-    # join inversion (round 10, see operators/sinks._matched_keys): the
-    # anti-join builds its right side, and at scale the cache cannot
-    # broadcast — probe with the cache on the STREAM side instead, then
-    # anti-join the batch against the broadcast matched keys (≤|batch|)
-    _seen = (
-        cache.select(F.col("hash").alias("_page_hash"))
-        .join(
-            F.broadcast(pages.select("_page_hash").distinct()),
-            "_page_hash",
-            "left_semi",
-        )
-        .distinct()
-    )
+    # the cache streams against the broadcast page hashes (functions/keys);
+    # the batch then anti-joins the broadcast matched keys (≤|batch|)
+    stored = cache.select(F.col("hash").alias("_page_hash"))
+    _seen = keys.key_set(keys.probe(stored, pages, "_page_hash"), "_page_hash")
     pages = pages.join(
         F.broadcast(_seen), "_page_hash", "left_anti"
     ).drop("_page_hash")
-    result = run_import(pages, cache=cache)
-    # materialize counts BEFORE the writers overwrite the store paths these
-    # lazy plans still reference (read-then-overwrite-then-reread trap)
-    n_new = result.new_cache_mappings.count()
+    result = run_import(pages)
+    # count BEFORE the writers overwrite the store paths this lazy plan
+    # still references (read-then-overwrite-then-reread trap)
     n_pages = pages.count()
     # checkpoint the batch once: the merge writers overwrite store
     # partitions their own inputs may lazily read. Lazy — each relation
@@ -243,21 +234,23 @@ def import_pages_to_store(
     # the purge actually removed this batch's rows
     from wcdimportbot_spark.operators import versioned
 
-    def _merges() -> None:
+    def _merges() -> int:
         sinks.merge_write_items(spark, new_items, paths["items"])
         sinks.merge_write_claims(spark, new_claims, paths["claims"])
-        cache_ops.merge_write_cache(
+        return cache_ops.merge_write_cache(
             spark, new_items.select("hash", "qid"), paths["cache"]
         )
 
-    versioned.epoch_bracket(
+    # new items = the mappings the cache merge inserted; a repair re-run
+    # re-inserts only what a racing purge removed, so count the first
+    n_new = versioned.epoch_bracket(
         store_root,
         IMPORT_EPOCH_FILE,
         lambda: versioned.epoch_read(store_root, PURGE_EPOCH_FILE),
         1.0,
         _merges,
         "purge_documents",
-    )
+    )[0]
     # rejects stays OUTSIDE the bracket: it is the append-only
     # diagnostic side-output (purge boundary b2) — a repair re-run must
     # not append its rows twice
