@@ -1922,15 +1922,13 @@ def test_scrub_sentinel_guards_racing_readers(spark, tmp_path):
     (or waits it out), never returns a short result; a STALE sentinel
     (crashed scrub) raises with the heal remediation; and the next
     scrub clears a leftover sentinel after healing."""
-    import json
     import os
     import threading
     import time as _time
-    import unittest.mock as mock
 
     import pytest
 
-    from wcdimportbot_spark.operators import sinks
+    from wcdimportbot_spark.operators import hooks, sinks
 
     path = str(tmp_path / "out")
     rows = [(f"h{i}", i % 3) for i in range(30)]
@@ -1938,38 +1936,27 @@ def test_scrub_sentinel_guards_racing_readers(spark, tmp_path):
         rows, "text_hash string, batch_id int"
     ).write.partitionBy("batch_id").parquet(path)
 
-    swap_open = threading.Event()
-    release = threading.Event()
-    reader_result: dict = {}
-    real_sentinel = sinks._write_scrub_sentinel
-
-    def gated_sentinel(p, payload):
-        real_sentinel(p, payload)
-        swap_open.set()
-        assert release.wait(120), "reader never probed"
-
     def probe_reader():
+        hooks.point("test.probe")
         try:
-            swap_open.wait(120)
             sinks.assert_no_scrub_pending(path, wait=0.5)
-            reader_result["outcome"] = "returned"
+            return "returned"
         except TimeoutError:
-            reader_result["outcome"] = "timeout"
-        except Exception as e:  # pragma: no cover
-            reader_result["outcome"] = f"other: {e}"
+            return "timeout"
         finally:
-            release.set()
+            hooks.point("test.probed")
 
     doomed = spark.createDataFrame([("h0",), ("h1",)], "text_hash string")
-    with mock.patch.object(sinks, "_write_scrub_sentinel", gated_sentinel):
-        t = threading.Thread(target=probe_reader)
-        t.start()
+    # the reader probes inside the scrub's swap window
+    with hooks.schedule(
+        hooks.Rule("test.probe", after="scrub.sentinel.written"),
+        hooks.Rule("scrub.sentinel.written", after="test.probed"),
+    ), hooks.background(probe_reader) as reader:
         res = sinks.scrub_plain_partitions(
             spark, path, doomed, "text_hash", ["batch_id"]
         )
-        t.join(120)
     # the reader inside the window failed LOUDLY, never a short read
-    assert reader_result["outcome"] == "timeout"
+    assert reader.result == "timeout"
     assert res["rows_deleted"] == 2
     # window closed: the guarded read returns the complete layout
     assert not os.path.exists(os.path.join(path, sinks.SCRUB_SENTINEL))

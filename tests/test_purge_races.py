@@ -65,8 +65,8 @@ def test_purge_straddling_increment_repairs_to_serial_order(
     re-assert both merges, landing on the purge→ingest serial order:
     the content present in corpus AND index together."""
     import hashlib
-    import unittest.mock as mock
 
+    from wcdimportbot_spark.operators import hooks
     from wcdimportbot_spark.plans import curation_nightly as cn
 
     base = str(tmp_path / "cur")
@@ -74,46 +74,25 @@ def test_purge_straddling_increment_repairs_to_serial_order(
     cn.curate_increment(spark.createDataFrame([(1, T_A)], schema), base)
     h_d = hashlib.md5(T_D.encode()).hexdigest()
 
-    corpus_merged = threading.Event()
-    purge_done = threading.Event()
-    real_merge = cn.merge_curated_corpus
-    state = {"first": True}
-
-    def gated_merge(spark_, accepted, base_path, protocol=None):
-        out = real_merge(spark_, accepted, base_path, protocol=protocol)
-        if state["first"]:
-            state["first"] = False
-            corpus_merged.set()
-            assert purge_done.wait(120), "purge never ran"
-        return out
-
-    errs = []
-
     def run_increment():
-        try:
-            batch = spark.createDataFrame(
-                [(10, T_D), (11, T_B)], schema
-            )
-            cn.curate_increment(batch, base)
-        except Exception as e:  # surfaced by the main thread
-            errs.append(e)
+        batch = spark.createDataFrame([(10, T_D), (11, T_B)], schema)
+        cn.curate_increment(batch, base)
 
-    with mock.patch.object(cn, "merge_curated_corpus", gated_merge):
-        t = threading.Thread(target=run_increment)
-        t.start()
-        assert corpus_merged.wait(120), "increment never merged corpus"
+    with hooks.schedule(
+        hooks.Rule("test.purge", after="increment.corpus.merged"),
+        hooks.Rule("increment.corpus.merged", after="test.purged"),
+    ), hooks.background(run_increment):
         # full purge of the batch's own content INSIDE the increment's
         # write window: corpus arm deletes the row the increment just
         # inserted, index arm runs before the increment's index merge
+        hooks.point("test.purge")
         res = cn.purge_documents(
             spark,
             spark.createDataFrame([(h_d,)], "text_hash string"),
             base,
         )
+        hooks.point("test.purged")
         assert res["corpus_deleted"] == 1
-        purge_done.set()
-        t.join(300)
-        assert not t.is_alive() and not errs, errs
 
     # repair converged on the purge→ingest serial order: content in
     # corpus AND index together — never the mixed state
@@ -422,9 +401,8 @@ def test_index_delete_straddling_merge_repairs_blind_spot(
     reaching the band merge, so the bands can never backfill). The
     delete-epoch repair must re-assert both publishes."""
     import hashlib
-    import unittest.mock as mock
 
-    from wcdimportbot_spark.operators import sinks
+    from wcdimportbot_spark.operators import hooks
     from wcdimportbot_spark.operators import text_dedup as td
 
     base = str(tmp_path / "idx")
@@ -435,40 +413,20 @@ def test_index_delete_straddling_merge_repairs_blind_spot(
     )
     h_d = hashlib.md5(T_D.encode()).hexdigest()
 
-    bands_merged = threading.Event()
-    delete_done = threading.Event()
-    real_mw = sinks._merge_write
-    state = {"armed": True}
-
-    def gated_mw(spark_, df, path, **kw):
-        out = real_mw(spark_, df, path, **kw)
-        if state["armed"] and path.endswith("bands"):
-            state["armed"] = False
-            bands_merged.set()
-            assert delete_done.wait(120), "delete never ran"
-        return out
-
-    errs = []
-
-    def run_merge():
-        try:
-            td.dedup_index_ingest(
-                spark.createDataFrame([(10, T_D)], schema), base
-            )
-        except Exception as e:
-            errs.append(e)
-
-    with mock.patch.object(sinks, "_merge_write", gated_mw):
-        t = threading.Thread(target=run_merge)
-        t.start()
-        assert bands_merged.wait(120), "merge never published bands"
+    with hooks.schedule(
+        hooks.Rule("test.delete", after="dedup.bands.merged"),
+        hooks.Rule("dedup.bands.merged", after="test.deleted"),
+    ), hooks.background(
+        lambda: td.dedup_index_ingest(
+            spark.createDataFrame([(10, T_D)], schema), base
+        )
+    ):
         # full delete INSIDE the merge's two-publish window
+        hooks.point("test.delete")
         td.dedup_index_delete(
             spark.createDataFrame([(h_d,)], "text_hash string"), base
         )
-        delete_done.set()
-        t.join(300)
-        assert not t.is_alive() and not errs, errs
+        hooks.point("test.deleted")
 
     # the repair re-asserted both publishes: delete→merge serial order,
     # content fully indexed — never the hashes-only blind spot
@@ -583,9 +541,7 @@ def test_purge_straddling_import_repairs_to_serial_order(
     SKIPS every re-import of that page forever. The import's
     purge-epoch repair must re-assert all three merges (purge→import
     serial order: the page fully back)."""
-    import unittest.mock as mock
-
-    from wcdimportbot_spark.operators import sinks
+    from wcdimportbot_spark.operators import hooks
     from wcdimportbot_spark.plans import curation_nightly as cn
     from wcdimportbot_spark.plans import store_import as si
     from wcdimportbot_spark.plans.pipeline import run_import
@@ -600,33 +556,15 @@ def test_purge_straddling_import_repairs_to_serial_order(
     doomed_pairs = [(r["hash"], r["qid"]) for r in items_preview]
     assert doomed_pairs
 
-    claims_merged = threading.Event()
-    purge_done = threading.Event()
-    real_claims = sinks.merge_write_claims
-    state = {"armed": True}
-
-    def gated_claims(spark_, df, path, **kw):
-        out = real_claims(spark_, df, path, **kw)
-        if state["armed"]:
-            state["armed"] = False
-            claims_merged.set()
-            assert purge_done.wait(120), "purge never ran"
-        return out
-
-    errs = []
-
-    def run_import_thread():
-        try:
-            si.import_pages_to_store(spark, pages, gpaths)
-        except Exception as e:
-            errs.append(e)
-
-    with mock.patch.object(sinks, "merge_write_claims", gated_claims):
-        t = threading.Thread(target=run_import_thread)
-        t.start()
-        assert claims_merged.wait(120), "import never merged claims"
+    with hooks.schedule(
+        hooks.Rule("test.purge", after="import.claims.merged"),
+        hooks.Rule("import.claims.merged", after="test.purged"),
+    ), hooks.background(
+        lambda: si.import_pages_to_store(spark, pages, gpaths)
+    ):
         # graph-arm purge INSIDE the import's window: items + claims
         # rows (just merged) leave; the cache rows are not there yet
+        hooks.point("test.purge")
         res = cn.purge_documents(
             spark,
             spark.createDataFrame([], "text_hash string"),
@@ -636,10 +574,8 @@ def test_purge_straddling_import_repairs_to_serial_order(
                 doomed_pairs, "hash string, subject_qid string"
             ),
         )
+        hooks.point("test.purged")
         assert res["items_deleted"] == len(doomed_pairs)
-        purge_done.set()
-        t.join(300)
-        assert not t.is_alive() and not errs, errs
 
     # the repair re-asserted all three merges: purge→import serial
     # order — items AND cache agree (the page is importable/probed
@@ -737,9 +673,7 @@ def test_import_epoch_closes_manifest_detection_hole(spark, tmp_path):
     second read now observes the import's bumps and re-runs its
     deletes, converging on the import→purge serial order (page fully
     gone, re-import accepted)."""
-    import unittest.mock as mock
-
-    from wcdimportbot_spark.operators import sinks, versioned
+    from wcdimportbot_spark.operators import hooks
     from wcdimportbot_spark.plans import curation_nightly as cn
     from wcdimportbot_spark.plans import store_import as si
     from wcdimportbot_spark.plans.pipeline import run_import
@@ -754,100 +688,24 @@ def test_import_epoch_closes_manifest_detection_hole(spark, tmp_path):
     ]
     assert doomed_pairs
 
-    bump1_done = threading.Event()
-    items_merged = threading.Event()
-    deletes_done = threading.Event()
-    p1_checked = threading.Event()
-    state = {
-        "import_reads": 0,
-        "purge_bumps": 0,
-        "items_deletes": 0,
-        "items_merges": 0,
-    }
-    real_read = versioned.epoch_read
-    real_bump = versioned.epoch_bump
-    real_mwi = sinks.merge_write_items
-    real_mdi = sinks.merge_delete_items
-
-    def gated_read(base, fname):
+    importer = f"bracket:{si.IMPORT_EPOCH_FILE}:purge_documents"
+    purger = f"bracket:{si.PURGE_EPOCH_FILE}:import_pages_to_store"
+    with hooks.schedule(
         # the import's FIRST purge-epoch read (p0) happens only after
-        # the purge's first bump; its SECOND (p1) releases the purge's
-        # bump2 — the advice schedule's exact ordering
-        if (
-            fname == si.PURGE_EPOCH_FILE
-            and threading.current_thread().name == "importer"
-        ):
-            state["import_reads"] += 1
-            if state["import_reads"] == 1:
-                assert bump1_done.wait(300), "purge never bumped"
-            out = real_read(base, fname)
-            if state["import_reads"] == 2:
-                p1_checked.set()
-            return out
-        return real_read(base, fname)
-
-    def gated_bump(base, fname):
-        if fname == si.PURGE_EPOCH_FILE and state["purge_bumps"] == 1:
-            # bump2's BYTES must land strictly AFTER the import verified
-            # p1 == p0 (the advice schedule) — gate BEFORE the write
-            assert p1_checked.wait(300), "import never checked p1"
-        real_bump(base, fname)
-        if fname == si.PURGE_EPOCH_FILE:
-            state["purge_bumps"] += 1
-            if state["purge_bumps"] == 1:
-                bump1_done.set()
-                # hold the purge here until the import's items merge
-                # landed, so attempt-1 deletes run INSIDE the import's
-                # merge window (items merged, claims/cache not yet)
-                assert items_merged.wait(300), "import never merged"
-
-    def gated_mwi(spark_, df, path, **kw):
-        out = real_mwi(spark_, df, path, **kw)
-        state["items_merges"] += 1
-        if state["items_merges"] == 1:
-            items_merged.set()
-        return out
-
-    def gated_mdi(spark_, df, path, **kw):
-        state["items_deletes"] += 1
-        if state["items_deletes"] == 1:
-            # attempt-1 deletes run strictly inside the import's merge
-            # window: after its items merge, before its claims merge
-            assert items_merged.wait(300), "import never merged items"
-        return real_mdi(spark_, df, path, **kw)
-
-    # the import's claims merge must wait until attempt-1 deletes ran
-    real_mwc = sinks.merge_write_claims
-
-    def gated_mwc(spark_, df, path, **kw):
-        if threading.current_thread().name == "importer":
-            assert deletes_done.wait(300), "purge deletes never ran"
-        return real_mwc(spark_, df, path, **kw)
-
-    # bump2 is gated on p1_checked; release deletes_done right after the
-    # attempt-1 items delete returns (claims/cache stores hold no data
-    # yet at that point, so their deletes are skipped by has_parquet_data)
-    def gated_mdi_release(spark_, df, path, **kw):
-        out = gated_mdi(spark_, df, path, **kw)
-        if state["items_deletes"] == 1:
-            deletes_done.set()
-        return out
-
-    errs = []
-
-    def run_import_thread():
-        try:
-            si.import_pages_to_store(spark, pages, gpaths)
-        except Exception as e:
-            errs.append(e)
-
-    with mock.patch.object(versioned, "epoch_read", gated_read), \
-         mock.patch.object(versioned, "epoch_bump", gated_bump), \
-         mock.patch.object(sinks, "merge_write_items", gated_mwi), \
-         mock.patch.object(sinks, "merge_write_claims", gated_mwc), \
-         mock.patch.object(sinks, "merge_delete_items", gated_mdi_release):
-        t = threading.Thread(target=run_import_thread, name="importer")
-        t.start()
+        # the purge's first bump
+        hooks.Rule(f"{importer}:read", after=f"{purger}:body"),
+        # attempt-1 deletes run strictly inside the import's merge
+        # window: after its items merge, before its claims merge
+        # (the import's claims merge waits only for the items delete:
+        # claims/cache stores hold no data yet, so their deletes are
+        # skipped by has_parquet_data)
+        hooks.Rule(f"{purger}:body", after="import.items.merged"),
+        hooks.Rule("import.items.merged", after="purge.graph.items.deleted"),
+        # bump2's BYTES land strictly AFTER the import verified p1 == p0
+        hooks.Rule(f"{purger}:bump", hit=2, after=f"{importer}:done"),
+    ) as sched, hooks.background(
+        lambda: si.import_pages_to_store(spark, pages, gpaths)
+    ):
         res = cn.purge_documents(
             spark,
             spark.createDataFrame([], "text_hash string"),
@@ -857,11 +715,9 @@ def test_import_epoch_closes_manifest_detection_hole(spark, tmp_path):
                 doomed_pairs, "hash string, subject_qid string"
             ),
         )
-        t.join(600)
-        assert not t.is_alive() and not errs, errs
-        # the purge detected the import's epoch bumps and ran a second
-        # delete attempt (each attempt bumps the purge epoch twice)
-        assert state["purge_bumps"] >= 4, state
+    # the purge detected the import's epoch bumps and ran a second
+    # delete attempt (each attempt bumps the purge epoch twice)
+    assert sched.hits[f"{purger}:bump"] >= 4, sched.hits
 
     # import→purge serial order: the page fully gone from ALL stores —
     # never the cache-present/items-absent mixed state
@@ -972,11 +828,7 @@ def test_increment_inside_slow_purge_arm_is_detected(
     corpus+index arms: here the purge detects the straddle and re-runs
     both deletes, converging on the ingest→purge serial order (content
     gone from BOTH stores), and a fresh re-send is accepted back."""
-    import unittest.mock as mock
-
-    from pyspark.sql import functions as F  # noqa: F811
-
-    from wcdimportbot_spark.operators import sinks
+    from wcdimportbot_spark.operators import hooks, text_dedup
     from wcdimportbot_spark.plans import curation_nightly as cn
 
     base = str(tmp_path / "cur")
@@ -986,48 +838,35 @@ def test_increment_inside_slow_purge_arm_is_detected(
     h = ann.select("text_hash").first()["text_hash"]
     assert _store_presence(spark, base, h) == (True, True, True)
 
-    corpus_deleted = threading.Event()
-    increment_done = threading.Event()
-    state = {"deletes": 0}
-    real_del = sinks.delete_from_store
-
-    def gated_delete(spark_, doomed, path, **kw):
-        out = real_del(spark_, doomed, path, **kw)
-        state["deletes"] += 1
-        if state["deletes"] == 1:
-            # the corpus arm just deleted; STALL before the marker
-            # heartbeat so the increment's whole window (both merges +
-            # both fingerprint reads) lands inside this quiet stretch
-            corpus_deleted.set()
-            assert increment_done.wait(300), "increment never finished"
-        return out
-
-    errs = []
-
     def run_increment():
+        hooks.point("test.increment")
         try:
-            corpus_deleted.wait(300)
             cn.curate_increment(
                 spark.createDataFrame([(2, T_D)], ["doc_id", "text"]), base
             )
-        except Exception as e:
-            errs.append(e)
         finally:
-            increment_done.set()
+            hooks.point("test.incremented")
 
-    with mock.patch.object(sinks, "delete_from_store", gated_delete):
-        t = threading.Thread(target=run_increment)
-        t.start()
+    index_deleted = (
+        f"bracket:{text_dedup.DELETE_EPOCH_FILE}:dedup_index_merge:done"
+    )
+    with hooks.schedule(
+        # the increment starts once both arms removed the content...
+        hooks.Rule("test.increment", after="purge.corpus.deleted"),
+        hooks.Rule("test.increment", after=index_deleted),
+        # ...and the corpus arm STALLS before the marker heartbeat so
+        # the increment's whole window (both merges + both fingerprint
+        # reads) lands inside this quiet stretch
+        hooks.Rule("purge.corpus.deleted", after="test.incremented"),
+    ) as sched, hooks.background(run_increment):
         res = cn.purge_documents(
             spark,
             spark.createDataFrame([(h,)], "text_hash string"),
             base,
         )
-        t.join(600)
-        assert not t.is_alive() and not errs, errs
-        # the purge detected the in-arm increment and ran a second
-        # corpus delete (the re-merged contested row)
-        assert state["deletes"] >= 3, state
+    # the purge detected the in-arm increment and ran a second
+    # corpus delete (the re-merged contested row)
+    assert sched.hits["purge.corpus.deleted"] >= 2, sched.hits
 
     # ingest→purge serial order: the content gone from corpus AND both
     # index stores — never the mixed state
@@ -1055,10 +894,8 @@ def test_cli_delete_page_straddling_import(spark, tmp_path):
     an import's epoch bumps landed inside its window; the import side
     symmetrically re-merges when the delete's purge-epoch bumps landed
     inside its own — whatever the interleaving, items and cache agree."""
-    import unittest.mock as mock
-
     from wcdimportbot_spark.cli import main
-    from wcdimportbot_spark.operators import sinks
+    from wcdimportbot_spark.operators import hooks, sinks
     from wcdimportbot_spark.plans import store_import as si
 
     store = str(tmp_path / "graph")
@@ -1072,60 +909,24 @@ def test_cli_delete_page_straddling_import(spark, tmp_path):
         .collect()
     ]
 
-    # deterministic straddle: the delete's items arm runs right after
-    # the re-import's items merge, before its claims/cache merges
-    items_merged = threading.Event()
-    delete_done = threading.Event()
-    state = {"merges": 0, "deletes": 0}
-    real_mwi = sinks.merge_write_items
-    real_mdi = sinks.merge_delete_items
-    real_mwc = sinks.merge_write_claims
-
-    def gated_mwi(s_, df, path, **kw):
-        out = real_mwi(s_, df, path, **kw)
-        state["merges"] += 1
-        if state["merges"] == 1:
-            items_merged.set()
-        return out
-
-    def gated_mdi(s_, df, path, **kw):
-        state["deletes"] += 1
-        if state["deletes"] == 1:
-            assert items_merged.wait(300), "import never merged items"
-        return real_mdi(s_, df, path, **kw)
-
-    def gated_mwc(s_, df, path, **kw):
-        if threading.current_thread().name == "cli-importer":
-            assert delete_done.wait(300), "delete never ran"
-        return real_mwc(s_, df, path, **kw)
-
-    errs = []
-
-    def run_reimport():
-        try:
-            # purge the pages first so the re-import has real work —
-            # done INSIDE the thread before the gates arm so the
-            # delete below contests freshly-merging rows
-            si.import_pages_to_store(spark, pages, gpaths)
-        except Exception as e:
-            errs.append(e)
-
     # empty the store so the threaded import re-merges everything
     rc = main(["--store", store, "--delete-page", "Page One"])
     assert rc in (0, None)
     rc = main(["--store", store, "--delete-page", "Page Two"])
     assert rc in (0, None)
 
-    with mock.patch.object(sinks, "merge_write_items", gated_mwi), \
-         mock.patch.object(sinks, "merge_delete_items", gated_mdi), \
-         mock.patch.object(sinks, "merge_write_claims", gated_mwc):
-        t = threading.Thread(target=run_reimport, name="cli-importer")
-        t.start()
+    # deterministic straddle: the delete's items arm runs right after
+    # the re-import's items merge, before its claims/cache merges
+    deleter = f"bracket:{si.PURGE_EPOCH_FILE}:import_pages_to_store"
+    with hooks.schedule(
+        hooks.Rule(f"{deleter}:body", after="import.items.merged"),
+        hooks.Rule("import.items.merged", after="test.deleted"),
+    ), hooks.background(
+        lambda: si.import_pages_to_store(spark, pages, gpaths)
+    ):
         rc = main(["--store", store, "--delete-page", "Page One"])
-        delete_done.set()
-        t.join(600)
+        hooks.point("test.deleted")
         assert rc in (0, None)
-        assert not t.is_alive() and not errs, errs
 
     # serializable outcome for every contested hash: items and cache
     # agree (one of the two serial orders, never the mixed state)
@@ -1166,57 +967,36 @@ def test_ann_delete_straddling_add_reresolves_moved_vector(
     privacy purge. The delete-side repair must detect the merge bump,
     RE-RESOLVE from the live store, and re-delete — merge→delete
     serial order, the id gone from every cluster."""
-    import unittest.mock as mock
-
     from wcdimportbot_spark.operators import ann_store as ann
-    from wcdimportbot_spark.operators import sinks
+    from wcdimportbot_spark.operators import hooks
 
     base = str(tmp_path / "ann")
     emb = _ann_two_sided(spark)
     ann.ann_index_build(emb, base, num_clusters=2, m=2, n_codes=4)
 
-    resolved = threading.Event()
-    add_done = threading.Event()
-    real_del = sinks.delete_from_store
-    state = {"armed": True}
-
-    def gated_delete(spark_, pairs, path, **kw):
-        # first publish = the delete's attempt-0 pruned CoW; hold it
-        # open until the racing add has fully landed
-        if state["armed"]:
-            state["armed"] = False
-            resolved.set()
-            assert add_done.wait(120), "racing add never ran"
-        return real_del(spark_, pairs, path, **kw)
-
-    errs, out = [], {}
-
-    def run_delete():
-        try:
-            out["n"] = ann.ann_index_delete(
-                spark.createDataFrame([(0,)], "vec_id long"), base
-            )
-        except Exception as e:
-            errs.append(e)
-
-    with mock.patch.object(sinks, "delete_from_store", gated_delete):
-        t = threading.Thread(target=run_delete)
-        t.start()
-        assert resolved.wait(120), "delete never reached its publish"
+    # first publish = the delete's attempt-0 pruned CoW; it holds open
+    # until the racing add has fully landed
+    with hooks.schedule(
+        hooks.Rule("test.add", after="ann.delete.publish"),
+        hooks.Rule("ann.delete.publish", after="test.added"),
+    ), hooks.background(
+        lambda: ann.ann_index_delete(
+            spark.createDataFrame([(0,)], "vec_id long"), base
+        )
+    ) as delete:
         # the racing add: id 0's negated embedding — nearest centroid
         # is the OTHER side, and add_batch's cluster-pruned
         # insert-if-absent probe never sees the stored (0, c+) row
+        hooks.point("test.add")
         ann.ann_index_add_batch(_negated(emb, 0), base)
-        add_done.set()
-        t.join(300)
-        assert not t.is_alive() and not errs, errs
+        hooks.point("test.added")
 
     codes = ann.read_ann_codes(spark, base)
     # the doomed id is gone from EVERY cluster (stale pair + the moved
     # row the re-resolve found), bystanders untouched
     assert codes.filter(F.col("vec_id") == 0).count() == 0
     assert codes.count() == 19
-    assert out["n"] == 2  # attempt-0 stale pair + repaired moved row
+    assert delete.result == 2  # attempt-0 stale pair + repaired moved row
 
 
 def test_ann_delete_caller_pairs_stale_token_reresolves(spark, tmp_path):
@@ -1285,58 +1065,35 @@ def test_ann_add_batch_straddled_by_delete_converges_serial(
     idempotent merge — converging on the delete→merge serial order:
     batch ids the delete swept or predated end up present, ids only
     the delete named stay gone."""
-    import unittest.mock as mock
-
     from wcdimportbot_spark.operators import ann_store as ann
-    from wcdimportbot_spark.operators import sinks
+    from wcdimportbot_spark.operators import hooks
 
     base = str(tmp_path / "ann")
     emb = _ann_two_sided(spark)
     ann.ann_index_build(emb, base, num_clusters=2, m=2, n_codes=4)
 
-    merge_open = threading.Event()
-    delete_done = threading.Event()
-    real_mw = sinks._merge_write
-    calls = {"n": 0}
-    state = {"armed": True}
-
-    def gated_mw(spark_, df, path, **kw):
-        calls["n"] += 1
-        if state["armed"]:
-            # inside the add's epoch window, BEFORE its probe/publish:
-            # hold here while the full delete runs
-            state["armed"] = False
-            merge_open.set()
-            assert delete_done.wait(120), "delete never ran"
-        return real_mw(spark_, df, path, **kw)
-
     batch = spark.createDataFrame(
         [(20, [14.0, 1.0, 0.0, 0.0]), (21, [-14.0, -1.0, 0.0, 0.0])],
         "vec_id long, embedding array<double>",
     )
-    errs, out = [], {}
-
-    def run_add():
-        try:
-            out["res"] = ann.ann_index_add_batch(batch, base)
-        except Exception as e:
-            errs.append(e)
-
-    with mock.patch.object(sinks, "_merge_write", gated_mw):
-        t = threading.Thread(target=run_add)
-        t.start()
-        assert merge_open.wait(120), "add never reached its merge"
+    # inside the add's epoch window, BEFORE its probe/publish: the add
+    # holds there while the full delete runs
+    with hooks.schedule(
+        hooks.Rule("test.delete", after="ann.add.merge"),
+        hooks.Rule("ann.add.merge", after="test.deleted"),
+    ) as sched, hooks.background(
+        lambda: ann.ann_index_add_batch(batch, base)
+    ):
         # full delete INSIDE the add's window: one stored bystander id
         # (5) plus one batch id (20, not yet published — swallowed)
+        hooks.point("test.delete")
         ann.ann_index_delete(
             spark.createDataFrame([(5,), (20,)], "vec_id long"), base
         )
-        delete_done.set()
-        t.join(300)
-        assert not t.is_alive() and not errs, errs
+        hooks.point("test.deleted")
 
     # detection fired: the post-window check re-ran the merge
-    assert calls["n"] >= 2
+    assert sched.hits["ann.add.merge"] >= 2
     codes = ann.read_ann_codes(spark, base)
     # delete→merge serial: batch ids present (20 re-asserted), the
     # delete-only id permanently gone, no duplicate rows anywhere

@@ -73,7 +73,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from wcdimportbot_spark.functions import keys
-from wcdimportbot_spark.operators import versioned
+from wcdimportbot_spark.operators import hooks, versioned
 
 MODEL_DIR = "model"
 CODES_DIR = "codes"
@@ -587,6 +587,7 @@ def ann_index_add_batch(
             )
             enc = keys.unique(enc, "vec_id")  # deduped on vec_id above
             n_batch = enc.count()
+            hooks.point("ann.add.merge")
             try:
                 n_fresh = sinks._merge_write(
                     spark,
@@ -780,6 +781,7 @@ def ann_index_delete(
             _codes_path(base_path)
         ):
             return 0
+        hooks.point("ann.delete.publish")
         return sinks.delete_from_store(
             spark,
             pairs,

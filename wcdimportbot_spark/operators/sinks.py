@@ -64,7 +64,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from wcdimportbot_spark.functions import keys
-from wcdimportbot_spark.operators import versioned
+from wcdimportbot_spark.operators import hooks, versioned
 
 #: store-level hash-bucket fanout; sized so local test stores stay readable.
 #: At 100 TB pick buckets ≈ store_size / executor-comfortable-chunk.
@@ -1722,6 +1722,7 @@ def scrub_plain_partitions(
             "n_partitions": len(pairs),
         },
     )
+    hooks.point("scrub.sentinel.written")
     # heartbeat discipline (r14 verdict What's wrong #1): the swap loop
     # is O(touched partitions) driver renames — a coarse layout (or a
     # slow object-store shim where each rename is a copy+delete) can

@@ -33,7 +33,7 @@ from pyspark.sql import functions as F
 from wcdimportbot_spark.functions import keys
 from wcdimportbot_spark.functions.expr_memo import memo_expr
 from wcdimportbot_spark.functions.partitioning import fan_out
-from wcdimportbot_spark.operators import versioned
+from wcdimportbot_spark.operators import hooks, versioned
 
 TOKEN_SPLIT_RE = "[^a-z0-9]+"
 
@@ -1090,7 +1090,7 @@ def dedup_index_merge(
         # return must not let the hashes publish jump the caller's
         # ordering.
         def _bands_arm(gate):
-            return sinks._merge_write(
+            n = sinks._merge_write(
                 spark,
                 _with_band_key(s_bands),
                 os.path.join(base_path, "bands"),
@@ -1101,6 +1101,8 @@ def dedup_index_merge(
                 publish_gate=_chain(publish_gate, gate),
                 protocol=protocol,
             )
+            hooks.point("dedup.bands.merged")
+            return n
 
         def _hashes_arm(gate):
             return sinks._merge_write(

@@ -59,6 +59,8 @@ import shutil
 import time
 import uuid
 
+from wcdimportbot_spark.operators import hooks
+
 CURRENT_FILE = "_CURRENT"
 LOCK_FILE = "_WRITER.lock"
 
@@ -263,19 +265,35 @@ def epoch_bracket(
     and ``root``. No-race cost: two fingerprint reads and two tiny
     sidecar writes.
 
+    Schedule points (:mod:`hooks`), one set per call site:
+    ``bracket:<own>:<name>:read`` before each fingerprint read,
+    ``…:bump`` before each own-sidecar bump, ``…:body`` before ``fn``
+    and ``…:done`` once the closing read matched.
+
     :func:`race_backoff`, :func:`epoch_read` and :func:`epoch_bump` are
-    looked up as module globals at call time, so forced-schedule tests
-    and tracers may replace them on this module."""
+    looked up as module globals at call time, so a tracer wrapping this
+    module's functions from outside the package (perfbench) sees the
+    bracket's calls."""
+    p_read, p_bump, p_body, p_done = (
+        f"bracket:{own}:{name}:{step}"
+        for step in ("read", "bump", "body", "done")
+    )
     results = []
     for attempt in range(REPAIR_ATTEMPTS):
         race_backoff(attempt, scale)
+        hooks.point(p_read)
         before = read_other()
         if own is not None:
+            hooks.point(p_bump)
             epoch_bump(root, own)
+        hooks.point(p_body)
         results.append(fn())
         if own is not None:
+            hooks.point(p_bump)
             epoch_bump(root, own)
+        hooks.point(p_read)
         if read_other() == before:
+            hooks.point(p_done)
             return results
     raise RuntimeError(
         f"{name} kept landing inside one bracketed window on {root} "

@@ -4895,10 +4895,8 @@ def s13_purge_race(spark, sf_dir):
     import hashlib
     import shutil
     import tempfile
-    import threading
-    import unittest.mock as mock
 
-    from wcdimportbot_spark.operators import sinks
+    from wcdimportbot_spark.operators import hooks, sinks
     from wcdimportbot_spark.plans import curation_nightly as cn
 
     t_d = ("This doomed document describes the history of distributed "
@@ -4939,53 +4937,33 @@ def s13_purge_race(spark, sf_dir):
     try:
         cn.curate_increment(docs, base)
 
-        corpus_merged = threading.Event()
-        purge_done = threading.Event()
-        real_merge = cn.merge_curated_corpus
-        gate = {"armed": True}
-
-        def gated_merge(spark_, accepted, base_path, protocol=None):
-            out = real_merge(
-                spark_, accepted, base_path, protocol=protocol
-            )
-            if gate["armed"]:
-                gate["armed"] = False
-                corpus_merged.set()
-                purge_done.wait(120)
-            return out
-
-        errs = []
-
         def run_increment():
-            try:
-                cn.curate_increment(
-                    spark.createDataFrame(
-                        [(900001, t_d), (900002, t_b)],
-                        "doc_id long, text string",
-                    ),
-                    base,
-                )
-            except Exception as e:
-                errs.append(e)
+            cn.curate_increment(
+                spark.createDataFrame(
+                    [(900001, t_d), (900002, t_b)],
+                    "doc_id long, text string",
+                ),
+                base,
+            )
 
-        with mock.patch.object(cn, "merge_curated_corpus", gated_merge):
-            th = threading.Thread(target=run_increment)
-            th.start()
-            ok_gate = corpus_merged.wait(120)
+        # the whole purge runs between the increment's corpus merge and
+        # its index merge; a broken schedule raises instead
+        with hooks.schedule(
+            hooks.Rule("test.purge", after="increment.corpus.merged"),
+            hooks.Rule("increment.corpus.merged", after="test.purged"),
+        ), hooks.background(run_increment):
+            hooks.point("test.purge")
             res = cn.purge_documents(
                 spark,
                 spark.createDataFrame([(h_d,)], "text_hash string"),
                 base,
             )
-            purge_done.set()
-            th.join(300)
-            ok_threads = ok_gate and not th.is_alive() and not errs
+            hooks.point("test.purged")
 
         # the repair must have landed the purge→ingest serial order:
         # contested content in ALL THREE stores, never a mixed state
         straddle_repaired = (
-            ok_threads
-            and res["corpus_deleted"] == 1
+            res["corpus_deleted"] == 1
             and presence(base, h_d) == (True, True, True)
         )
         bystander_intact = presence(base, h_b) == (True, True, True)
@@ -6249,7 +6227,7 @@ QUERIES["s14_refresh_spill_heal"].oracle = _refresh_spill_oracle()
     "detecting (the P12 probe then skips every re-import forever). The "
     "import now bumps _IMPORT_EPOCH.json inside EVERY merge attempt and "
     "the purge fingerprints that sidecar: this row forces the exact "
-    "schedule with one-shot gates — the purge observes the import's "
+    "schedule with named schedule points — the purge observes the import's "
     "bumps, re-runs its deletes, and the stores converge on the "
     "import→purge serial order (page fully gone, manifest consistent); "
     "a fresh re-import is then ACCEPTED back, matching the closed-form "
@@ -6281,10 +6259,8 @@ def s14_import_epoch_race(spark, sf_dir):
     import os
     import shutil
     import tempfile
-    import threading
-    import unittest.mock as mock
 
-    from wcdimportbot_spark.operators import sinks, versioned
+    from wcdimportbot_spark.operators import hooks, sinks
     from wcdimportbot_spark.plans import curation_nightly as cn
     from wcdimportbot_spark.plans import store_import as si
     from wcdimportbot_spark.plans.pipeline import run_import
@@ -6306,79 +6282,22 @@ def s14_import_epoch_race(spark, sf_dir):
             .items.select("hash", "qid")
             .collect()
         ]
-        bump1_done = threading.Event()
-        items_merged = threading.Event()
-        deletes_done = threading.Event()
-        p1_checked = threading.Event()
-        state = {"import_reads": 0, "purge_bumps": 0, "deletes": 0}
-        real_read = versioned.epoch_read
-        real_bump = versioned.epoch_bump
-        real_mwi = sinks.merge_write_items
-        real_mwc = sinks.merge_write_claims
-        real_mdi = sinks.merge_delete_items
-
-        def gated_read(b, fname):
-            if (
-                fname == si.PURGE_EPOCH_FILE
-                and threading.current_thread().name == "s14importer"
-            ):
-                state["import_reads"] += 1
-                if state["import_reads"] == 1:
-                    bump1_done.wait(300)
-                out = real_read(b, fname)
-                if state["import_reads"] == 2:
-                    p1_checked.set()
-                return out
-            return real_read(b, fname)
-
-        def gated_bump(b, fname):
-            if (
-                fname == si.PURGE_EPOCH_FILE
-                and state["purge_bumps"] == 1
-            ):
-                p1_checked.wait(300)
-            real_bump(b, fname)
-            if fname == si.PURGE_EPOCH_FILE:
-                state["purge_bumps"] += 1
-                if state["purge_bumps"] == 1:
-                    bump1_done.set()
-                    items_merged.wait(300)
-
-        def gated_mwi(s_, df, path, **kw):
-            out = real_mwi(s_, df, path, **kw)
-            if not items_merged.is_set():
-                items_merged.set()
-            return out
-
-        def gated_mwc(s_, df, path, **kw):
-            if threading.current_thread().name == "s14importer":
-                deletes_done.wait(300)
-            return real_mwc(s_, df, path, **kw)
-
-        def gated_mdi(s_, df, path, **kw):
-            out = real_mdi(s_, df, path, **kw)
-            state["deletes"] += 1
-            if state["deletes"] == 1:
-                deletes_done.set()
-            return out
-
-        errs = []
-
-        def run_import_thread():
-            try:
-                si.import_pages_to_store(spark, pages, gpaths)
-            except Exception as e:  # surfaced via the booleans
-                errs.append(e)
-
-        with mock.patch.object(versioned, "epoch_read", gated_read), \
-             mock.patch.object(versioned, "epoch_bump", gated_bump), \
-             mock.patch.object(sinks, "merge_write_items", gated_mwi), \
-             mock.patch.object(sinks, "merge_write_claims", gated_mwc), \
-             mock.patch.object(sinks, "merge_delete_items", gated_mdi):
-            th = threading.Thread(
-                target=run_import_thread, name="s14importer"
-            )
-            th.start()
+        importer = f"bracket:{si.IMPORT_EPOCH_FILE}:purge_documents"
+        purger = f"bracket:{si.PURGE_EPOCH_FILE}:import_pages_to_store"
+        # the import's first read comes after the purge's first bump;
+        # the purge's first deletes run after the import's items merge
+        # and before its claims merge; the purge's second bump lands
+        # after the import's closing read matched
+        with hooks.schedule(
+            hooks.Rule(f"{importer}:read", after=f"{purger}:body"),
+            hooks.Rule(f"{purger}:body", after="import.items.merged"),
+            hooks.Rule(
+                "import.items.merged", after="purge.graph.items.deleted"
+            ),
+            hooks.Rule(f"{purger}:bump", hit=2, after=f"{importer}:done"),
+        ) as sched, hooks.background(
+            lambda: si.import_pages_to_store(spark, pages, gpaths)
+        ):
             cn.purge_documents(
                 spark,
                 spark.createDataFrame([], "text_hash string"),
@@ -6388,11 +6307,9 @@ def s14_import_epoch_race(spark, sf_dir):
                     doomed_pairs, "hash string, subject_qid string"
                 ),
             )
-            th.join(600)
-            ok = not th.is_alive() and not errs
         # the purge observed the import epochs and ran a second delete
         # attempt (each attempt bumps the purge epoch twice)
-        purge_detected = ok and state["purge_bumps"] >= 4
+        purge_detected = sched.hits[f"{purger}:bump"] >= 4
         # import→purge serial order: items AND cache both forgot
         from wcdimportbot_spark.operators.cache import read_cache
 
@@ -6610,7 +6527,7 @@ def s14_output_retention(spark, sf_dir):
     "them can insert a doomed id's CHANGED embedding into a cluster "
     "the pair set never named — the vector stayed SERVED after a "
     "'complete' privacy purge. This row forces the exact schedule with "
-    "a one-shot gate (the delete's first publish holds open while a "
+    "a schedule point (the delete's first publish holds open while a "
     "full add of the doomed ids' negated embeddings lands): the "
     "delete observes the add's merge-epoch bumps, RE-RESOLVES from the "
     "live store, and re-deletes — merge→delete serial order, every "
@@ -6638,11 +6555,9 @@ def s15_ann_epoch_race(spark, sf_dir):
     ``crud/delete.py:44-61``."""
     import shutil
     import tempfile
-    import threading
-    import unittest.mock as mock
 
     from wcdimportbot_spark.operators import ann_store as ann
-    from wcdimportbot_spark.operators import sinks
+    from wcdimportbot_spark.operators import hooks
 
     emb = load(spark, sf_dir, "embeddings")
     base = tempfile.mkdtemp(prefix="wcd-annrace-")
@@ -6656,40 +6571,19 @@ def s15_ann_epoch_race(spark, sf_dir):
             F.transform("embedding", lambda x: -x).alias("embedding"),
         )
 
-        resolved = threading.Event()
-        add_done = threading.Event()
-        real_del = sinks.delete_from_store
-        state = {"armed": True, "publishes": 0}
-
-        def gated_delete(spark_, pairs, path, **kw):
-            state["publishes"] += 1
-            if state["armed"]:
-                # attempt-0 pair set is resolved; hold its publish open
-                # until the racing add has fully landed INSIDE the
-                # delete's bracketed window
-                state["armed"] = False
-                resolved.set()
-                add_done.wait(300)
-            return real_del(spark_, pairs, path, **kw)
-
-        errs = []
-
-        def run_delete():
-            try:
-                ann.ann_index_delete(doomed_ids, base)
-            except Exception as e:
-                errs.append(e)
-
-        with mock.patch.object(sinks, "delete_from_store", gated_delete):
-            th = threading.Thread(target=run_delete)
-            th.start()
-            assert resolved.wait(300), "delete never reached its publish"
+        # attempt-0 pair set is resolved; its publish holds open until
+        # the racing add has fully landed INSIDE the delete's window
+        with hooks.schedule(
+            hooks.Rule("test.add", after="ann.delete.publish"),
+            hooks.Rule("ann.delete.publish", after="test.added"),
+        ) as sched, hooks.background(
+            lambda: ann.ann_index_delete(doomed_ids, base)
+        ):
+            hooks.point("test.add")
             ann.ann_index_add_batch(negated, base)
-            add_done.set()
-            th.join(600)
-            ok = not th.is_alive() and not errs
+            hooks.point("test.added")
         # the delete detected the in-window merge and published again
-        race_detected = ok and state["publishes"] >= 2
+        race_detected = sched.hits["ann.delete.publish"] >= 2
         codes = ann.read_ann_codes(spark, base)
         serial_state = (
             codes.join(

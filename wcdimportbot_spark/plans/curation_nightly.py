@@ -62,7 +62,7 @@ from pyspark.sql.window import Window
 
 from wcdimportbot_spark.functions import keys
 from wcdimportbot_spark.functions.partitioning import fan_out
-from wcdimportbot_spark.operators import sinks, versioned
+from wcdimportbot_spark.operators import hooks, sinks, versioned
 
 #: store layout under the curation base path
 CORPUS_DIR = "corpus"
@@ -344,9 +344,11 @@ def curate_increment(
         # before taking any lock, see versioned.run_publish_ordered).
         def _corpus_arm(_gate) -> int:
             # arm 0 — no gate; idempotent insert-if-absent by hash
-            return merge_curated_corpus(
+            n = merge_curated_corpus(
                 spark, accepted, base_path, protocol=protocol
             )
+            hooks.point("increment.corpus.merged")
+            return n
 
         def _index_arm(gate) -> None:
             # the index learns every novel winner (kept or low-quality:
@@ -1083,8 +1085,9 @@ def purge_documents(
     from concurrent.futures import ThreadPoolExecutor
 
     def _corpus_arm() -> int:
+        n = 0
         if n_doomed and sinks.has_parquet_data(corpus_path):
-            return sinks.delete_from_store(
+            n = sinks.delete_from_store(
                 spark,
                 hashes,
                 corpus_path,
@@ -1093,7 +1096,8 @@ def purge_documents(
                 partitions=[sinks.BUCKET_COL],
                 protocol=protocol,
             )
-        return 0
+        hooks.point("purge.corpus.deleted")
+        return n
 
     def _index_arm() -> dict:
         if n_doomed:
@@ -1239,14 +1243,16 @@ def purge_documents(
             # import-race bracket around this function re-runs the whole
             # set on a detected overlap, parallel or not.
             def _items() -> int:
+                n = 0
                 if sinks.has_parquet_data(gpaths["items"]):
-                    return sinks.merge_delete_items(
+                    n = sinks.merge_delete_items(
                         spark,
                         doomed_hashes,
                         gpaths["items"],
                         protocol=protocol,
                     )
-                return 0
+                hooks.point("purge.graph.items.deleted")
+                return n
 
             def _claims() -> int:
                 if qids is not None and sinks.has_parquet_data(

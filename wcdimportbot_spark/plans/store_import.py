@@ -232,11 +232,13 @@ def import_pages_to_store(
     begin_import_manifest(store_root, paths)
     # purge race (see PURGE_EPOCH_FILE): re-runs insert nothing unless
     # the purge actually removed this batch's rows
-    from wcdimportbot_spark.operators import versioned
+    from wcdimportbot_spark.operators import hooks, versioned
 
     def _merges() -> int:
         sinks.merge_write_items(spark, new_items, paths["items"])
+        hooks.point("import.items.merged")
         sinks.merge_write_claims(spark, new_claims, paths["claims"])
+        hooks.point("import.claims.merged")
         return cache_ops.merge_write_cache(
             spark, new_items.select("hash", "qid"), paths["cache"]
         )
