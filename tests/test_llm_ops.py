@@ -1245,7 +1245,7 @@ def test_dedup_index_compaction_preserves_probe_results(spark, tmp_path):
         ],
         schema,
     )
-    before, _ = dedup_index_probe(probe_batch, store)
+    before = dedup_index_probe(probe_batch, store)[0]
     before_rows = sorted(tuple(r) for r in before.collect())
 
     def n_files(sub):
@@ -1268,7 +1268,7 @@ def test_dedup_index_compaction_preserves_probe_results(spark, tmp_path):
     )
     assert n_files("hashes") + n_files("bands") < frag
 
-    after, _ = dedup_index_probe(probe_batch, store)
+    after = dedup_index_probe(probe_batch, store)[0]
     assert sorted(tuple(r) for r in after.collect()) == before_rows
 
     # compaction preserved the bands store's hash attribution: the
@@ -1282,7 +1282,7 @@ def test_dedup_index_compaction_preserves_probe_results(spark, tmp_path):
         spark.createDataFrame([(h,)], "text_hash string"), store
     )
     assert res_d["hashes_deleted"] == 1 and res_d["bands_deleted"] == 4
-    re_probe, _ = dedup_index_probe(probe_batch, store)
+    re_probe = dedup_index_probe(probe_batch, store)[0]
     assert (
         re_probe.filter(
             "doc_id = 999 AND NOT exact_dup_of_history AND fresh"
@@ -2046,14 +2046,14 @@ def test_dedup_index_split_bucket_composes_with_loop(spark, sf_dir, tmp_path):
 
     # the loop composes through the split map
     dedup_index_ingest(b2, base)
-    re_probe, _ = dedup_index_probe(b1.orderBy("doc_id").limit(10), base)
+    re_probe = dedup_index_probe(b1.orderBy("doc_id").limit(10), base)[0]
     assert re_probe.filter("exact_dup_of_history").count() == 10
     h = re_probe.orderBy("doc_id").limit(1).collect()[0]["text_hash"]
     res = dedup_index_delete(
         spark.createDataFrame([(h,)], "text_hash string"), base
     )
     assert res["hashes_deleted"] == 1
-    re2, _ = dedup_index_probe(b1.orderBy("doc_id").limit(10), base)
+    re2 = dedup_index_probe(b1.orderBy("doc_id").limit(10), base)[0]
     assert re2.filter("exact_dup_of_history").count() == 9
 
 

@@ -6,6 +6,7 @@ Override the data directory with $SPARK_GRAFT_PLANSHAPE_SF to re-verify
 the same shapes at another scale (the sf1 rehearsal runs these against
 the 10x corpus: plan shape must be scale-invariant)."""
 
+import json
 import os
 
 SF = os.environ.get("SPARK_GRAFT_PLANSHAPE_SF", "/root/testdata/sf0.001")
@@ -135,6 +136,12 @@ def test_registry_size_matches_docs():
     assert "129 queries" in em.__doc__
     assert len(_WINDOW) == 50
     assert set(_WINDOW) <= set(QUERIES)
+    # the 50-row window is frozen: exactly the r16 correctness run's rows,
+    # and __spark_entry__.queries() serves them first, in window order
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    with open(os.path.join(root, "CORRECTNESS_r16.json")) as f:
+        assert set(_WINDOW) == set(json.load(f))
+    assert list(em.queries())[:50] == _WINDOW
     # every registry entry is oracle-verifiable — the ANN accuracy-contract
     # rework removed the last two rows-only entries
     assert all(spec.oracle is not None for spec in QUERIES.values())

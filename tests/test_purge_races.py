@@ -433,7 +433,7 @@ def test_index_delete_straddling_merge_repairs_blind_spot(
     assert _index_presence(spark, base, h_d) == (True, True)
     # near-dup detection actually works for it (the blind spot would
     # pass this content straight through the band probe)
-    ann, _s = td.dedup_index_probe(
+    ann, _s, _b = td.dedup_index_probe(
         spark.createDataFrame([(20, T_D)], schema), base
     )
     row = ann.collect()[0]

@@ -778,18 +778,15 @@ def _attributed_bands(
     id_col: str,
     text_col: str,
     shingle_n: int,
-    new_bands: DataFrame | None = None,
 ) -> DataFrame:
     """The ATTRIBUTED band relation for ``docs``: distinct
-    (text_hash, band, bucket). ``new_bands`` reuses an
-    already-materialized (id, band, bucket) signature pass."""
-    if new_bands is None:
-        new_bands = lsh_bands(
-            minhash_signatures(docs, num_hashes, id_col, shingle_n),
-            num_hashes,
-            bands,
-            id_col,
-        )
+    (text_hash, band, bucket)."""
+    new_bands = lsh_bands(
+        minhash_signatures(docs, num_hashes, id_col, shingle_n),
+        num_hashes,
+        bands,
+        id_col,
+    )
     return (
         new_bands.join(
             docs.select(
@@ -888,6 +885,64 @@ DELETE_EPOCH_FILE = "_DELETE_EPOCH.json"
 MERGE_EPOCH_FILE = "_MERGE_EPOCH.json"
 
 
+def _signature_params(
+    base_path: str, num_hashes: int, bands: int, shingle_n: int
+) -> tuple[int, int, int]:
+    """``(num_hashes, bands, shingle_n)`` as recorded in the index's
+    ``_INDEX.json`` sidecar (the WRITER's values — a probe under guessed
+    parameters silently probes the wrong buckets); the arguments apply
+    only to sidecar-less stores (bootstrap, legacy)."""
+    recorded = _index_params(base_path)
+    if recorded is None:
+        return num_hashes, bands, shingle_n
+    return recorded["num_hashes"], recorded["bands"], recorded["shingle_n"]
+
+
+def _probe_for_merge(
+    new_docs: DataFrame,
+    base_path: str,
+    num_hashes: int,
+    bands: int,
+    id_col: str,
+    text_col: str,
+    shingle_n: int,
+):
+    """:func:`dedup_index_probe` plus the merge of its FRESH docs:
+    returns ``(ann, merge)`` where ``merge(protocol=None)`` runs
+    :func:`dedup_index_merge` under the same resolved signature
+    parameters, reusing the probe's signature pass (attributed to the
+    fresh docs' hashes) instead of re-shingling the survivors. The
+    caller acts on ``ann`` before calling ``merge``."""
+    num_hashes, bands, shingle_n = _signature_params(
+        base_path, num_hashes, bands, shingle_n
+    )
+    ann, survivors, new_bands = dedup_index_probe(
+        new_docs, base_path, num_hashes, bands, id_col, text_col, shingle_n
+    )
+    fresh = ann.filter(F.col("fresh")).select(id_col, "text_hash")
+    precomputed = (
+        fresh.select("text_hash").distinct(),
+        new_bands.join(fresh, id_col)
+        .select("text_hash", "band", "bucket")
+        .distinct(),
+    )
+
+    def merge(protocol: str | None = None) -> None:
+        dedup_index_merge(
+            survivors,
+            base_path,
+            num_hashes,
+            bands,
+            id_col,
+            text_col,
+            shingle_n,
+            protocol=protocol,
+            precomputed=precomputed,
+        )
+
+    return ann, merge
+
+
 def dedup_index_ingest(
     new_docs: DataFrame,
     base_path: str,
@@ -911,36 +966,13 @@ def dedup_index_ingest(
     own buckets and concurrent readers never block. DuckDB-verified as
     the two-batch chain (``dedup_incremental_maint`` registry row /
     :func:`incremental_maint_sql`)."""
-    # resolve signature parameters ONCE from the store's sidecar so the
-    # probe's precomputed bands and the merge's recorded check agree
-    # even when the caller's arguments drifted from the writer's
-    recorded = _index_params(base_path)
-    if recorded is not None:
-        num_hashes = recorded["num_hashes"]
-        bands = recorded["bands"]
-        shingle_n = recorded["shingle_n"]
-    ann, survivors, new_bands = dedup_index_probe(
-        new_docs, base_path, num_hashes, bands, id_col, text_col, shingle_n,
-        with_bands=True,
+    ann, merge = _probe_for_merge(
+        new_docs, base_path, num_hashes, bands, id_col, text_col, shingle_n
     )
-    fresh_ann = ann.filter(F.col("fresh"))
-    pre_hashes = fresh_ann.select("text_hash").distinct()
-    pre_bands = (
-        new_bands.join(fresh_ann.select(id_col, "text_hash"), id_col)
-        .select("text_hash", "band", "bucket")
-        .distinct()
-    )
-    dedup_index_merge(
-        survivors,
-        base_path,
-        num_hashes,
-        bands,
-        id_col,
-        text_col,
-        shingle_n,
-        protocol=protocol,
-        precomputed=(pre_hashes, pre_bands),
-    )
+    # the probe contract's one action (no output of its own to write):
+    # one job, the cost of an eager checkpoint
+    ann.write.format("noop").mode("overwrite").save()
+    merge(protocol)
     return ann
 
 
@@ -952,50 +984,34 @@ def dedup_index_probe(
     id_col: str = "doc_id",
     text_col: str = "text",
     shingle_n: int = 3,
-    with_bands: bool = False,
-    eager: bool = True,
 ):
     """Read-only half of the ingest loop: annotate the batch against the
     current index snapshot, WITHOUT mutating the store. Returns
-    ``(ann, survivors)`` — the annotation (materialized, so its plan is
-    pinned to the pre-merge snapshot) and the fresh-document relation to
-    hand to :func:`dedup_index_merge` once the batch's outputs are
-    durable. The split exists for at-least-once callers (the streaming
-    gate): merging the index BEFORE the outputs land means a replayed
-    batch sees its own half-finished ingest as history and its docs
-    never reach the output sink — silent loss; outputs-then-merge flips
-    the recovery failure mode to duplicate output rows, which append
-    sinks absorb downstream (the standard at-least-once contract).
+    ``(ann, survivors, new_bands)``: the annotation, the fresh-document
+    relation to hand to :func:`dedup_index_merge` once the batch's
+    outputs are durable, and the batch's (id, band, bucket) signature
+    pass — shingling + minhash is the expensive part of the loop and
+    the merge needs exactly these rows again, so callers pass them back
+    via ``dedup_index_merge(precomputed=...)``. The split exists for
+    at-least-once callers (the streaming gate): merging the index
+    BEFORE the outputs land means a replayed batch sees its own
+    half-finished ingest as history and its docs never reach the output
+    sink — silent loss; outputs-then-merge flips the recovery failure
+    mode to duplicate output rows, which append sinks absorb downstream
+    (the standard at-least-once contract).
 
-    ``with_bands=True`` returns ``(ann, survivors, new_bands)`` where
-    ``new_bands`` is the batch's MATERIALIZED (id, band, bucket)
-    relation — shingling + minhash is the expensive part of the loop,
-    and the merge needs exactly these rows again, so callers pass them
-    back via ``dedup_index_merge(precomputed=...)`` instead of paying
-    the signature computation twice per batch.
+    Signature parameters resolve from the store (:func:`_signature_params`).
 
-    Signature parameters come from the store's ``_INDEX.json`` sidecar
-    when present (the WRITER's recorded values — a probe under guessed
-    parameters silently probes the wrong buckets); the arguments apply
-    only to sidecar-less stores (bootstrap, legacy).
-
-    ``eager=False`` returns ``ann`` as a LAZY checkpoint for callers
-    that build one more pre-mutation relation ON TOP of the annotation
-    and materialize THAT instead (curate_increment's batch report):
-    one job then pins both plans to the pre-merge snapshot instead of
-    two. The caller owns the contract the default otherwise enforces —
-    it MUST run an action over ``ann`` (or a consumer) before any
-    store mutation."""
-    recorded = _index_params(base_path)
-    if recorded is not None:
-        num_hashes = recorded["num_hashes"]
-        bands = recorded["bands"]
-        shingle_n = recorded["shingle_n"]
+    ``ann`` and ``new_bands`` are LAZY checkpoints. The contract: the
+    caller runs one action over ``ann``, or over a relation built on
+    it, before its first store mutation — that job pins ``ann`` to the
+    pre-merge snapshot and persists ``new_bands`` with it.
+    ``tests/test_isolation.py`` checks it at every publish."""
+    num_hashes, bands, shingle_n = _signature_params(
+        base_path, num_hashes, bands, shingle_n
+    )
     spark = new_docs.sparkSession
     hashes, bands_rel = read_dedup_index(spark, base_path)
-    # one signature pass serves probe AND merge; lazy — ann's eager
-    # checkpoint below consumes new_bands, so its materialization job
-    # persists these blocks too (one job instead of two, r15)
     new_bands = lsh_bands(
         minhash_signatures(new_docs, num_hashes, id_col, shingle_n),
         num_hashes,
@@ -1005,13 +1021,11 @@ def dedup_index_probe(
     ann = incremental_dedup(
         new_docs, hashes, bands_rel, num_hashes, bands, id_col, text_col,
         shingle_n, new_bands=new_bands,
-    ).localCheckpoint(eager=eager)
+    ).localCheckpoint(eager=False)
     survivors = new_docs.join(
         ann.filter(F.col("fresh")).select(id_col), id_col, "left_semi"
     )
-    if with_bands:
-        return ann, survivors, new_bands
-    return ann, survivors
+    return ann, survivors, new_bands
 
 
 def dedup_index_merge(
@@ -1056,7 +1070,7 @@ def dedup_index_merge(
     spark = survivors.sparkSession
     if precomputed is not None:
         # the probe already paid the shingle+minhash pass for exactly
-        # these docs (dedup_index_probe(with_bands=True)) — reuse it.
+        # these docs (dedup_index_probe's new_bands) — reuse it.
         # s_bands must be the ATTRIBUTED relation (text_hash, band,
         # bucket): the store keys band rows by contributing hash so the
         # index can forget (see _with_band_key)
@@ -1186,9 +1200,7 @@ def dedup_index_delete(
 
     from wcdimportbot_spark.operators import sinks
 
-    recorded = _index_params(base_path)
-    if recorded is not None:
-        bands = recorded["bands"]
+    bands = _signature_params(base_path, 0, bands, 0)[1]
     spark = doomed_hashes.sparkSession
     # lazy: the first delete's touched-bucket collect (its first action,
     # before any store mutation in this call) runs the checkpoint; the

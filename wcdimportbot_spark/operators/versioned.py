@@ -130,7 +130,9 @@ def run_publish_ordered(arms: list) -> list:
       crash-window ordering every serial caller relied on is
       preserved byte-for-byte; what overlaps is only the arms'
       batch-side evaluation (materialization + touched-partition
-      collects), which reads no mutable state.
+      collects), which reads no store another arm of the group
+      publishes (checked at every publish by
+      ``tests/test_isolation.py``, P2).
     - **no deadlock**: an arm waiting on a gate holds NO lock, so every
       lock in the system is held only by arms already past their gates,
       which run to completion without waiting on anything — lock-wait

@@ -5530,7 +5530,7 @@ def s12_curation_refresh(spark, sf_dir):
         )
         # the index forgot every OLD text: read-only probe, no mutation
         old_texts = docs.join(F.broadcast(ids_df), "doc_id", "left_semi")
-        probe_ann, _surv = dedup_index_probe(
+        probe_ann, _surv, _bands = dedup_index_probe(
             old_texts.select("doc_id", "text"), _index_path(base)
         )
         index_forgot = (

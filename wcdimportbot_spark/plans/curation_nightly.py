@@ -244,22 +244,15 @@ def curate_increment(
     # separate actions below (probe bands, corpus merge, index merge,
     # annotation) — without the checkpoint each action re-runs the
     # whole scoring chain over the batch (measured 4× the increment).
-    # Lazy: the probe's eager `ann` checkpoint consumes this relation
-    # (pre-mutation), so one job materializes both (r15).
+    # Lazy: the batch report `out` below materializes it together with
+    # the probe's checkpoints (pre-mutation), in one job.
     ranked = (
         profiled.withColumn("rn", F.row_number().over(w))
         .localCheckpoint(eager=False)
     )
     winners = ranked.filter(F.col("rn") == 1).drop("rn")
-    # read-only probe against the PRE-increment index snapshot; ann is
-    # materialized inside, so later merges can't tear its plan.
-    # with_bands: the batch's minhash signature pass is the expensive
-    # part of the loop — reuse it for the index merge below instead of
-    # re-shingling the novel docs
-    # eager=False: the batch report `out` below is built on top of the
-    # annotation and materialized BEFORE any store mutates — that one
-    # job pins ann + ranked + new_bands to the pre-increment snapshot
-    # (the probe's default would spend a second full pass on it)
+    # read-only probe against the PRE-increment index snapshot; its
+    # signature pass (new_bands) is reused by the index merge below
     ann, _fresh, new_bands = dedup_index_probe(
         # one row per text: rn == 1 keeps one row per text_hash
         keys.unique(winners.select(id_col, text_col), text_col),
@@ -269,8 +262,6 @@ def curate_increment(
         id_col,
         text_col,
         shingle_n,
-        with_bands=True,
-        eager=False,
     )
     flags = winners.join(
         ann.select(
@@ -297,8 +288,8 @@ def curate_increment(
     # the batch report references only PRE-increment state (ann probes
     # the pre-merge snapshot; ranked is batch-local), so it is built and
     # materialized HERE, before any store mutates: this one job also
-    # materializes the lazy ann/ranked/new_bands checkpoints (the r15
-    # fusion rule), so the merge plans below run off cached blocks
+    # materializes the lazy ann/ranked/new_bands checkpoints (the
+    # probe contract's action), so the merge plans run off cached blocks
     out = (
         ranked.select(id_col, "text_hash", "quality", "detected_lang", "rn")
         # join the annotation directly: flags ≡ winners ⋈ ann carries

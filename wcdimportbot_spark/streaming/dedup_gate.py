@@ -29,10 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from wcdimportbot_spark.operators.text_dedup import (
-    dedup_index_merge,
-    dedup_index_probe,
-)
+from wcdimportbot_spark.operators.text_dedup import _probe_for_merge
 
 
 def incremental_dedup_batch_fn(
@@ -93,31 +90,24 @@ def incremental_dedup_batch_fn(
     def fn(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        docs = batch_df.select(id_col, text_col)
-        ann, survivors = dedup_index_probe(
-            docs,
+        ann, merge = _probe_for_merge(
+            batch_df.select(id_col, text_col),
             index_path,
-            num_hashes=num_hashes,
-            bands=bands,
-            id_col=id_col,
-            text_col=text_col,
-            shingle_n=shingle_n,
+            num_hashes,
+            bands,
+            id_col,
+            text_col,
+            shingle_n,
         )
         annotated = batch_df.join(ann, id_col).withColumn(
             "batch_id", F.lit(batch_id)
         )
+        # the first write is the probe contract's action: it
+        # materializes ann before the merge mutates the index
         _write(annotated.filter(F.col("fresh")), fresh_out_path)
         if rejects_out_path is not None:
             _write(annotated.filter(~F.col("fresh")), rejects_out_path)
-        dedup_index_merge(
-            survivors,
-            index_path,
-            num_hashes=num_hashes,
-            bands=bands,
-            id_col=id_col,
-            text_col=text_col,
-            shingle_n=shingle_n,
-        )
+        merge()
         if compact_every and batch_id % compact_every == compact_every - 1:
             from wcdimportbot_spark.operators.text_dedup import (
                 compact_dedup_index,
