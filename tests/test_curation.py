@@ -770,16 +770,14 @@ def test_purge_graph_arm_crash_replay_converges(spark, tmp_path):
     )
 
 
-def test_purge_hash_only_replay_inherits_recorded_qids(spark, tmp_path):
-    """The hash-only graph purge is crash-replayable THROUGH the marker:
-    the pending marker records the resolved claim subjects (keyed by an
-    item-hash digest), so a crash AFTER the items arm — which removes
-    the hash→qid lookup source — still converges under a plain replay
+def _crash_graph_purge_after_items(spark, tmp_path):
+    """A hash-only graph purge of ihash1 (subject Q1; Q2 stays) that
+    crashes AFTER the items delete removed the hash→qid lookup source.
+    Returns ``(base, gstore, replay)``; ``replay()`` re-runs the purge
     with the same hash-only args."""
     import unittest.mock as mock
 
     import pytest
-    from pyspark.sql import functions as F
 
     from wcdimportbot_spark.operators import cache as cache_ops
     from wcdimportbot_spark.operators import sinks
@@ -817,22 +815,21 @@ def test_purge_hash_only_replay_inherits_recorded_qids(spark, tmp_path):
         gpaths["cache"],
     )
 
-    hash_only = spark.createDataFrame([("ihash1",)], "hash string")
-    # crash AFTER the items delete (lookup source for ihash1 now gone)
+    def replay():
+        return cn.purge_documents(
+            spark,
+            spark.createDataFrame([(1,)], "doc_id long"),
+            base,
+            graph_store=gstore,
+            item_hashes=spark.createDataFrame([("ihash1",)], "hash string"),
+        )
+
     with mock.patch.object(
         sinks, "merge_delete_claims", side_effect=RuntimeError("killed")
     ):
         with pytest.raises(RuntimeError, match="killed"):
-            cn.purge_documents(
-                spark,
-                spark.createDataFrame([(1,)], "doc_id long"),
-                base,
-                graph_store=gstore,
-                item_hashes=hash_only,
-            )
-    state = cn.purge_state(base)
-    assert state["status"] == "pending"
-    assert state["graph_subject_qids"] == ["Q1"]
+            replay()
+    assert cn.purge_state(base)["status"] == "pending"
     # the items row is gone — a lookup can no longer resolve Q1
     assert (
         sinks.read_items(spark, gpaths["items"])
@@ -840,16 +837,15 @@ def test_purge_hash_only_replay_inherits_recorded_qids(spark, tmp_path):
         .count()
         == 0
     )
+    return base, gstore, replay
 
-    # plain replay with the SAME hash-only args: qids inherited from
-    # the marker, claims arm converges, marker commits
-    res = cn.purge_documents(
-        spark,
-        spark.createDataFrame([(1,)], "doc_id long"),
-        base,
-        graph_store=gstore,
-        item_hashes=hash_only,
-    )
+
+def _assert_only_q1_claims_purged(spark, base, gstore, res):
+    from wcdimportbot_spark.operators import sinks
+    from wcdimportbot_spark.plans import curation_nightly as cn
+    from wcdimportbot_spark.plans.store_import import store_paths
+
+    gpaths = store_paths(gstore)
     assert res["claims_deleted"] == 1
     assert cn.purge_state(base)["status"] == "committed"
     assert (
@@ -866,6 +862,40 @@ def test_purge_hash_only_replay_inherits_recorded_qids(spark, tmp_path):
         .count()
         == 1
     )
+
+
+def test_purge_hash_only_replay_inherits_recorded_qids(spark, tmp_path):
+    """The hash-only graph purge is crash-replayable THROUGH the marker:
+    the pending marker records the resolved claim subjects (keyed by an
+    item-hash digest), so a crash AFTER the items arm — which removes
+    the hash→qid lookup source — still converges under a plain replay
+    with the same hash-only args."""
+    from wcdimportbot_spark.plans import curation_nightly as cn
+
+    base, gstore, replay = _crash_graph_purge_after_items(spark, tmp_path)
+    assert cn.purge_state(base)["graph_subject_qids"] == ["Q1"]
+    # plain replay with the SAME hash-only args: qids inherited from
+    # the marker, claims arm converges, marker commits
+    _assert_only_q1_claims_purged(spark, base, gstore, replay())
+
+
+def test_purge_graph_qids_spill_above_cap(spark, tmp_path, monkeypatch):
+    """The recorded claim subjects ride the same cap-or-spill bound as
+    every other marker record: above ``MARKER_HASHES_CAP`` they spill to
+    a parquet relation the marker references instead of an inline
+    list, and a hash-only replay after the items arm still converges
+    from the spill alone."""
+    import os
+
+    from wcdimportbot_spark.plans import curation_nightly as cn
+
+    monkeypatch.setattr(cn, "MARKER_HASHES_CAP", 0)
+    base, gstore, replay = _crash_graph_purge_after_items(spark, tmp_path)
+    marker = cn.purge_state(base)
+    assert "graph_subject_qids" not in marker
+    assert os.path.isdir(os.path.join(base, marker["graph_qids_spill"]))
+    _assert_only_q1_claims_purged(spark, base, gstore, replay())
+    assert not os.path.exists(os.path.join(base, "_PURGE_SPILL"))
 
 
 def test_purge_vacuum_scrubs_retained_history(spark, tmp_path):
@@ -1781,14 +1811,16 @@ def test_scrub_escaped_partition_names(spark, tmp_path):
 
 
 def test_curate_refresh_overcap_ids_spill_heal(spark, tmp_path, monkeypatch):
-    """r13 verdict Next #1 — refresh_doc_ids was the ONE uncapped marker
-    field: curate_refresh collected every stale id into the marker JSON
-    with no spill analog, so a bulk re-crawl refresh (millions of edited
-    docs) would drag its whole id set onto the driver and write a
-    multi-hundred-MB marker. Above the cap the id set now SPILLS to a
-    parquet side relation the marker points at; a refresh that crashes
-    inside its internal purge heals on the next call FROM THE SPILL, and
-    the healed docs' retry annotation still reports refreshed=True."""
+    """r13 verdict Next #1 — refresh_doc_ids was uncapped (so were the
+    graph arm's recorded qids, until every marker record went through one
+    cap-or-spill helper): curate_refresh collected every stale id into
+    the marker JSON with no spill analog, so a bulk re-crawl refresh
+    (millions of edited docs) would collect its whole id set into one
+    process and write a multi-hundred-MB marker. Above the cap the id
+    set now SPILLS to a parquet side relation the marker points at; a
+    refresh that crashes inside its internal purge heals on the next
+    call FROM THE SPILL, and the healed docs' retry annotation still
+    reports refreshed=True."""
     import unittest.mock as mock
 
     import pytest

@@ -1155,14 +1155,37 @@ def test_ann_ingest_gate_stream_batch_parity_and_replay(spark, sf_dir, tmp_path)
     assert probe_set(stream_store) == probe_set(batch_store)
 
 
-def test_windowed_sketch_retention_prune(spark, tmp_path):
+@pytest.mark.parametrize("protocol", ["lock", "optimistic"])
+def test_windowed_sketch_retention_prune(
+    spark, tmp_path, monkeypatch, protocol
+):
     """r9 verdict #7 — the windowed sketch store's documented
     window-age bound, enforced: pruning folds aged-out windows into the
     lifetime row (window_start NULL). Per-window estimates survive only
     for retained windows; LIFETIME estimates stay exact across prune
     passes and straggler re-folds (HLL union is a register max — no
-    double count)."""
+    double count). The gate and the prune commit under the store's
+    write protocol like every other store write."""
     from pyspark.sql import functions as F
+
+    from wcdimportbot_spark.operators import versioned
+
+    monkeypatch.setenv("WCD_STORE_PROTOCOL", protocol)
+    commits = {"lock": 0, "optimistic": 0}
+
+    def counted(name, fn):
+        def wrapper(*a, **kw):
+            commits[name] += 1
+            return fn(*a, **kw)
+
+        return wrapper
+
+    monkeypatch.setattr(
+        versioned, "publish", counted("lock", versioned.publish)
+    )
+    monkeypatch.setattr(
+        versioned, "try_publish", counted("optimistic", versioned.try_publish)
+    )
 
     from wcdimportbot_spark.streaming.sketch_gate import (
         prune_windowed_sketches,
@@ -1215,9 +1238,14 @@ def test_windowed_sketch_retention_prune(spark, tmp_path):
     assert lifetime() == {"click": 10}
 
     # nothing old enough: publishes nothing
+    n_commits = dict(commits)
     assert prune_windowed_sketches(spark, store, "2024-03-02") == {
         "pruned_windows": 0
     }
+    assert commits == n_commits
+    # 3 gate batches + 2 prunes, all under the configured protocol
+    other = "optimistic" if protocol == "lock" else "lock"
+    assert commits[protocol] == 5 and commits[other] == 0
 
 
 def test_dedup_gate_inline_compaction(spark, tmp_path):

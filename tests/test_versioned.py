@@ -2040,3 +2040,59 @@ def test_epoch_bracket_without_own_sidecar_writes_nothing(
     assert out == [7, 7]  # "a" → "b" changed inside attempt 0
     assert not any(c[0] == "bump" for c in calls)
     assert not os.path.exists(root)
+
+
+@pytest.mark.parametrize(
+    "writer",
+    ["store_manifest", "purge_marker", "current_pointer"],
+)
+def test_sidecar_writers_race_free(tmp_path, writer):
+    """Two threads rewriting one sidecar never trip over each other's
+    temp file: every atomic sidecar write stages to a name unique to its
+    writer before the rename. A shared ``.tmp`` sibling lets one
+    writer's rename move the temp out from under the other
+    (FileNotFoundError). The leftover temp names of a crashed writer are
+    invisible to the version listing and never linked forward."""
+    import threading
+
+    from wcdimportbot_spark.plans import curation_nightly as cn
+    from wcdimportbot_spark.plans import store_import
+
+    root = str(tmp_path / "store")
+    write = {
+        "store_manifest": lambda i: store_import._write_manifest(
+            root, {"status": "pending", "i": i}
+        ),
+        "purge_marker": lambda i: cn._write_purge_marker(
+            root, {"status": "pending", "i": i}
+        ),
+        "current_pointer": lambda i: versioned.publish(root, f"v{i:08d}"),
+    }[writer]
+    errors = []
+
+    def run():
+        try:
+            for i in range(300):
+                write(i)
+        except Exception as e:  # noqa: BLE001 - asserted below
+            errors.append(e)
+
+    threads = [threading.Thread(target=run) for _ in range(2)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=120)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == []
+    os.makedirs(root, exist_ok=True)
+    assert [f for f in os.listdir(root) if ".tmp" in f] == []
+
+    # a crashed writer's temps: not versions, not carried by link_tree
+    os.makedirs(os.path.join(root, "v00000001"))
+    for name in (versioned.CURRENT_FILE, "_PURGE_MANIFEST.json"):
+        with open(os.path.join(root, f"{name}.tmp.1.ab12"), "w") as f:
+            f.write("x")
+    assert versioned.list_versions(root) == ["v00000001"]
+    dst = str(tmp_path / "linked")
+    versioned.link_tree(root, dst)
+    assert [f for f in os.listdir(dst) if ".tmp" in f] == []

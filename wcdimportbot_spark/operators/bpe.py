@@ -415,20 +415,21 @@ def save_merges(
     spark, merges: list[tuple[int, str, str, int]], path: str
 ) -> str:
     """Publish the merge table as a new snapshot version of a tokenizer
-    store (operators/versioned.py engine: staged write, atomic pointer
-    flip, writer lock). A tokenizer is a *versioned corpus artifact* —
-    retraining publishes a new version while encode jobs pinned to the
-    old one keep reading it (``load_merges(version=...)``), exactly the
-    items/claims-store contract. Returns the published version name."""
+    store (a full rewrite through ``versioned.commit_full``: staged
+    write, atomic pointer flip, under the store's write protocol). A
+    tokenizer is a *versioned corpus artifact* — retraining publishes a
+    new version while encode jobs pinned to the old one keep reading it
+    (``load_merges(version=...)``), exactly the items/claims-store
+    contract. Returns the published version name."""
     from wcdimportbot_spark.operators import versioned
 
     df = spark.createDataFrame(merges, MERGE_SCHEMA)
-    with versioned.writer_lock(path):
-        version, vdir = versioned.stage_new(path)
-        # M rows — one file, no partitioning
-        df.coalesce(1).write.mode("overwrite").parquet(vdir)
-        versioned.publish(path, version)
-    return version
+    # M rows — one file, no partitioning
+    return versioned.commit_full(
+        path,
+        None,
+        lambda vdir: df.coalesce(1).write.mode("overwrite").parquet(vdir),
+    )
 
 
 def load_merges(

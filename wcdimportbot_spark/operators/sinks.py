@@ -1564,13 +1564,9 @@ def partition_tuples_cond(partition_cols: list[str], tuples):
 
 
 def _write_scrub_sentinel(path: str, payload: dict) -> None:
-    p = os.path.join(path, SCRUB_SENTINEL)
-    tmp = f"{p}.tmp.{os.getpid()}"
-    with open(tmp, "w", encoding="ascii") as f:
-        json.dump(payload, f)
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(tmp, p)
+    versioned.write_atomic(
+        os.path.join(path, SCRUB_SENTINEL), json.dumps(payload)
+    )
 
 
 def scrub_plain_partitions(

@@ -861,14 +861,9 @@ def _record_index_params(
                 f"index to change signature parameters"
             )
         return
-    os.makedirs(base_path, exist_ok=True)
-    p = os.path.join(base_path, INDEX_PARAMS_FILE)
-    tmp = p + ".tmp"
-    with open(tmp, "w", encoding="ascii") as f:
-        json.dump(want, f)
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(tmp, p)
+    versioned.write_atomic(
+        os.path.join(base_path, INDEX_PARAMS_FILE), json.dumps(want)
+    )
 
 
 #: the merge's and the delete's own sidecars for

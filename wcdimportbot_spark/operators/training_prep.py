@@ -262,13 +262,12 @@ def write_training_shards(
     import json
     import os
 
-    side = os.path.join(path, "_SHARDS.json")
-    tmp = side + ".tmp"
-    with open(tmp, "w", encoding="ascii") as f:
-        json.dump({"n_shards": n_shards, "epoch": epoch, "key": key}, f)
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(tmp, side)
+    from wcdimportbot_spark.operators import versioned
+
+    versioned.write_atomic(
+        os.path.join(path, "_SHARDS.json"),
+        json.dumps({"n_shards": n_shards, "epoch": epoch, "key": key}),
+    )
 
 
 def purge_training_shards(

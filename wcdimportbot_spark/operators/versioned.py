@@ -187,6 +187,24 @@ def run_publish_ordered(arms: list) -> list:
     return results
 
 
+def write_atomic(path: str, text: str) -> None:
+    """Replace the small file ``path`` with ``text`` atomically: write a
+    temp name unique to this writer (pid + uuid), fsync, ``os.replace``.
+    A reader sees the old bytes or the new ones, never a torn file, and
+    concurrent writers of one file never share a temp name — a shared
+    ``.tmp`` sibling lets one writer's replace rename the temp out from
+    under another (FileNotFoundError). Every temp name starts with the
+    file's own name plus ``.tmp.``: :func:`link_tree` never carries one
+    forward and :func:`list_versions` never lists one."""
+    os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
+    tmp = f"{path}.tmp.{os.getpid()}.{uuid.uuid4().hex}"
+    with open(tmp, "w", encoding="utf-8") as f:
+        f.write(text)
+        f.flush()
+        os.fsync(f.fileno())
+    os.replace(tmp, path)
+
+
 def epoch_bump(base_path: str, fname: str) -> None:
     """Rewrite an epoch sidecar with fresh bytes — a FINGERPRINT, not a
     sequence number. The read-increment-replace below is deliberately
@@ -198,32 +216,23 @@ def epoch_bump(base_path: str, fname: str) -> None:
     (the ``nonce`` is a fresh uuid per write, so even same-``n``
     same-``ts`` collisions produce distinct content), which is exactly
     what the :func:`epoch_read` fingerprint comparisons consume. The
-    counter and timestamp are kept for human forensics only.
-
-    Concurrency-safe on the filesystem level too: each writer stages to
-    a UNIQUE temp name (pid + uuid suffix) before the atomic
-    ``os.replace`` — a shared ``.tmp`` sibling would let one bumper's
-    replace rename the temp out from under another, failing an innocent
-    merge/delete with FileNotFoundError."""
+    counter and timestamp are kept for human forensics only. Concurrent
+    bumpers are filesystem-safe through :func:`write_atomic`."""
     import json
     import time
-    import uuid
 
+    p = os.path.join(base_path, fname)
     try:
-        with open(os.path.join(base_path, fname), encoding="ascii") as f:
+        with open(p, encoding="ascii") as f:
             n = int(json.load(f).get("epoch", 0))
     except (OSError, ValueError):
         n = 0
-    os.makedirs(base_path, exist_ok=True)
-    p = os.path.join(base_path, fname)
-    tmp = f"{p}.tmp.{os.getpid()}.{uuid.uuid4().hex}"
-    with open(tmp, "w", encoding="ascii") as f:
-        json.dump(
-            {"epoch": n + 1, "ts": time.time(), "nonce": uuid.uuid4().hex}, f
-        )
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(tmp, p)
+    write_atomic(
+        p,
+        json.dumps(
+            {"epoch": n + 1, "ts": time.time(), "nonce": uuid.uuid4().hex}
+        ),
+    )
 
 
 #: attempts of one :func:`epoch_bracket` before it fails loudly
@@ -489,12 +498,7 @@ def publish(path: str, version: str) -> None:
     staging = os.path.join(path, version + STAGING_SUFFIX)
     if os.path.isdir(staging):
         os.replace(staging, os.path.join(path, version))
-    tmp = os.path.join(path, CURRENT_FILE + ".tmp")
-    with open(tmp, "w", encoding="ascii") as f:
-        f.write(version)
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(tmp, os.path.join(path, CURRENT_FILE))
+    write_atomic(os.path.join(path, CURRENT_FILE), version)
     _prune(path, version)
 
 
@@ -547,12 +551,7 @@ def rollback(path: str, version: str) -> None:
                 f"cannot roll back {path} to {version!r}: retained "
                 f"versions are {list_versions(path)}"
             )
-        tmp = os.path.join(path, CURRENT_FILE + ".tmp")
-        with open(tmp, "w", encoding="ascii") as f:
-            f.write(version)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, os.path.join(path, CURRENT_FILE))
+        write_atomic(os.path.join(path, CURRENT_FILE), version)
 
 
 def link_tree(
@@ -842,12 +841,7 @@ def _advance_current(path: str, version: str) -> None:
         cur = current_version(path)
         if cur is not None and cur >= version:
             return
-        tmp = os.path.join(path, CURRENT_FILE + ".opt.tmp")
-        with open(tmp, "w", encoding="ascii") as f:
-            f.write(version)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, os.path.join(path, CURRENT_FILE))
+        write_atomic(os.path.join(path, CURRENT_FILE), version)
 
 
 def publish_full_optimistic(

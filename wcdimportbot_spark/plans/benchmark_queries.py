@@ -6064,9 +6064,10 @@ def _refresh_spill_oracle():
     "s14_refresh_spill_heal",
     "LLM-ops bulk-refresh crash replay from the id spill (r13 verdict "
     "Next #1)",
-    "refresh_doc_ids was the ONE uncapped marker field: curate_refresh "
-    "collected every stale id into the marker JSON via a driver "
-    "collect, unbounded for a bulk re-crawl. Above MARKER_HASHES_CAP "
+    "refresh_doc_ids was an uncapped marker field (as were the graph "
+    "arm's recorded qids): curate_refresh collected every stale id into "
+    "the marker JSON via a collect, unbounded for a bulk "
+    "re-crawl. Above MARKER_HASHES_CAP "
     "(patched to 2 in-row so the contract runs at test scale) the id "
     "set now SPILLS to a parquet side relation the marker points at — "
     "a distributed write, zero driver bytes. The refresh is crashed "
@@ -6081,8 +6082,8 @@ def _refresh_spill_oracle():
 )
 def s14_refresh_spill_heal(spark, sf_dir):
     """plans/curation_nightly.curate_refresh above the marker cap: the
-    stale-id set rides the same cap-or-spill discipline as the resolved
-    hashes (curation_nightly.py marker_extra), and the heal path
+    stale-id set rides the same cap-or-spill discipline as every marker
+    record (curation_nightly._record), and the heal path
     materializes the spilled ids BEFORE the replay purge's commit
     removes the spill. Scale shape: one O(stale) distributed parquet
     write; no driver-resident id set at any size."""

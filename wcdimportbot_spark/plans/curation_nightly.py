@@ -54,10 +54,14 @@ the store machinery cites ``crud/create.py:25-45`` idempotence.
 from __future__ import annotations
 
 import os
+import shutil
 import time
+from functools import reduce
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructField, StructType
 from pyspark.sql.window import Window
 
 from wcdimportbot_spark.functions import keys
@@ -71,12 +75,12 @@ INDEX_DIR = "dedup_index"
 #: the one-shot pipeline's quality threshold (curation_pipeline row)
 MIN_QUALITY = 0.7
 
-#: largest resolved-hash set the purge marker records verbatim (~3 MB of
-#: JSON at the cap). Above it the set SPILLS to a parquet side relation
-#: under ``base/_PURGE_SPILL/<digest>`` (distributed write — the driver
-#: never collects the set) whose path the marker records, so bulk purges
-#: stay crash-replayable from the marker + spill alone; the spill is
-#: removed when the marker commits.
+#: largest recorded set the purge marker holds verbatim (~3 MB of JSON
+#: at the cap). Above it the set SPILLS to a parquet side relation under
+#: ``base/_PURGE_SPILL/`` (a distributed write — the set is never
+#: collected) whose path the marker records, so bulk purges stay
+#: crash-replayable from the marker + spill alone; the spill is removed
+#: when the marker commits. Read only by :func:`_record`.
 MARKER_HASHES_CAP = 100_000
 
 
@@ -397,17 +401,93 @@ PURGE_MANIFEST = "_PURGE_MANIFEST.json"
 
 
 def _write_purge_marker(base_path: str, payload: dict) -> None:
-    """Atomic write-temp + rename (the _CURRENT discipline)."""
     import json
 
-    os.makedirs(base_path, exist_ok=True)
-    p = os.path.join(base_path, PURGE_MANIFEST)
-    tmp = p + ".tmp"
-    with open(tmp, "w", encoding="ascii") as f:
-        json.dump(payload, f)
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(tmp, p)
+    versioned.write_atomic(
+        os.path.join(base_path, PURGE_MANIFEST), json.dumps(payload)
+    )
+
+
+class _Record(NamedTuple):
+    key: str  # marker key of the inline sorted JSON list
+    spill_key: str  # marker key of the spill path (base-relative)
+    column: str  # the recorded one-column relation's column
+    spill: str  # spill name under _PURGE_SPILL, formatted with the marker
+    digest: str | None = None  # marker key the record is only valid under
+
+
+#: every resolution a purge carries across a crash. Each is derived
+#: from rows the purge's own arms then delete, so after a crash the
+#: pending marker (or the spill it references) is the replay's only
+#: copy: :func:`_record` writes it, :func:`_recorded` reads it back, a
+#: matched replay inherits what it did not re-record, ``force=True``
+#: removes the spills and the commit removes ``_PURGE_SPILL``. A new
+#: crash-carried resolution is one row here.
+_RECORDS = {
+    # id-form input → text hashes (the corpus arm deletes id→hash rows)
+    "hashes": _Record(
+        "doomed_hashes", "hashes_spill", "text_hash", "{hashes_digest}"
+    ),
+    # hash-form purge of an ANN-bound base → vec ids (from corpus rows)
+    "ann_vecs": _Record(
+        "ann_vec_ids", "ann_vec_spill", "vec_id", "{hashes_digest}.annvecs"
+    ),
+    # curate_refresh → the doc ids it replaces (read back as doc_id —
+    # the caller renames to its id column)
+    "refresh_ids": _Record(
+        "refresh_doc_ids", "refresh_ids_spill", "doc_id", "refresh_ids"
+    ),
+    # hash-only graph purge → claim subjects (the items arm deletes
+    # hash→qid rows); valid only for the item-hash set it came from
+    "graph_qids": _Record(
+        "graph_subject_qids",
+        "graph_qids_spill",
+        "subject_qid",
+        "{graph_hash_digest}.qids",
+        "graph_hash_digest",
+    ),
+}
+
+
+def _record(
+    pending: dict, base_path: str, name: str, rel: DataFrame, n: int
+) -> bool:
+    """Record the distinct one-column relation ``rel`` of ``n`` values
+    (the caller's exact count — no job runs to size it) as the marker's
+    ``name`` resolution: sorted in the JSON up to
+    :data:`MARKER_HASHES_CAP`, else written to ``_PURGE_SPILL`` — before
+    the marker that references it, and ``rel`` must not read the spill
+    it overwrites. Returns True when recorded inline."""
+    rec = _RECORDS[name]
+    inline = n <= MARKER_HASHES_CAP
+    pending.pop(rec.spill_key if inline else rec.key, None)
+    if inline:
+        pending[rec.key] = sorted(r[0] for r in rel.collect())
+    else:
+        spill = os.path.join("_PURGE_SPILL", rec.spill.format(**pending))
+        rel.write.mode("overwrite").parquet(os.path.join(base_path, spill))
+        pending[rec.spill_key] = spill
+    return inline
+
+
+def _recorded(
+    spark: SparkSession, marker: dict, base_path: str, name: str, dtype
+) -> DataFrame | None:
+    """The ``name`` resolution ``marker`` carries as a one-column
+    relation (column from :data:`_RECORDS`; ``dtype`` types the inline
+    form, None infers it), or None when it carries none."""
+    rec = _RECORDS[name]
+    if marker.get(rec.key):
+        schema = [rec.column] if dtype is None else StructType(
+            [StructField(rec.column, dtype)]
+        )
+        return spark.createDataFrame([(v,) for v in marker[rec.key]], schema)
+    spill = marker.get(rec.spill_key)
+    if spill and sinks.has_parquet_data(os.path.join(base_path, spill)):
+        return spark.read.parquet(os.path.join(base_path, spill)).toDF(
+            rec.column
+        )
+    return None
 
 
 #: store-level ANN binding (r12 verdict Next #5): a sidecar at the
@@ -435,14 +515,10 @@ def bind_ann_store(
     ``ann_path`` values resolve against ``base_path``."""
     import json
 
-    os.makedirs(base_path, exist_ok=True)
-    p = os.path.join(base_path, ANN_BINDING)
-    tmp = p + ".tmp"
-    with open(tmp, "w", encoding="ascii") as f:
-        json.dump({"ann_path": ann_path, "key": key}, f)
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(tmp, p)
+    versioned.write_atomic(
+        os.path.join(base_path, ANN_BINDING),
+        json.dumps({"ann_path": ann_path, "key": key}),
+    )
 
 
 def ann_binding(base_path: str) -> dict | None:
@@ -540,8 +616,8 @@ def purge_documents(
     any two leaves the ``pending`` marker; replaying the purge WITH THE
     SAME DOOMED INPUT converges: the marker records the input's digest
     plus every resolution the crashed attempt derived from rows its own
-    arms then deleted (the id→hash map for id-form purges, the
-    hash→qid map for the graph arm), so the replay inherits them
+    arms then deleted (the rows of :data:`_RECORDS`, each capped in the
+    JSON or spilled), so the replay inherits them
     instead of resolving against stores that no longer hold the rows;
     every component delete is a swallowed no-op on already-deleted
     keys, and each is itself a pruned copy-on-write snapshot publish
@@ -621,7 +697,6 @@ def purge_documents(
     rows scrubbed across ``output_dirs``; ``history_expired`` counts
     expired snapshot/staging trees across all touched stores, 0 unless
     ``vacuum=True``)."""
-    from wcdimportbot_spark.operators import sinks, versioned
     from wcdimportbot_spark.operators.text_dedup import dedup_index_delete
 
     def _vacuum_stores(paths: list[str]) -> int:
@@ -764,14 +839,11 @@ def purge_documents(
         )
     if prior_pending and not prior_match and force:
         # force abandons the crashed purge's recorded state — including
-        # its spilled relations (resolved hashes, ANN vec ids, refresh
-        # doc ids), which would otherwise orphan
-        import shutil
-
-        for k in ("hashes_spill", "ann_vec_spill", "refresh_ids_spill"):
-            if prior_marker.get(k):
+        # its spilled relations, which would otherwise orphan
+        for rec in _RECORDS.values():
+            if prior_marker.get(rec.spill_key):
                 shutil.rmtree(
-                    os.path.join(base_path, prior_marker[k]),
+                    os.path.join(base_path, prior_marker[rec.spill_key]),
                     ignore_errors=True,
                 )
 
@@ -793,22 +865,13 @@ def purge_documents(
         # the crashed attempt resolved its hashes while the corpus rows
         # still existed; without this union an id-form replay after the
         # corpus arm committed resolves ZERO hashes and silently leaves
-        # the dedup index remembering forever. Sub-cap sets live in the
-        # marker JSON; over-cap sets live in the parquet SPILL relation
-        # the marker points at (r12 verdict Next #2 — bulk purges are
-        # crash-replayable from the spill alone, no caller list needed)
-        prior_hashes = None
-        if prior_match and prior_marker.get("doomed_hashes"):
-            prior_hashes = spark.createDataFrame(
-                [(h,) for h in prior_marker["doomed_hashes"]],
-                "text_hash string",
-            )
-        elif prior_match and prior_marker.get("hashes_spill"):
-            spill_p = os.path.join(base_path, prior_marker["hashes_spill"])
-            if sinks.has_parquet_data(spill_p):
-                prior_hashes = spark.read.parquet(spill_p).select(
-                    "text_hash"
-                )
+        # the dedup index remembering forever (r12 verdict Next #2 —
+        # bulk purges are crash-replayable from the spill alone)
+        prior_hashes = (
+            _recorded(spark, prior_marker, base_path, "hashes", StringType())
+            if prior_match
+            else None
+        )
         if prior_hashes is not None:
             hashes = hashes.union(prior_hashes).distinct()
         hashes = hashes.localCheckpoint(eager=False)
@@ -826,7 +889,7 @@ def purge_documents(
         and prior_match
         and n_doomed == 0
         and prior_marker.get("hashes_recorded") is False
-        and not prior_marker.get("hashes_spill")
+        and prior_hashes is None
     ):
         # LEGACY over-cap marker (pre-spill): the crashed attempt
         # recorded digests only, the corpus arm already committed, and
@@ -887,29 +950,15 @@ def purge_documents(
             )
         else:
             parts = []
-            if prior_match and prior_marker.get("ann_vec_ids"):
-                parts.append(
-                    spark.createDataFrame(
-                        [(v,) for v in prior_marker["ann_vec_ids"]],
-                        ["vec_id"],
-                    )
-                )
-            elif prior_match and prior_marker.get("ann_vec_spill"):
-                vspill = os.path.join(
-                    base_path, prior_marker["ann_vec_spill"]
-                )
-                if sinks.has_parquet_data(vspill):
-                    parts.append(
-                        spark.read.parquet(vspill).select("vec_id")
-                    )
-            corpus_path0 = _corpus_path(base_path)
-            if sinks.has_parquet_data(corpus_path0):
+            vec_type = None
+            if sinks.has_parquet_data(_corpus_path(base_path)):
                 corpus_rel = read_curated_corpus(spark, base_path)
                 if bkey not in corpus_rel.columns:
                     raise ValueError(
                         f"the ANN binding on {base_path} names key "
                         f"{bkey!r} but the corpus has no such column"
                     )
+                vec_type = corpus_rel.schema[bkey].dataType
                 matched = keys.probe(
                     corpus_rel.select(bkey, "text_hash"), hashes, "text_hash"
                 )
@@ -918,14 +967,22 @@ def purge_documents(
                         matched.select(F.col(bkey).alias("vec_id")), "vec_id"
                     )
                 )
-            if parts:
-                vec_union = parts[0]
-                for p in parts[1:]:
-                    vec_union = vec_union.union(p)
-                bound_vec_df = vec_union.distinct().localCheckpoint(
-                    eager=True
+            if prior_match:
+                prior_vecs = _recorded(
+                    spark, prior_marker, base_path, "ann_vecs", vec_type
                 )
-                if bound_vec_df.count() == 0:
+                if prior_vecs is not None:
+                    parts.append(prior_vecs)
+            if parts:
+                # the count runs the lazy checkpoint; the record below
+                # reuses it as its exact size
+                bound_vec_df = (
+                    reduce(DataFrame.union, parts)
+                    .distinct()
+                    .localCheckpoint(eager=False)
+                )
+                n_vecs = bound_vec_df.count()
+                if n_vecs == 0:
                     bound_vec_df = None
     # the pending marker is self-describing: it records WHICH arms this
     # purge spans, so the remediation that finds it after a crash knows
@@ -967,71 +1024,32 @@ def purge_documents(
     # re-derive its hashes after the corpus arm commits; for the hash
     # form it lets a caller that LOST its list (curate_refresh derives
     # it from corpus rows the purge itself deletes) replay from the
-    # marker alone. CAPPED in the JSON: a bulk purge of millions of
-    # hashes must not collect to the driver or bloat the marker — above
-    # the cap the set SPILLS to a parquet side relation next to the
-    # marker (distributed write, zero driver bytes) whose path + digest
-    # the marker records, so a crashed bulk purge replays from the
-    # spill alone (r12 verdict Next #2). The spill lands BEFORE the
-    # pending marker: a marker that references it can always read it.
-    spill_rel = None
-    if n_doomed <= MARKER_HASHES_CAP:
-        pending["doomed_hashes"] = sorted(
-            r["text_hash"] for r in hashes.collect()
-        )
-        pending["hashes_recorded"] = True
-    else:
-        spill_rel = os.path.join("_PURGE_SPILL", resolved_digest)
-        # hashes is eagerly checkpointed above, so overwriting a prior
-        # replay's spill at the same digest never reads what it replaces
-        hashes.write.mode("overwrite").parquet(
-            os.path.join(base_path, spill_rel)
-        )
-        pending["hashes_recorded"] = False
-        pending["hashes_spill"] = spill_rel
-    # binding-derived vec ids ride the same record-or-spill discipline:
-    # a hash-form purge's resolution comes from corpus rows its own
-    # corpus arm then deletes, so the marker (or spill) is the replay's
-    # only source. Id-form purges re-derive from their input — no
-    # record needed.
+    # marker alone. `hashes` is materialized above, so a spill never
+    # reads the prior spill it overwrites.
+    pending["hashes_recorded"] = _record(
+        pending, base_path, "hashes", hashes, n_doomed
+    )
+    # binding-derived vec ids: a hash-form purge resolves them from
+    # corpus rows its own corpus arm then deletes. Id-form purges
+    # re-derive them from their input — no record needed.
     if bound_vec_df is not None:
         pending["ann_from_binding"] = True
         if not id_form:
-            n_vecs = bound_vec_df.count()
-            if n_vecs <= MARKER_HASHES_CAP:
-                pending["ann_vec_ids"] = sorted(
-                    r["vec_id"] for r in bound_vec_df.collect()
-                )
-            else:
-                vec_spill = os.path.join(
-                    "_PURGE_SPILL", resolved_digest + ".annvecs"
-                )
-                bound_vec_df.write.mode("overwrite").parquet(
-                    os.path.join(base_path, vec_spill)
-                )
-                pending["ann_vec_spill"] = vec_spill
+            _record(pending, base_path, "ann_vecs", bound_vec_df, n_vecs)
     if prior_match:
         # inherit the crashed attempt's recorded resolutions INTO the
         # initial pending write — a replay that crashed between its own
         # pending write and the graph arm's re-record would otherwise
-        # lose the qid list permanently (the items rows are gone). The
-        # `not in pending` guard keeps a replay's OWN fresher records
-        # (already unions of prior + current) from being clobbered.
-        for k in (
-            "graph_hash_digest",
-            "graph_subject_qids",
-            "ann_vec_ids",
-            "ann_vec_spill",
-            "ann_from_binding",
-            # a crashed REFRESH purge replayed out-of-band (CLI hash
-            # form) must not lose the refresh's recorded doc ids — the
-            # retry refresh reads them from the marker to report
-            # `refreshed` truthfully
-            "refresh_doc_ids",
-            "refresh_ids_spill",
-        ):
-            if k in prior_marker and k not in pending:
-                pending[k] = prior_marker[k]
+        # lose the qids permanently (the items rows are gone), and a
+        # crashed REFRESH purge replayed in hash form (the CLI, or the
+        # next refresh's heal) keeps the doc ids the retry reports as
+        # `refreshed`. A resolution this replay re-recorded (already a
+        # union of prior + current) is not clobbered.
+        for rec in _RECORDS.values():
+            if rec.key not in pending and rec.spill_key not in pending:
+                for k in (rec.key, rec.spill_key, rec.digest):
+                    if k in prior_marker:
+                        pending[k] = prior_marker[k]
     _write_purge_marker(base_path, pending)
 
     # per-arm marker HEARTBEAT (r12 verdict Next #1): after every arm's
@@ -1192,31 +1210,39 @@ def purge_documents(
             match_g = gh == g_digest
             if not match_g and gh is not None and legacy_prior:
                 match_g = gh == _legacy_digest(doomed_hashes, "hash")
-            recorded = (
-                pending.get("graph_subject_qids") if match_g else None
-            )
-            q_list = []
+            parts = []
+            if match_g:
+                recorded = _recorded(
+                    spark, pending, base_path, "graph_qids", StringType()
+                )
+                if recorded is not None:
+                    parts.append(recorded)
             if sinks.has_parquet_data(gpaths["items"]):
                 items_rel = sinks.read_items(spark, gpaths["items"]).select(
                     "hash", F.col("qid").alias("subject_qid")
                 )
-                q_list = [
-                    r["subject_qid"]
-                    for r in keys.key_set(
+                parts.append(
+                    keys.key_set(
                         keys.probe(items_rel, ih, "hash"), "subject_qid"
-                    ).collect()
-                ]
-            q_list = sorted(set(q_list) | set(recorded or []))
-            if q_list:
-                qids = spark.createDataFrame(
-                    [(q,) for q in q_list], "subject_qid string"
+                    )
                 )
-                # update pending IN PLACE: the arm heartbeats rewrite
-                # the same dict, so a merged-copy write here would lose
-                # the qid resolution at the next heartbeat
-                pending["graph_hash_digest"] = g_digest
-                pending["graph_subject_qids"] = q_list
-                _write_purge_marker(base_path, pending)
+            if parts:
+                # materialized by the count, before any delete (and
+                # before the record overwrites a spill it may read)
+                q_rel = (
+                    reduce(DataFrame.union, parts)
+                    .distinct()
+                    .localCheckpoint(eager=False)
+                )
+                n_qids = q_rel.count()
+                if n_qids:
+                    qids = q_rel
+                    # update pending IN PLACE: the arm heartbeats
+                    # rewrite the same dict, so a merged-copy write here
+                    # would lose the qid resolution at the next heartbeat
+                    pending["graph_hash_digest"] = g_digest
+                    _record(pending, base_path, "graph_qids", qids, n_qids)
+                    _write_purge_marker(base_path, pending)
         # IMPORT-race repair (r13/r14): run the three deletes under the
         # shared import-race bracket — a straddle would otherwise leave
         # cache-present/items-absent, and the P12 probe then skips
@@ -1313,8 +1339,6 @@ def purge_documents(
     # Removing the whole _PURGE_SPILL dir also collects orphans left by
     # a crash between a prior commit and ITS cleanup — safe because the
     # pending marker serializes purges, so no other purge is in flight.
-    import shutil
-
     shutil.rmtree(
         os.path.join(base_path, "_PURGE_SPILL"), ignore_errors=True
     )
@@ -1356,8 +1380,6 @@ def purge_output_partitions(
 
     Returns ``{"rows_deleted", "partitions_rewritten",
     "partitions_removed"}``."""
-    from wcdimportbot_spark.operators import sinks
-
     if not sinks.has_parquet_data(out_path):
         return {
             "rows_deleted": 0,
@@ -1426,9 +1448,13 @@ def curate_refresh(
     (NOT add-batch — insert-if-absent would duplicate a re-encoded
     vector whose cluster moved beside its stale row); the streaming
     twin is ``ann_ingest_batch_fn(mode="upsert")``."""
-    from wcdimportbot_spark.operators import sinks
-
     spark = batch_docs.sparkSession
+    # the id type is the BATCH's property, not ours to assume: a
+    # string-keyed corpus (nothing forbids string doc ids — the graph
+    # stores key on string hashes) must union cleanly in the empty and
+    # heal branches, so both literal relations take the batch's id type
+    # instead of hardcoding `long`
+    id_type = batch_docs.schema[id_col].dataType
     # a PENDING marker means a purge (possibly this refresh's own, in a
     # crashed earlier run) died mid-window. Its stale set is NOT
     # re-derivable here — the crashed corpus arm already deleted the
@@ -1437,10 +1463,10 @@ def curate_refresh(
     # pending forever (blocking all purges) and the index keeps the old
     # fingerprints
     prior = purge_state(base_path)
+    healed_ids = None
     if prior.get("status") == "pending":
-        spill_rel = prior.get("hashes_spill")
-        spill_ok = spill_rel and sinks.has_parquet_data(
-            os.path.join(base_path, spill_rel)
+        healed_doomed = _recorded(
+            spark, prior, base_path, "hashes", StringType()
         )
         # binding-derived ANN arms are auto-replayable: the replay's
         # plain hash-form purge re-derives the arm from the binding and
@@ -1449,9 +1475,7 @@ def curate_refresh(
             prior.get("arms") == ["corpus", "index", "ann"]
             and prior.get("ann_from_binding")
         )
-        if not replayable_arms or not (
-            prior.get("doomed_hashes") or spill_ok
-        ):
+        if not replayable_arms or healed_doomed is None:
             # a crashed MULTI-ARM purge (explicit graph/ann/outputs
             # args) must be replayed by its owner with the full arm set
             # — an auto-replay here would flip the marker to committed
@@ -1462,67 +1486,30 @@ def curate_refresh(
                 f"pending on {base_path}; replay it with its original "
                 f"inputs before refreshing"
             )
-        # sub-cap hash sets live in the marker JSON; over-cap sets live
-        # in the spill relation the marker points at — both heal here
-        healed_doomed = (
-            spark.createDataFrame(
-                [(h,) for h in prior["doomed_hashes"]], "text_hash string"
-            )
-            if prior.get("doomed_hashes")
-            else spark.read.parquet(
-                os.path.join(base_path, spill_rel)
-            ).select("text_hash")
-        )
         # docs whose stale version the heal is about to purge: their
         # retry annotation must say refreshed=True even though the
         # stale computation below finds nothing (the corpus rows were
         # already gone before this call) — ANN-maintaining callers key
-        # their re-encode + ann_index_upsert on this flag. Over-cap
-        # refreshes recorded the id set in a SPILL relation instead of
-        # the marker JSON (same discipline as the hashes); materialize
-        # it NOW — the replay purge's commit removes _PURGE_SPILL, and
-        # a lazy plan would read a deleted path afterwards.
-        healed_ids = list(prior.get("refresh_doc_ids", []))
-        healed_ids_df = None
-        if not healed_ids and prior.get("refresh_ids_spill"):
-            rspill = os.path.join(base_path, prior["refresh_ids_spill"])
-            if sinks.has_parquet_data(rspill):
-                healed_ids_df = (
-                    spark.read.parquet(rspill)
-                    .select(id_col)
-                    .distinct()
-                    .localCheckpoint(eager=True)
-                )
+        # their re-encode + ann_index_upsert on this flag. Materialized
+        # NOW: the replay purge's commit removes _PURGE_SPILL, and a
+        # lazy plan would read a deleted path afterwards.
+        healed_ids = _recorded(spark, prior, base_path, "refresh_ids", id_type)
+        if healed_ids is not None:
+            healed_ids = healed_ids.toDF(id_col).localCheckpoint(eager=True)
+        # the heal replays the recorded hash set, so it matches the
+        # crashed marker and inherits its recorded refresh ids; the
+        # vacuum obligation carries over explicitly: a vacuum=True
+        # privacy purge healed WITHOUT its vacuum would commit with the
+        # doomed rows still readable in retained history
         purge_documents(
             spark,
             healed_doomed,
             base_path,
             bands=bands,
-            # the crashed purge's recorded obligations carry over: a
-            # vacuum=True privacy purge healed WITHOUT its vacuum would
-            # commit with the doomed rows still readable in retained
-            # history (review-confirmed), and the refresh doc ids are
-            # what lets the retry report `refreshed` truthfully below
             vacuum=bool(prior.get("vacuum")),
-            marker_extra={
-                k: prior[k]
-                for k in ("refresh_doc_ids", "refresh_ids_spill")
-                if k in prior
-            },
             protocol=protocol,
         )
-    else:
-        healed_ids = []
-        healed_ids_df = None
     batch = batch_docs.dropDuplicates([id_col])
-    # the id type is the BATCH's property, not ours to assume: a
-    # string-keyed corpus (nothing forbids string doc ids — the graph
-    # stores key on string hashes) must union cleanly in the empty and
-    # heal branches below, so both literal relations derive their
-    # schema from the batch instead of hardcoding `long`
-    from pyspark.sql.types import StringType, StructField, StructType
-
-    id_field = StructField(id_col, batch_docs.schema[id_col].dataType, True)
     new_hashes = batch.select(
         id_col, F.md5(F.col(text_col)).alias("_new_hash")
     )
@@ -1540,34 +1527,22 @@ def curate_refresh(
         stale = spark.createDataFrame(
             [],
             StructType(
-                [id_field, StructField("text_hash", StringType(), True)]
+                [
+                    StructField(id_col, id_type, True),
+                    StructField("text_hash", StringType(), True),
+                ]
             ),
         )
-    if stale.count():
+    refreshed_ids = stale.select(id_col).distinct()
+    n_stale_ids = refreshed_ids.count()
+    if n_stale_ids:
         # record WHICH docs this refresh is replacing: if this purge
         # crashes, the heal on the next refresh needs the ids to
         # report `refreshed` truthfully (the hash→id mapping dies
-        # with the corpus rows the purge deletes). Same cap-or-spill
-        # discipline as the marker's hash set (r13 verdict Next #1 —
-        # this was the one uncapped marker field): a bulk re-crawl
-        # refresh of millions of edited docs must not collect its id
-        # set onto the driver nor write a multi-hundred-MB marker.
-        # The spill lands BEFORE the pending marker references it; the
-        # purge's commit-time _PURGE_SPILL cleanup collects it.
-        stale_ids = stale.select(id_col).distinct()
-        n_stale_ids = stale_ids.count()
-        if n_stale_ids <= MARKER_HASHES_CAP:
-            extra = {
-                "refresh_doc_ids": sorted(
-                    r[id_col] for r in stale_ids.collect()
-                )
-            }
-        else:
-            rel = os.path.join("_PURGE_SPILL", "refresh_ids")
-            stale_ids.write.mode("overwrite").parquet(
-                os.path.join(base_path, rel)
-            )
-            extra = {"refresh_ids_spill": rel}
+        # with the corpus rows the purge deletes). The purge's
+        # commit-time _PURGE_SPILL cleanup collects a spill.
+        extra = {}
+        _record(extra, base_path, "refresh_ids", refreshed_ids, n_stale_ids)
         purge_documents(
             spark,
             stale.select("text_hash"),
@@ -1587,15 +1562,8 @@ def curate_refresh(
         shingle_n=shingle_n,
         protocol=protocol,
     )
-    refreshed_ids = stale.select(id_col).distinct()
-    if healed_ids:
-        refreshed_ids = refreshed_ids.union(
-            spark.createDataFrame(
-                [(i,) for i in healed_ids], StructType([id_field])
-            )
-        ).distinct()
-    if healed_ids_df is not None:
-        refreshed_ids = refreshed_ids.union(healed_ids_df).distinct()
+    if healed_ids is not None:
+        refreshed_ids = refreshed_ids.union(healed_ids).distinct()
     return ann.join(
         refreshed_ids.withColumn("_r", F.lit(True)),
         id_col,

@@ -69,17 +69,13 @@ _MANIFEST_STORES = ("items", "claims", "cache")
 
 
 def _write_manifest(store_root: str, payload: dict) -> None:
-    """Atomic write-temp + rename (the _CURRENT discipline)."""
     import json
 
-    os.makedirs(store_root, exist_ok=True)
-    p = os.path.join(store_root, MANIFEST_FILE)
-    tmp = p + ".tmp"
-    with open(tmp, "w", encoding="ascii") as f:
-        json.dump(payload, f)
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(tmp, p)
+    from wcdimportbot_spark.operators import versioned
+
+    versioned.write_atomic(
+        os.path.join(store_root, MANIFEST_FILE), json.dumps(payload)
+    )
 
 
 def _store_versions(paths: dict[str, str]) -> dict:

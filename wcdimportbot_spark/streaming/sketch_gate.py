@@ -16,10 +16,12 @@ batch-id ledger, unlike the dedup gate's survivor append
 (streaming/dedup_gate.py, where replay produces duplicate output rows
 the sink must absorb).
 
-Same zero-engine-state design as the other gates: the writer lock
-serializes read-union-publish against any concurrent writer, readers
-resolve immutable snapshots, and a nightly batch job can union its own
-sketches into the same store.
+Same zero-engine-state design as the other gates: every
+read-union-publish is one ``versioned.commit`` stage, serialized against
+any concurrent writer under the store's write protocol (writer lock or
+optimistic rebase, ``WCD_STORE_PROTOCOL``), readers resolve immutable
+snapshots, and a nightly batch job can union its own sketches into the
+same store.
 """
 
 from __future__ import annotations
@@ -35,38 +37,48 @@ def distinct_sketch_batch_fn(
     lg_k: int = 14,
 ):
     """Build the ``foreachBatch`` function: per micro-batch, sketch the
-    batch per group and fold it into the stored states (read current
-    snapshot -> ``hll_union_agg`` -> publish new snapshot, all under the
-    writer lock — the read-modify-write must be atomic against other
-    writers, exactly like the MERGE engine in operators/sinks.py)."""
+    batch per group and fold it into the stored states (read the base
+    snapshot -> ``hll_union_agg`` -> publish the new snapshot, one
+    :func:`_commit_union` — the read-modify-write must be atomic against
+    other writers, exactly like the MERGE engine in operators/sinks.py)."""
 
     def fn(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        spark = batch_df.sparkSession
         batch_sk = batch_df.groupBy(group).agg(
             F.hll_sketch_agg(key, F.lit(lg_k)).alias("sketch")
         )
-        from wcdimportbot_spark.operators import sinks, versioned
-
-        with versioned.writer_lock(store_path):
-            if sinks.has_parquet_data(store_path):
-                stored = sinks.read_snapshot(spark, store_path)
-                merged = (
-                    stored.unionByName(batch_sk)
-                    .groupBy(group)
-                    .agg(F.hll_union_agg("sketch").alias("sketch"))
-                )
-            else:
-                merged = batch_sk
-            # materialize before staging: the plan reads the snapshot
-            # the write is about to supersede
-            staged = merged.localCheckpoint(eager=True)
-            version, vdir = versioned.stage_new(store_path)
-            staged.coalesce(1).write.mode("overwrite").parquet(vdir)
-            versioned.publish(store_path, version)
+        _commit_union(store_path, batch_sk, [group])
 
     return fn
+
+
+def _commit_union(store_path: str, batch_sk: DataFrame, keys: list) -> None:
+    """Fold ``batch_sk`` into the stored sketch states keyed on ``keys``
+    through one :func:`~wcdimportbot_spark.operators.versioned.commit`."""
+    from wcdimportbot_spark.operators import sinks, versioned
+
+    def stage(base_dir: str, vdir: str):
+        merged = batch_sk
+        if versioned.tree_has_data(base_dir):
+            merged = (
+                sinks._read_tree(batch_sk.sparkSession, base_dir)
+                .unionByName(batch_sk)
+                .groupBy(*keys)
+                .agg(F.hll_union_agg("sketch").alias("sketch"))
+            )
+        _write_states(merged, vdir)
+        return None, True
+
+    versioned.commit(store_path, None, stage)
+
+
+def _write_states(states: DataFrame, vdir: str) -> None:
+    # materialize before writing: the plan may read the base snapshot,
+    # which an optimistic competitor's commit can prune mid-write
+    states.localCheckpoint(eager=True).coalesce(1).write.mode(
+        "overwrite"
+    ).parquet(vdir)
 
 
 def read_distinct_estimates(
@@ -106,27 +118,11 @@ def windowed_distinct_sketch_batch_fn(
     def fn(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        spark = batch_df.sparkSession
         batch_sk = batch_df.groupBy(
             F.window("ts", window).getField("start").alias("window_start"),
             F.col(group),
         ).agg(F.hll_sketch_agg(key, F.lit(lg_k)).alias("sketch"))
-        from wcdimportbot_spark.operators import sinks, versioned
-
-        with versioned.writer_lock(store_path):
-            if sinks.has_parquet_data(store_path):
-                stored = sinks.read_snapshot(spark, store_path)
-                merged = (
-                    stored.unionByName(batch_sk)
-                    .groupBy("window_start", group)
-                    .agg(F.hll_union_agg("sketch").alias("sketch"))
-                )
-            else:
-                merged = batch_sk
-            staged = merged.localCheckpoint(eager=True)
-            version, vdir = versioned.stage_new(store_path)
-            staged.coalesce(1).write.mode("overwrite").parquet(vdir)
-            versioned.publish(store_path, version)
+        _commit_union(store_path, batch_sk, ["window_start", group])
 
     return fn
 
@@ -173,25 +169,26 @@ def prune_windowed_sketches(
       with the folded row, and HLL union is a register max, so a
       straggler window re-folding later can never double-count.
 
-    The store stays O(retained windows × groups + groups) bytes. Runs
-    under the writer lock like every read-modify-write on this store;
-    publishes nothing when no window is old enough. Returns
-    ``{"pruned_windows": n}``."""
+    The store stays O(retained windows × groups + groups) bytes. One
+    :func:`~wcdimportbot_spark.operators.versioned.commit` stage like
+    every read-modify-write on this store; publishes nothing when no
+    window is old enough. Returns ``{"pruned_windows": n}``."""
     from wcdimportbot_spark.operators import sinks, versioned
 
-    with versioned.writer_lock(store_path):
-        if not sinks.has_parquet_data(store_path):
-            return {"pruned_windows": 0}
-        stored = sinks.read_snapshot(spark, store_path)
-        cutoff = F.to_timestamp(F.lit(older_than))
-        is_old = F.col("window_start").isNotNull() & (
-            F.col("window_start") < cutoff
-        )
+    cutoff = F.to_timestamp(F.lit(older_than))
+    is_old = F.col("window_start").isNotNull() & (
+        F.col("window_start") < cutoff
+    )
+
+    def stage(base_dir: str, vdir: str):
+        if not versioned.tree_has_data(base_dir):
+            return {"pruned_windows": 0}, False
+        stored = sinks._read_tree(spark, base_dir)
         # bounded by the partition-schema-sized key space, never events
         n_old = stored.filter(is_old).count()
         if not n_old:
-            return {"pruned_windows": 0}
-        folded = (
+            return {"pruned_windows": 0}, False
+        _write_states(
             stored.withColumn(
                 "window_start",
                 F.when(is_old, F.lit(None).cast("timestamp")).otherwise(
@@ -199,13 +196,12 @@ def prune_windowed_sketches(
                 ),
             )
             .groupBy("window_start", group)
-            .agg(F.hll_union_agg("sketch").alias("sketch"))
+            .agg(F.hll_union_agg("sketch").alias("sketch")),
+            vdir,
         )
-        staged = folded.localCheckpoint(eager=True)
-        version, vdir = versioned.stage_new(store_path)
-        staged.coalesce(1).write.mode("overwrite").parquet(vdir)
-        versioned.publish(store_path, version)
-        return {"pruned_windows": int(n_old)}
+        return {"pruned_windows": int(n_old)}, True
+
+    return versioned.commit(store_path, None, stage)
 
 
 def read_lifetime_distinct_estimates(
