@@ -5,7 +5,8 @@ concurrently, but their PUBLISHES must land in the declared crash-order
 These tests pin the three properties the overlap relies on:
 - publish ORDER is preserved under the overlap (bands before hashes on
   the index merge; hashes before bands on the index delete; corpus
-  before both index stores in curate_increment);
+  before both index stores in curate_increment; items → claims → cache
+  in the store import);
 - an upstream arm failure ABORTS every downstream publish (the staged
   work never becomes visible);
 - run_publish_ordered itself orders completions and re-raises the
@@ -202,3 +203,53 @@ def test_increment_index_never_publishes_when_corpus_fails_optimistic(
     test_increment_index_never_publishes_when_corpus_fails(
         spark, tmp_path, "optimistic"
     )
+
+
+def _import_pages(spark, page_id):
+    return spark.createDataFrame(
+        [
+            (
+                page_id,
+                f"Page {page_id}",
+                "en",
+                1000 + page_id,
+                f"{{{{cite web |url=https://site{page_id}.example.com/a "
+                f"|title=T{page_id} |last=Author |first=B. "
+                f"|access-date=2024-01-01}}}}",
+            )
+        ],
+        "page_id long, title string, language_code string, "
+        "latest_revision_id long, wikitext string",
+    )
+
+
+@pytest.mark.parametrize("protocol", ["lock", "optimistic"])
+def test_import_publishes_items_claims_cache(
+    spark, tmp_path, monkeypatch, protocol
+):
+    """The import's three merges publish items → claims → cache, and an
+    items-merge failure aborts the claims and cache publishes: no new
+    version of either, and the import manifest stays ``pending``."""
+    from wcdimportbot_spark.operators import sinks
+    from wcdimportbot_spark.plans import store_import as si
+
+    monkeypatch.setenv("WCD_STORE_PROTOCOL", protocol)
+    store = str(tmp_path / "graph")
+    paths = si.store_paths(store)
+    with _committed_stores(protocol) as stores:
+        si.import_pages_to_store(spark, _import_pages(spark, 1), paths)
+    assert stores == ["items", "claims", "cache"]
+
+    before = {k: versioned.current_version(paths[k]) for k in stores}
+
+    def exploding_merge(*a, **k):
+        raise RuntimeError("items publish failed")
+
+    with mock.patch.object(sinks, "merge_write_items", exploding_merge):
+        with _committed_stores(protocol) as stores:
+            with pytest.raises(RuntimeError, match="items publish failed"):
+                si.import_pages_to_store(spark, _import_pages(spark, 2), paths)
+    assert stores == []
+    assert {k: versioned.current_version(paths[k]) for k in before} == before
+    status = si.verify_import_consistency(store)["status"]
+    assert status == "in-flight-or-crashed"

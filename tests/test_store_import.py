@@ -1,5 +1,6 @@
-"""plans/store_import.import_pages_to_store: its (pages, new items) counts
-and the deferred materialization of its batch relations."""
+"""plans/store_import.import_pages_to_store: its (pages, new items) counts,
+the deferred materialization of its batch relations and the release of
+its persisted stages."""
 
 from __future__ import annotations
 
@@ -69,10 +70,11 @@ def _scanned_roots(df) -> list[str]:
 
 
 def test_import_batch_plans_read_no_graph_store(spark, tmp_path, monkeypatch):
-    """The import checkpoints its items and claims relations lazily and
-    merges them afterwards: that is sound only while their plans read
-    neither the items nor the claims store, which those merges publish.
-    (They do read the cache, through the page-level guard.)"""
+    """The import checks its batch against the cache once, in the page
+    checkpoint, and checkpoints its items and claims lazily from it. The
+    merges run afterwards: that is sound only while the items and claims
+    plans read none of the items, claims and cache stores, which those
+    merges publish."""
     from wcdimportbot_spark.plans import store_import as si
 
     paths = si.store_paths(str(tmp_path / "store"))
@@ -81,19 +83,42 @@ def test_import_batch_plans_read_no_graph_store(spark, tmp_path, monkeypatch):
     )
     cls = type(spark.range(1))
     real = cls.localCheckpoint
-    batch = []
+    made = []
 
     def spy(self, *a, **kw):
-        if sys._getframe(1).f_code.co_name == "import_pages_to_store":
-            batch.append(self)
+        # the checkpoints store_import itself builds (the merge engines
+        # build their own in operators/sinks.py)
+        if sys._getframe(1).f_code.co_filename == si.__file__:
+            made.append(self)
         return real(self, *a, **kw)
 
     monkeypatch.setattr(cls, "localCheckpoint", spy)
     si.import_pages_to_store(
         spark, _pages(spark, [(2, "https://one.example.com/b")]), paths
     )
-    assert len(batch) == 2  # items, claims
+    assert len(made) == 3, [df.columns for df in made]  # pages, items, claims
+    (page,) = [df for df in made if "wikitext" in df.columns]
+    batch = [df for df in made if df is not page]
+    assert any("instance_of" in df.columns for df in batch)
+    assert any("subject_qid" in df.columns for df in batch)
+    assert any(paths["cache"] in r for r in _scanned_roots(page))
     scanned = [r for df in batch for r in _scanned_roots(df)]
-    for store in ("items", "claims"):
+    for store in ("items", "claims", "cache"):
         assert not [r for r in scanned if paths[store] in r], scanned
-    assert any(paths["cache"] in r for r in scanned), scanned
+
+
+def test_import_releases_its_persisted_stages(spark, tmp_path):
+    """run_import persists its extraction and references stages; the
+    import unpersists both, so the session's cache manager holds nothing
+    after two imports."""
+    from wcdimportbot_spark.plans import store_import as si
+
+    spark.catalog.clearCache()
+    paths = si.store_paths(str(tmp_path / "store"))
+    si.import_pages_to_store(
+        spark, _pages(spark, [(1, "https://one.example.com/a")]), paths
+    )
+    si.import_pages_to_store(
+        spark, _pages(spark, [(2, "https://one.example.com/b")]), paths
+    )
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

@@ -127,6 +127,7 @@ def merge_write_cache(
     new_mappings: DataFrame,
     path: str,
     protocol: str | None = None,
+    publish_gate=None,
 ) -> int:
     """S7+S9 incremental MERGE: insert-if-absent by hash (existing mapping
     wins — conflict-as-success) via the shared bucket-MERGE engine in
@@ -142,6 +143,7 @@ def merge_write_cache(
         anti_key="hash",
         partitions=[sinks.BUCKET_COL],
         dedup_key="hash",
+        publish_gate=publish_gate,
         protocol=protocol,
     )
 

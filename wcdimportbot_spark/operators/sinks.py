@@ -501,13 +501,15 @@ def _maybe_materialize_batch(df: DataFrame) -> DataFrame:
     or a raw scan — the import path) skip it, their recompute being
     cheaper than an extra materialization.
 
-    The checkpoint is LAZY (r15): every engine's very next step is the
-    touched-partition collect over this relation, which materializes
-    the blocks — fusing the former separate eager-checkpoint job into
-    that collect. Callers MUST act on the result before any store
-    mutation (they all do: the collect is adjacent). Plan inspection
-    rides a private surface, so any failure degrades to the old
-    recompute behavior."""
+    The checkpoint is LAZY (r15), which does not defer all of its work:
+    under AQE, building it runs every shuffle-map stage of its plan at
+    once; only the final stage and the block storage wait for the
+    first action. Every engine's very next step is the touched-
+    partition collect over this relation, so that final stage runs
+    inside the collect instead of in a separate eager-checkpoint job.
+    Callers MUST act on the result before any store mutation (they all
+    do: the collect is adjacent). Plan inspection rides a private
+    surface, so any failure degrades to the old recompute behavior."""
     try:
         plan = df._jdf.queryExecution().analyzed().toString()
     except Exception:  # noqa: BLE001 - private-API drift → old behavior
@@ -649,6 +651,7 @@ def merge_write_items(
     path: str,
     protocol: str | None = None,
     allow_additive: bool = False,
+    publish_gate=None,
 ) -> None:
     """S9 incremental MERGE — insert-if-absent by hash; existing items keep
     their row (conflict-as-success). Delta form: MERGE INTO items USING new
@@ -665,6 +668,7 @@ def merge_write_items(
         partitions=["instance_of", BUCKET_COL],
         dedup_key="hash",
         allow_additive=allow_additive,
+        publish_gate=publish_gate,
         protocol=protocol,
     )
 
@@ -675,6 +679,7 @@ def merge_write_claims(
     path: str,
     protocol: str | None = None,
     allow_additive: bool = False,
+    publish_gate=None,
 ) -> None:
     """Claim-level conflict-as-success, bucket-incrementally: a subject
     already in the store keeps its existing claim rows verbatim (first
@@ -693,6 +698,7 @@ def merge_write_claims(
         partitions=["property", BUCKET_COL],
         dedup_key=None,
         allow_additive=allow_additive,
+        publish_gate=publish_gate,
         protocol=protocol,
     )
 

@@ -36,7 +36,8 @@ class ImportResult:
     claim-struct expressions), so single-output consumers (the hash
     statistics screen reads only ``references``) should not pay for graph
     emission they never trigger. Each property is a DataFrame plan; caching
-    keeps repeated access cheap and plan-identical."""
+    keeps repeated access cheap and plan-identical. ``persisted`` are the
+    stages ``run_import`` persisted; :meth:`release` unpersists them."""
 
     def __init__(
         self,
@@ -45,8 +46,10 @@ class ImportResult:
         schema_rejects: DataFrame,
         wikibase_title: str,
         retrieved_date: Column | None,
+        persisted: tuple[DataFrame, ...] = (),
     ):
         self.references = references
+        self._persisted = persisted
         self._pages = pages
         self._schema_rejects = schema_rejects
         self._wikibase_title = wikibase_title
@@ -85,6 +88,13 @@ class ImportResult:
     def rejects(self) -> DataFrame:
         return collect_rejects(self.references).unionByName(self._schema_rejects)
 
+    def release(self) -> None:
+        """Unpersist the persisted stages: the session's cache manager
+        keeps them until then, one pair per import. Call once every
+        output has been written or checkpointed."""
+        for df in self._persisted:
+            df.unpersist()
+
 
 def run_import(
     pages: DataFrame,
@@ -106,6 +116,7 @@ def run_import(
     # mapInPandas parallelism equals input partitioning: a small dump read
     # (one parquet file) would run the whole extraction on ONE core
     pages = fan_out(pages, "page_id")
+    persisted = []
     raw = extract_raw_templates(pages)
     if persist:
         # persist the PYTHON stage's output, not just the normalized
@@ -116,6 +127,7 @@ def run_import(
         # boundary twice (guide §4). Populated en route by whichever
         # downstream branch acts first; O(batch) like the refs persist.
         raw = raw.persist()
+        persisted.append(raw)
     raw = filter_supported_templates(raw)
     raw = fix_param_keys(raw)
     valid, schema_rejects = split_valid_and_rejects(raw)
@@ -126,6 +138,7 @@ def run_import(
     )
     if persist:
         refs = refs.persist()
+        persisted.append(refs)
     # graph emission (items/claims) and rejects are built lazily on first
     # access — see ImportResult
     return ImportResult(
@@ -134,4 +147,5 @@ def run_import(
         schema_rejects=schema_rejects,
         wikibase_title=wikibase_title,
         retrieved_date=retrieved_date,
+        persisted=tuple(persisted),
     )

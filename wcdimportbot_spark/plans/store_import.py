@@ -189,7 +189,6 @@ def import_pages_to_store(
     from wcdimportbot_spark.functions import keys
     from wcdimportbot_spark.functions.hashing import page_hash
     from wcdimportbot_spark.operators import cache as cache_ops
-    from wcdimportbot_spark.operators import sinks
     from wcdimportbot_spark.plans.pipeline import run_import
 
     cache = cache_ops.read_cache(spark, paths["cache"])
@@ -207,57 +206,107 @@ def import_pages_to_store(
     # the batch then anti-joins the broadcast matched keys (≤|batch|)
     stored = cache.select(F.col("hash").alias("_page_hash"))
     _seen = keys.key_set(keys.probe(stored, pages, "_page_hash"), "_page_hash")
-    pages = pages.join(
-        F.broadcast(_seen), "_page_hash", "left_anti"
-    ).drop("_page_hash")
-    result = run_import(pages)
-    # count BEFORE the writers overwrite the store paths this lazy plan
-    # still references (read-then-overwrite-then-reread trap)
+    # the batch is checked against the cache ONCE: fan-out, extraction,
+    # graph emission and the refs join all read these blocks instead of
+    # re-running the cache scan and the probe broadcast per action. The
+    # count materializes it BEFORE any writer overwrites the cache this
+    # plan references (read-then-overwrite-then-reread trap)
+    pages = (
+        pages.join(F.broadcast(_seen), "_page_hash", "left_anti")
+        .drop("_page_hash")
+        .localCheckpoint(eager=False)
+    )
     n_pages = pages.count()
-    # checkpoint the batch once: the merge writers overwrite store
-    # partitions their own inputs may lazily read. Lazy — each relation
-    # is materialized by its own merge's touched-bucket collect, which
-    # happens BEFORE that store (or any store the plan reads) publishes;
-    # both plans derive from run_import's persisted extraction, so the
-    # deferred run is a cached-block projection, not a re-extraction
-    new_items = result.items.localCheckpoint(eager=False)
-    new_claims = result.claims.localCheckpoint(eager=False)
+    result = run_import(pages)
+    try:
+        return n_pages, _write_outputs(spark, result, paths)
+    finally:
+        result.release()
+
+
+def _write_outputs(
+    spark: SparkSession, result, paths: dict[str, str]
+) -> int:
+    """Checkpoint ``result``'s items and claims, merge them and the cache
+    in publish order items → claims → cache under the purge-race bracket,
+    and append the rejects alongside. Returns the new items count."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from wcdimportbot_spark.operators import cache as cache_ops
+    from wcdimportbot_spark.operators import hooks, sinks, versioned
+
+    # checkpoint items and claims once: each merge evaluates its batch
+    # several times, and items feeds the cache merge too. Under AQE,
+    # building a lazy checkpoint already runs every shuffle stage of its
+    # plan; only the final stage and the block storage wait for the first
+    # action (each merge's touched-bucket collect). Driver planning is
+    # serial within one action, so the two builds run side by side. Both
+    # plans read only the page checkpoint and run_import's persisted
+    # stages, never a store. Outside the bracket: a repair re-run reuses
+    # them
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        f_items = pool.submit(
+            lambda: result.items.localCheckpoint(eager=False)
+        )
+        f_claims = pool.submit(
+            lambda: result.claims.localCheckpoint(eager=False)
+        )
+        new_items, new_claims = f_items.result(), f_claims.result()
     # two-phase marker: pending BEFORE the first publish (see manifest
     # docstring) — crash anywhere below leaves it for --verify-store
     store_root = os.path.dirname(paths["items"])
     begin_import_manifest(store_root, paths)
-    # purge race (see PURGE_EPOCH_FILE): re-runs insert nothing unless
-    # the purge actually removed this batch's rows
-    from wcdimportbot_spark.operators import hooks, versioned
 
-    def _merges() -> int:
-        sinks.merge_write_items(spark, new_items, paths["items"])
+    # the three merges evaluate their batches concurrently; their
+    # publishes land items → claims → cache (versioned.run_publish_ordered)
+    def _items(gate) -> None:
+        sinks.merge_write_items(
+            spark, new_items, paths["items"], publish_gate=gate
+        )
         hooks.point("import.items.merged")
-        sinks.merge_write_claims(spark, new_claims, paths["claims"])
+
+    def _claims(gate) -> None:
+        sinks.merge_write_claims(
+            spark, new_claims, paths["claims"], publish_gate=gate
+        )
         hooks.point("import.claims.merged")
+
+    def _cache(gate) -> int:
         return cache_ops.merge_write_cache(
-            spark, new_items.select("hash", "qid"), paths["cache"]
+            spark,
+            new_items.select("hash", "qid"),
+            paths["cache"],
+            publish_gate=gate,
         )
 
-    # new items = the mappings the cache merge inserted; a repair re-run
-    # re-inserts only what a racing purge removed, so count the first
-    n_new = versioned.epoch_bracket(
-        store_root,
-        IMPORT_EPOCH_FILE,
-        lambda: versioned.epoch_read(store_root, PURGE_EPOCH_FILE),
-        1.0,
-        _merges,
-        "purge_documents",
-    )[0]
-    # rejects stays OUTSIDE the bracket: it is the append-only
-    # diagnostic side-output (purge boundary b2) — a repair re-run must
-    # not append its rows twice
-    sinks.write_rejects(result.rejects, paths["rejects"])
+    # rejects stays OUTSIDE the bracket: it is the append-only diagnostic
+    # side-output (purge boundary b2) — a repair re-run must not append
+    # its rows twice. It reads only run_import's persisted stages, so it
+    # runs alongside the merges
+    with ThreadPoolExecutor(max_workers=1) as pool:
+        f_rejects = pool.submit(
+            lambda: sinks.write_rejects(result.rejects, paths["rejects"])
+        )
+        # purge race (see PURGE_EPOCH_FILE): re-runs insert nothing
+        # unless the purge actually removed this batch's rows. New items
+        # = the mappings the cache merge inserted; a repair re-run
+        # re-inserts only what a racing purge removed, so count the first
+        n_new = versioned.epoch_bracket(
+            store_root,
+            IMPORT_EPOCH_FILE,
+            lambda: versioned.epoch_read(store_root, PURGE_EPOCH_FILE),
+            1.0,
+            lambda: versioned.run_publish_ordered(
+                [_items, _claims, _cache]
+            )[2],
+            "purge_documents",
+        )[0]
+    f_rejects.result()
     # commit marker: all three stores published (pairs with the pending
     # marker written before the first publish — a crash in between is
     # detectable and replay-safe; merges are idempotent)
     commit_import_manifest(store_root, paths)
-    return n_pages, n_new
+    return n_new
 
 
 def store_import_batch_fn(store: str):
